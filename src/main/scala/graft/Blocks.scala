@@ -46,6 +46,17 @@ object Blocks {
     df
   }
 
+  /** Unpersist the checkpoint RDDs backing `df` — the owner's release of
+    * a transient checkpoint whose last consumer has run. Protected memo
+    * checkpoints are left alone. */
+  def release[T](df: Dataset[T]): Unit =
+    df.queryExecution.analyzed.foreach {
+      case l: org.apache.spark.sql.execution.LogicalRDD
+          if !protectedIds.contains(l.rdd.id) =>
+        l.rdd.unpersist(blocking = false)
+      case _ => ()
+    }
+
   /** Unpersist every persistent RDD except protected memo checkpoints.
     * Returns the number of RDDs dropped.
     *

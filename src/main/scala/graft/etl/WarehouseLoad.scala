@@ -6,8 +6,11 @@ import org.apache.spark.sql.expressions.Window
 import graft.functions.Scalars.surrogateKey
 
 /** Warehouse load (SURVEY.md §2.8): the reference's flagship
-  * change-detecting star-schema load, re-expressed as ~5 set-level jobs
-  * instead of up-to-3-point-SELECTs-per-record (dags/bigquery.py:223-333).
+  * change-detecting star-schema load, re-expressed as one set-level
+  * probe per batch instead of up-to-3-point-SELECTs-per-record
+  * (dags/bigquery.py:223-333). The probe joins the batch to
+  * competitors, products, the current feature version and the current
+  * price, is materialized once, and feeds all four table deltas.
   *
   * Faithful semantics preserved:
   * - new-competitor fast path loads the whole batch with no probes
@@ -30,14 +33,22 @@ import graft.functions.Scalars.surrogateKey
   *
   * Scale: competitors is a tiny dim → broadcast joins; features/prices
   * current-version extraction is one ranking window partitioned by the
-  * probe key (shuffle on key, no driver loops); every stage is a
-  * DataFrame the caller appends to parquet tables.
+  * probe key (shuffle on key, no driver loops), run once per batch;
+  * every delta is a DataFrame over the materialized probe that the
+  * caller appends to its table and then releases.
   */
 object WarehouseLoad {
 
-  /** Rows staged for append, one DataFrame per warehouse table. */
+  /** Rows staged for append, one DataFrame per warehouse table, each
+    * a filter and projection of `probe`, the batch's materialized
+    * change-detection probe. */
   case class Delta(competitors: DataFrame, products: DataFrame,
-                   features: DataFrame, prices: DataFrame)
+                   features: DataFrame, prices: DataFrame, probe: DataFrame) {
+    /** Drop the probe's checkpoint. A local checkpoint has no lineage,
+      * so no delta can be read afterwards: call this once the last one
+      * has been committed. */
+    def release(): Unit = graft.Blocks.release(probe)
+  }
 
   /** Current snapshot of the warehouse (empty DFs for a fresh one). */
   case class State(competitors: DataFrame, products: DataFrame,
@@ -54,7 +65,15 @@ object WarehouseLoad {
 
   /** Stage the full product/feature/price load for one cleaned-products
     * batch (one competitor, schema Schemas.cleanProduct with DateType
-    * scraped_at). Pure function: returns the Delta to append.
+    * scraped_at) and return the Delta to append.
+    *
+    * The batch is joined ONCE to competitors, products, the current
+    * feature version and the current price; every change decision is a
+    * boolean column of that probe, and the probe is materialized with
+    * `localCheckpoint` before this returns. The four deltas are filters
+    * and projections over it, so committing them re-runs none of the
+    * joins or windows. The caller owns the checkpoint: call
+    * [[Delta.release]] after the last delta has been consumed.
     *
     * `orderDesc` picks the "current version" probe direction:
     * false = faithful reference ASC / oldest (dags/bigquery.py:295,315 —
@@ -63,24 +82,15 @@ object WarehouseLoad {
     * concurrent loads with different directions can't race. */
   def stageProducts(state: State, batch: DataFrame,
                     orderDesc: Boolean = false): Delta = {
-    val b = batch
-      .withColumn("competitor_uuid_new", surrogateKey(lit("c"), col("competitor_name")))
-
     // J3 dim lookup (broadcast — competitors is tiny)
-    val withDim = b.join(
-      broadcast(state.competitors.select(col("competitor_name"),
+    val resolved = batch
+      .join(broadcast(state.competitors.select(col("competitor_name"),
         col("competitor_uuid").as("competitor_uuid_old"))),
-      Seq("competitor_name"), "left")
-    val resolved = withDim
-      .withColumn("competitor_uuid",
-        coalesce(col("competitor_uuid_old"), col("competitor_uuid_new")))
+        Seq("competitor_name"), "left")
       .withColumn("is_new_competitor", col("competitor_uuid_old").isNull)
-      .drop("competitor_uuid_old", "competitor_uuid_new")
-
-    val newCompetitors = resolved.filter(col("is_new_competitor"))
-      .groupBy("competitor_name", "competitor_uuid")
-      .agg(min(col("scraped_at")).as("created_at"))
-      .select("competitor_uuid", "competitor_name", "created_at")
+      .withColumn("competitor_uuid", coalesce(col("competitor_uuid_old"),
+        surrogateKey(lit("c"), col("competitor_name"))))
+      .drop("competitor_uuid_old")
 
     // J4 product existence probe (left join on (competitor_uuid, product_name));
     // new competitor ⇒ fast path (no probe can match)
@@ -97,23 +107,19 @@ object WarehouseLoad {
           surrogateKey(lit("pr"), col("competitor_uuid"), col("product_name"))))
       .withColumn("feature_uuid", surrogateKey(lit("f"), col("product_uuid"), scrapedStr))
 
-    val isNewProduct = col("existing_product_uuid").isNull
-
-    val newProducts = staged.filter(isNewProduct).select(
-      col("product_uuid"), col("product_name"), col("product_category"),
-      col("competitor_name"), col("competitor_uuid"), col("feature_uuid"),
-      col("scraped_at"))
-
-    // J5 current feature version per product (faithful ASC top-1)
+    // J5 current feature version per product and current price per
+    // stored feature_uuid (faithful ASC top-1). Both are unique on their
+    // key, so the left joins keep exactly the batch's rows.
     val curFeature = top1(state.features, "product_uuid", orderDesc).select(
       col("product_uuid"),
       col("product_name").as("cur_product_name"), col("product_url").as("cur_product_url"),
       col("data").as("cur_data"), col("minutes").as("cur_minutes"),
       col("sms").as("cur_sms"), col("upload_speed").as("cur_upload"),
       col("download_speed").as("cur_download"))
+    val curPrice = top1(state.prices, "feature_uuid", orderDesc)
+      .select(col("feature_uuid").as("stored_feature_uuid"), col("price").as("cur_price"))
 
-    val existing = staged.filter(!isNewProduct)
-      .join(curFeature, Seq("product_uuid"), "left")
+    val isNew = col("existing_product_uuid").isNull
     val featureChanged = col("cur_product_name").isNull || differs(Seq(
       col("cur_product_name") -> col("product_name"),
       col("cur_product_url") -> col("product_url"),
@@ -122,38 +128,48 @@ object WarehouseLoad {
       col("cur_sms") -> col("sms"),
       col("cur_upload") -> col("upload_speed"),
       col("cur_download") -> col("download_speed")))
-    val changedFeatures = existing.filter(featureChanged)
+    val priceChanged = col("cur_price").isNull || !(col("cur_price") <=> col("price"))
+    val probe = staged
+      .join(curFeature, Seq("product_uuid"), "left")
+      .join(curPrice, Seq("stored_feature_uuid"), "left")
+      .select(staged.columns.toIndexedSeq.map(col) ++ Seq(
+        isNew.as("is_new_product"),
+        (!isNew && featureChanged).as("feature_changed"),
+        (!isNew && priceChanged).as("price_changed")): _*)
+      .localCheckpoint()
 
-    val featureCols = (df: DataFrame) => df.select(
-      col("feature_uuid"), col("product_uuid"), col("product_name"),
-      col("product_url"), col("scraped_at"), col("data"), col("minutes"),
-      col("sms"), col("upload_speed"), col("download_speed"))
-    val newFeatures = featureCols(staged.filter(isNewProduct))
-      .unionByName(featureCols(changedFeatures))
+    val newCompetitors = probe.filter(col("is_new_competitor"))
+      .groupBy("competitor_name", "competitor_uuid")
+      .agg(min(col("scraped_at")).as("created_at"))
+      .select("competitor_uuid", "competitor_name", "created_at")
+
+    val newProducts = probe.filter(col("is_new_product")).select(
+      col("product_uuid"), col("product_name"), col("product_category"),
+      col("competitor_name"), col("competitor_uuid"), col("feature_uuid"),
+      col("scraped_at"))
+
+    val newFeatures = probe.filter(col("is_new_product") || col("feature_changed"))
+      .select(col("feature_uuid"), col("product_uuid"), col("product_name"),
+        col("product_url"), col("scraped_at"), col("data"), col("minutes"),
+        col("sms"), col("upload_speed"), col("download_speed"))
 
     // prices: new products bind to the fresh feature_uuid; existing
     // products bind to the product's STORED feature_uuid (the
-    // price_data["feature_uuid"] rebind, dags/bigquery.py:311-312)
-    val priceOf = (df: DataFrame, fk: Column) => df.select(
-      surrogateKey(lit("pc"), fk, scrapedStr).as("price_uuid"),
-      fk.as("feature_uuid"), col("price"), col("scraped_at"))
-
-    val newProductPrices = priceOf(staged.filter(isNewProduct), col("feature_uuid"))
-    // feature-change branch price row (aliased to stored feature_uuid)
-    val featureChangePrices = priceOf(changedFeatures, col("stored_feature_uuid"))
-
-    // J5 current price per stored feature_uuid + compare on price only
-    val curPrice = top1(state.prices, "feature_uuid", orderDesc)
-      .select(col("feature_uuid").as("stored_feature_uuid"), col("price").as("cur_price"))
-    val priceProbe = existing.join(curPrice, Seq("stored_feature_uuid"), "left")
-    val priceChanged = col("cur_price").isNull || !(col("cur_price") <=> col("price"))
-    val changedPrices = priceOf(priceProbe.filter(priceChanged), col("stored_feature_uuid"))
+    // price_data["feature_uuid"] rebind, dags/bigquery.py:311-312). A
+    // feature change stages a price row whether or not the price moved,
+    // so a feature AND price change stages two.
+    val priceOf = (flag: String, fk: String) => probe.filter(col(flag)).select(
+      surrogateKey(lit("pc"), col(fk), scrapedStr).as("price_uuid"),
+      col(fk).as("feature_uuid"), col("price"), col("scraped_at"))
 
     Delta(
       competitors = newCompetitors,
       products = newProducts,
       features = newFeatures,
-      prices = newProductPrices.unionByName(featureChangePrices).unionByName(changedPrices))
+      prices = priceOf("is_new_product", "feature_uuid")
+        .unionByName(priceOf("feature_changed", "stored_feature_uuid"))
+        .unionByName(priceOf("price_changed", "stored_feature_uuid")),
+      probe = probe)
   }
 
   /** Current-state view over the versioned warehouse: one row per

@@ -203,8 +203,8 @@ object TextOps {
     // ≈ |V|²/2^61 per permutation — negligible below ~10^8 tokens but
     // not zero; [[minhashSigsMemo]] therefore verifies the vocab is
     // prefix-collision-free once per (session, dir) and falls back to
-    // [[minhashSigsExactFromTokens]] when it is not (or when the vocab
-    // is too large for the check to pass cheaply).
+    // [[minhashSigsExactFromTokens]] when it is not. There is no vocab
+    // size cutoff: the check runs at every size.
     val vocabP = vocab.select(col("token") +:
       (0 until 8).map(i => minhashPrefix(i).as(s"p$i")): _*)
     val hashed = t.join(broadcast(vocabP), "token")

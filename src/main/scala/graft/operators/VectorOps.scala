@@ -1555,7 +1555,11 @@ object VectorOps {
       // centroid / BPE-argmax bounded-fitter-state precedent; Scala /
       // and SQL `div` both truncate toward zero, so the integer
       // lockstep with the unrolled DuckDB oracle is unchanged).
-      val entries = cov.collect()
+      // A covariance entry is NULL when one of its two dims is absent
+      // from every embedding (vectors shorter than 8). Such a dim has
+      // no entry at all, so it drops out of the iteration and the
+      // result, as a NULL term drops out of a SQL SUM.
+      val entries = cov.filter(col("cov_milli2").isNotNull).collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
       val m = (entries ++ entries.filter(e => e._1 != e._2)
         .map(e => (e._2, e._1, e._3))).toSeq

@@ -668,7 +668,13 @@ object StreamingJobs {
     * marker-file-after-four-appends protocol, whose crash window
     * between the appends and the marker could re-stage a feature/price
     * version on replay. A fully-replayed batch costs four tag lookups
-    * and plans no Spark job at all. */
+    * and plans no Spark job at all.
+    *
+    * Staging materializes one change-detection probe per batch (see
+    * `WarehouseLoad.stageProducts`) and the four commits read it; this
+    * method owns that checkpoint and releases it after the last commit,
+    * in a `finally` so a failed commit releases it too. A long session
+    * or stream therefore holds no checkpoint per loaded batch. */
   def upsertOnce(batch: DataFrame, markerKey: String, warehouseDir: String): Unit = {
     val spark = batch.sparkSession
     val tables = Seq("competitors", "products", "features", "product_prices")
@@ -676,10 +682,12 @@ object StreamingJobs {
     if (!tables.values.forall(_.tagCommitted(markerKey))) {
       val state = loadState(spark, warehouseDir)
       val delta = WarehouseLoad.stageProducts(state, batch)
-      tables("competitors").commitOnce(markerKey, delta.competitors)
-      tables("products").commitOnce(markerKey, delta.products)
-      tables("features").commitOnce(markerKey, delta.features)
-      tables("product_prices").commitOnce(markerKey, delta.prices)
+      try {
+        tables("competitors").commitOnce(markerKey, delta.competitors)
+        tables("products").commitOnce(markerKey, delta.products)
+        tables("features").commitOnce(markerKey, delta.features)
+        tables("product_prices").commitOnce(markerKey, delta.prices)
+      } finally delta.release()
     }
   }
 

@@ -125,6 +125,24 @@ class DegenerateInputSpec extends SparkTestBase {
       "Rayleigh quotient with zero denominator must be NULL, not a crash")
   }
 
+  test("q_pca_power: vectors shorter than 8 dims skip the NULL covariance entries") {
+    val d = java.nio.file.Files.createTempDirectory("graft_degen_short").toString
+    val embSchema = StructType(Seq(
+      StructField("vec_id", LongType),
+      StructField("embedding", ArrayType(FloatType)),
+      StructField("label", IntegerType)))
+    val embs = Seq(Seq(1f, 0f, 0f), Seq(0f, 1f, 0f), Seq(0f, 0f, 1f), Seq(1f, 1f, 1f))
+      .zipWithIndex.map { case (v, i) => Row(i.toLong, v, i % 2) }
+    spark.createDataFrame(spark.sparkContext.parallelize(embs, 1), embSchema)
+      .write.parquet(s"$d/embeddings.parquet")
+    // dims 3..7 exist in no vector: their covariance entries are NULL
+    assert(SparkEntry.queries("q_embed_cov")(spark, d)
+      .filter("cov_milli2 is null").count() > 0)
+    val rows = SparkEntry.queries("q_pca_power")(spark, d).collect()
+    assert(rows.map(_.getAs[Long]("dim")).toSeq == Seq(0L, 1L, 2L))
+    assert(rows.forall(r => !r.isNullAt(r.fieldIndex("lambda_milli2"))))
+  }
+
   test("q_embed_drift: constant vectors yield zero variance and zero shift") {
     val rows = SparkEntry.queries("q_embed_drift")(spark, dir).collect()
     assert(rows.length == 8)

@@ -1,6 +1,8 @@
 package graft
 
+import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.util.QueryExecutionListener
 import graft.etl.Pipeline
 import java.nio.file.Files
 
@@ -65,23 +67,26 @@ class PipelineSpec extends SparkTestBase {
       "retried load must not append duplicate versions")
   }
 
+  /** One cleaned single-product batch for `day`, written under `raw`. */
+  private def cleanedBatch(raw: String, price: Double, day: String) = {
+    val f = java.nio.file.Paths.get(raw, s"drop_$day.ndjson")
+    Files.writeString(f,
+      s"""{"product_name": "mobile_a", "competitor_name": "mobileviking",
+         | "product_category": "mobile_prepaid", "product_url": "https://mv/a",
+         | "price": $price, "scraped_at": "$day", "data": 15.0, "minutes": -1.0,
+         | "sms": -1, "upload_speed": "20mbps", "download_speed": "1gbps"}"""
+        .stripMargin.replaceAll("\n", ""))
+    graft.etl.CleanJob.cleanProducts(
+        spark.read.schema(graft.schema.Schemas.rawProduct).json(f.toString))
+      .withColumn("scraped_at", to_date(col("scraped_at")))
+  }
+
   test("a load crashing mid-write leaves previous versions readable; the retry completes exactly once") {
     import graft.streaming.StreamingJobs
     import graft.sources.SnapshotTable
     val raw = Files.createTempDirectory("graft_crash_raw").toFile.getAbsolutePath
     val wh = Files.createTempDirectory("graft_crash_wh").toFile.getAbsolutePath
-    def cleanedBatch(price: Double, day: String) = {
-      val f = java.nio.file.Paths.get(raw, s"drop_$day.ndjson")
-      Files.writeString(f,
-        s"""{"product_name": "mobile_a", "competitor_name": "mobileviking",
-           | "product_category": "mobile_prepaid", "product_url": "https://mv/a",
-           | "price": $price, "scraped_at": "$day", "data": 15.0, "minutes": -1.0,
-           | "sms": -1, "upload_speed": "20mbps", "download_speed": "1gbps"}"""
-          .stripMargin.replaceAll("\n", ""))
-      graft.etl.CleanJob.cleanProducts(
-          spark.read.schema(graft.schema.Schemas.rawProduct).json(f.toString))
-        .withColumn("scraped_at", to_date(col("scraped_at")))
-    }
+    def cleanedBatch(price: Double, day: String) = this.cleanedBatch(raw, price, day)
     StreamingJobs.upsertOnce(cleanedBatch(15.0, "2023-10-05"), "k1", wh)
     val pricesTable = SnapshotTable(s"$wh/product_prices")
     val vPinned = pricesTable.currentVersion()
@@ -110,5 +115,78 @@ class PipelineSpec extends SparkTestBase {
     StreamingJobs.upsertOnce(b2, "k2", wh)
     assert(pricesTable.currentVersion() === vAfter)
     assert(StreamingJobs.loadState(spark, wh).prices.count() === 2)
+  }
+
+  /** Spark jobs `body` submits, counted by a listener scoped to a job
+    * group of its own (threads the body starts inherit the group). */
+  private def jobsOf(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    val group = s"jobs_of_${java.util.UUID.randomUUID()}"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group))
+          jobs.incrementAndGet()
+    }
+    sc.addSparkListener(listener)
+    sc.setJobGroup(group, "job count")
+    try body
+    finally {
+      sc.clearJobGroup()
+      org.apache.spark.graft.BusDrain(sc)
+      sc.removeSparkListener(listener)
+    }
+    jobs.get
+  }
+
+  test("an SCD load stages its batch once: bounded jobs per load, none for a replay") {
+    import graft.streaming.StreamingJobs
+    val raw = Files.createTempDirectory("graft_jobs_raw").toFile.getAbsolutePath
+    val wh = Files.createTempDirectory("graft_jobs_wh").toFile.getAbsolutePath
+    StreamingJobs.upsertOnce(cleanedBatch(raw, 15.0, "2023-10-05"), "k1", wh)
+    val b2 = cleanedBatch(raw, 25.0, "2023-10-06")
+    // A price change onto an existing warehouse ran 22 jobs while each
+    // of the four commits re-ran the staging joins and windows; with one
+    // materialized probe it runs 12.
+    val load = jobsOf(StreamingJobs.upsertOnce(b2, "k2", wh))
+    assert(load <= 12, s"price-change load ran $load jobs")
+    assert(StreamingJobs.loadState(spark, wh).prices.count() === 2)
+    // a fully replayed batch is four tag lookups and no Spark job
+    assert(jobsOf(StreamingJobs.upsertOnce(b2, "k2", wh)) === 0)
+  }
+
+  test("upsertOnce releases its staging checkpoint, also when a commit throws") {
+    import graft.streaming.StreamingJobs
+    val raw = Files.createTempDirectory("graft_ck_raw").toFile.getAbsolutePath
+    val wh = Files.createTempDirectory("graft_ck_wh").toFile.getAbsolutePath
+    // Spark tracks persistent RDDs weakly, so an unreleased checkpoint
+    // would vanish from the count at the next GC. Holding every executed
+    // plan keeps such a checkpoint reachable, and counted. RDDs of
+    // earlier suites may still be collected meanwhile, so the check is
+    // that no RDD persisted here is left, not a bare size compare.
+    val held = new java.util.concurrent.ConcurrentLinkedQueue[QueryExecution]()
+    val holder = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit = held.add(qe)
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = held.add(qe)
+    }
+    spark.listenerManager.register(holder)
+    try {
+      val before = spark.sparkContext.getPersistentRDDs.keySet
+      def persistent = (spark.sparkContext.getPersistentRDDs.keySet -- before).size
+      Seq(15.0 -> "2023-10-05", 17.0 -> "2023-10-06", 19.0 -> "2023-10-07")
+        .foreach { case (price, day) =>
+          StreamingJobs.upsertOnce(cleanedBatch(raw, price, day), day, wh)
+        }
+      assert(StreamingJobs.loadState(spark, wh).prices.count() === 3)
+      assert(persistent === 0, "three loads left staging checkpoints behind")
+
+      // the last of the four commits refuses its batch
+      graft.sources.SnapshotTable(s"$wh/product_prices")
+        .addCheckConstraint(spark, "price_cap", "price < 20")
+      val e = intercept[Exception](
+        StreamingJobs.upsertOnce(cleanedBatch(raw, 25.0, "2023-10-08"), "2023-10-08", wh))
+      assert(e.getMessage.contains("price_cap"), e.getMessage)
+      assert(persistent === 0, "a failed commit left the staging checkpoint behind")
+    } finally spark.listenerManager.unregister(holder)
   }
 }

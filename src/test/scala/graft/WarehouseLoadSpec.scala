@@ -27,8 +27,9 @@ class WarehouseLoadSpec extends SparkTestBase {
   /** One cleaned product record (Schemas.cleanProduct with DateType scraped_at). */
   private def productRow(name: String, price: Double, day: String,
                          data: Double = 15.0, minutes: Any = -1.0,
-                         sms: Any = -1L, up: Any = 20.0, down: Any = 1000.0): Row =
-    Row(name, "mobileviking", "mobile_prepaid", s"https://x/$name", price,
+                         sms: Any = -1L, up: Any = 20.0, down: Any = 1000.0,
+                         competitor: String = "mobileviking"): Row =
+    Row(name, competitor, "mobile_prepaid", s"https://x/$name", price,
       day, data, minutes, sms, up, down)
 
   private def batch(rows: Row*): DataFrame = {
@@ -175,5 +176,112 @@ class WarehouseLoadSpec extends SparkTestBase {
     assert(WarehouseLoad.stageProducts(s2, b3, orderDesc = true)
       .features.count() === 0)
     assert(WarehouseLoad.stageProducts(s2, b3).features.count() === 1)
+  }
+
+  /** sha2-256 hex of the `|`-joined parts: Scalars.surrogateKey, in Scala. */
+  private def sha(parts: String*): String =
+    java.security.MessageDigest.getInstance("SHA-256")
+      .digest(parts.mkString("|").getBytes("UTF-8")).map("%02x".format(_)).mkString
+
+  /** Rows as sorted value lists: a multiset compare that shows the rows. */
+  private def shown(rows: Seq[Row]): Seq[String] =
+    rows.map(_.toSeq.mkString("(", ", ", ")")).sorted
+
+  test("one probe stages every branch's exact rows, oldest- and newest-version") {
+    val mv = "mobileviking"
+    val sc = "scarlet"
+    val (d1, d2, d3) = ("2023-10-01", "2023-10-02", "2023-10-03")
+    def pu(n: String, c: String = mv) = sha("pr", sha("c", c), n)
+    def fu(n: String, day: String, c: String = mv) = sha("f", pu(n, c), day)
+    def stored(n: String) = fu(n, d1) // every existing product's feature_uuid
+    def featureRow(n: String, day: String, data: Double = 15.0,
+                   minutes: Any = -1.0, up: Any = 20.0) =
+      Row(fu(n, day), pu(n), n, s"https://x/$n", Date.valueOf(day),
+        data, minutes, -1L, up, 1000.0)
+    def priceRow(n: String, day: String, price: Double) =
+      Row(sha("pc", stored(n), day), stored(n), price, Date.valueOf(day))
+
+    val existing = Seq("same", "price_only", "feat_only", "feat_price",
+      "nulls", "null_gain", "flip", "sameday")
+    val history = State(
+      competitors = df(Schemas.competitors, Row(sha("c", mv), mv, Date.valueOf(d1))),
+      products = df(Schemas.products, existing.map(n => Row(pu(n), n,
+        "mobile_prepaid", mv, sha("c", mv), stored(n), Date.valueOf(d1))): _*),
+      features = df(Schemas.features,
+        Seq("same", "price_only", "feat_only", "feat_price").map(featureRow(_, d1)) ++
+        Seq(featureRow("nulls", d1, minutes = null),
+          featureRow("null_gain", d1, up = null),
+          // flip: the oldest and the newest version differ
+          featureRow("flip", d1, data = 1.0), featureRow("flip", d2, data = 2.0),
+          // sameday: the newest version is stored twice on the same day
+          featureRow("sameday", d1, data = 1.0),
+          featureRow("sameday", d2, data = 2.0), featureRow("sameday", d2, data = 2.0)): _*),
+      prices = df(Schemas.productPrices,
+        Seq("same", "price_only", "feat_only", "feat_price", "nulls", "null_gain")
+          .map(priceRow(_, d1, 10.0)) ++
+        Seq(priceRow("flip", d1, 5.0), priceRow("flip", d2, 6.0),
+          priceRow("sameday", d1, 7.0),
+          priceRow("sameday", d2, 8.0), priceRow("sameday", d2, 8.0)): _*),
+      packs = empty(Schemas.packs))
+
+    val b = batch(
+      productRow("same", 10.0, d3),
+      productRow("price_only", 12.0, d3),
+      productRow("feat_only", 10.0, d3, data = 20.0),
+      productRow("feat_price", 12.0, d3, data = 20.0),
+      productRow("nulls", 10.0, d3, minutes = null), // null <=> null: unchanged
+      productRow("null_gain", 10.0, d3, up = 50.0), // null -> value: changed
+      productRow("flip", 6.0, d3, data = 2.0), // equals the newest version
+      productRow("sameday", 8.0, d3, data = 2.0), // equals the same-day newest
+      productRow("new_p", 9.0, d3, data = 30.0),
+      productRow("s1", 40.0, d3, competitor = sc)) // new competitor
+
+    val newRows = Seq("new_p" -> mv, "s1" -> sc)
+    val newData = Map("new_p" -> 30.0, "s1" -> 15.0)
+    val price = Map("same" -> 10.0, "price_only" -> 12.0, "feat_only" -> 10.0,
+      "feat_price" -> 12.0, "nulls" -> 10.0, "null_gain" -> 10.0,
+      "flip" -> 6.0, "sameday" -> 8.0, "new_p" -> 9.0, "s1" -> 40.0)
+    def stagedFeature(n: String, c: String = mv) = {
+      val data = newData.getOrElse(n, if (Set("feat_only", "feat_price")(n)) 20.0
+        else if (Set("flip", "sameday")(n)) 2.0 else 15.0)
+      val up = if (n == "null_gain") 50.0 else 20.0
+      Row(fu(n, d3, c), pu(n, c), n, s"https://x/$n", Date.valueOf(d3),
+        data, -1.0, -1L, up, 1000.0)
+    }
+    def existingPrice(n: String) = Row(sha("pc", stored(n), d3), stored(n), price(n),
+      Date.valueOf(d3))
+
+    val expCompetitors = Seq(Row(sha("c", sc), sc, Date.valueOf(d3)))
+    val expProducts = newRows.map { case (n, c) =>
+      Row(pu(n, c), n, "mobile_prepaid", c, sha("c", c), fu(n, d3, c), Date.valueOf(d3)) }
+    val newPrices = newRows.map { case (n, c) =>
+      Row(sha("pc", fu(n, d3, c), d3), fu(n, d3, c), price(n), Date.valueOf(d3)) }
+    // a feature change stages a feature row and a price row; a price
+    // change against the probed version stages one more price row
+    val bothDirections = Seq("feat_only", "feat_price", "null_gain")
+    val oldestOnly = Seq("flip", "sameday")
+    val expected = Map(
+      false -> (
+        newRows.map { case (n, c) => stagedFeature(n, c) } ++
+          (bothDirections ++ oldestOnly).map(stagedFeature(_)),
+        newPrices ++ Seq("price_only", "feat_only", "feat_price", "feat_price",
+          "null_gain", "flip", "flip", "sameday", "sameday").map(existingPrice)),
+      true -> (
+        newRows.map { case (n, c) => stagedFeature(n, c) } ++
+          bothDirections.map(stagedFeature(_)),
+        newPrices ++ Seq("price_only", "feat_only", "feat_price", "feat_price",
+          "null_gain").map(existingPrice)))
+
+    for (orderDesc <- Seq(false, true)) {
+      val delta = WarehouseLoad.stageProducts(history, b, orderDesc)
+      try {
+        val (expFeatures, expPrices) = expected(orderDesc)
+        Seq(delta.competitors -> expCompetitors, delta.products -> expProducts,
+            delta.features -> expFeatures, delta.prices -> expPrices).foreach {
+          case (actual, exp) =>
+            assert(shown(actual.collect().toSeq) === shown(exp), s"orderDesc=$orderDesc")
+        }
+      } finally delta.release()
+    }
   }
 }
