@@ -507,7 +507,11 @@ object TextOps {
     * jaccard ≥ t is `2·inter ≥ (s1+s2−inter)·…` and exact_ppm is
     * integral arithmetic over (inter, s1, s2). Same memo contract as
     * every sibling cache (per-(session, dir), MemoStats-accounted,
-    * Blocks.reset-cleared). */
+    * Blocks.reset-cleared). Only pairs sharing at least one token
+    * appear: a pair of two EMPTY documents (no tokens) is excluded,
+    * although its Jaccard 0/0 would pass a `2·inter ≥ union` test —
+    * the oracle's `iv` CTE is the same inner token join, so consumers
+    * agree with it on corpora with empty documents. */
   private val probePairsCache =
     scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
 

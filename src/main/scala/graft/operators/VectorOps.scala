@@ -1,10 +1,13 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.types.{IntegerType, LongType, StructField, StructType}
+import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.sources.Tables._
 import graft.functions.DotProduct.dotFast
+import graft.functions.CentroidDist2.centDist2
 
 /** Embedding similarity search (SURVEY.md §2.12 E4/E6) + sketches (E2).
   *
@@ -697,14 +700,15 @@ object VectorOps {
     // integer sums, centroid updates as truncating integer division
     // (Spark div == DuckDB //), and (dist, j) row_number tie-breaks,
     // two fixed Lloyd rounds are bit-identical in any engine. Physical
-    // shape per round: one broadcast of the k×dims centroid table to
-    // the dim-exploded vectors (no all-pairs), one aggregation per
-    // assignment, one per update — each shuffling on (vec, cluster)
-    // keys only. Seeds = the first k vectors; an empty cluster keeps
-    // its previous centroid.
+    // shape per round: the k centroids ride as a driver-held literal
+    // and each vector's k squared distances come from ONE pass of the
+    // CentroidDist2 kernel over its quantized array (no explode, no
+    // join, no shuffle); the update is one k×dims aggregate collected
+    // to the driver (kmeansParts). Seeds = the first k vectors; an
+    // empty cluster keeps its previous centroid.
     "q_kmeans" -> ((s, d) => {
-      val (_, a2, _) = kmeansParts(s, d)
-      a2.withColumn("csize", count(lit(1)).over(Window.partitionBy("cluster")))
+      kmeansParts(s, d).vecs.select("vec_id", "cluster")
+        .withColumn("csize", count(lit(1)).over(Window.partitionBy("cluster")))
         .orderBy("vec_id")
     }),
 
@@ -714,21 +718,13 @@ object VectorOps {
     // and the global imbalance factor max/mean in ppm — the number
     // that predicts probe-latency skew (a 10× hot cell means 10× worst
     // -case probe cost; the fix is re-seeding or splitting, and this
-    // report is how you notice). One broadcast-assign + an O(k)
-    // aggregate; shares and imbalance all integral.
+    // report is how you notice). One kernel pass per vector against the
+    // collected seeds (the kmeansParts assignment) + an O(k) aggregate;
+    // shares and imbalance all integral.
     "q_ivf_cell_balance" -> ((s, d) => {
-      val dims = embeddings(s, d)
-        .select(col("vec_id"), posexplode(col("embedding")).as(Seq("pos", "fval")))
-        .select(col("vec_id"), (col("pos") + 1).as("dim"),
-          round(col("fval").cast("double") * 1000000).cast("long").as("qv"))
-      val c0 = dims.filter(col("vec_id") < 8)
-        .select(col("vec_id").as("j"), col("dim").as("cd"), col("qv").as("cval"))
-      val w = Window.partitionBy("vec_id").orderBy(col("dist2"), col("j"))
-      val asg = dims.join(broadcast(c0), col("dim") === col("cd"))
-        .groupBy("vec_id", "j")
-        .agg(sum((col("qv") - col("cval")) * (col("qv") - col("cval"))).as("dist2"))
-        .withColumn("rn", row_number().over(w)).filter(col("rn") === 1)
-        .select(col("vec_id"), col("j").as("cell"))
+      val q = quantized(s, d)
+      val asg = assignNearest(q, seedCentroids(q))
+        .select(col("vec_id"), col("cluster").as("cell"))
       val occ = asg.groupBy("cell").agg(count(lit(1)).as("n_vecs"))
       val tot = broadcast(occ.agg(sum("n_vecs").as("n_total"),
         max("n_vecs").as("n_max"), count(lit(1)).as("k")))
@@ -750,11 +746,11 @@ object VectorOps {
     // would cost vecs² pairwise distances; at lake scale only the
     // centroid form survives, which is why it is the one implemented.
     "q_silhouette" -> ((s, d) => {
-      val (d2, a2, _) = kmeansParts(s, d)
-      val ab = d2.join(a2, "vec_id")
-        .groupBy("vec_id", "cluster")
-        .agg(sum(when(col("j") === col("cluster"), col("dist2"))).as("a2d"),
-          min(when(col("j") =!= col("cluster"), col("dist2"))).as("b2d"))
+      val km = kmeansParts(s, d)
+      val ids = lit(km.ids.toArray)
+      val ab = km.vecs.select(col("cluster"), col("dist2").as("a2d"),
+        array_min(filter(col("dists"),
+          (_, i) => element_at(ids, i + 1) =!= col("cluster"))).as("b2d"))
       ab.withColumn("s_milli", expr(
           """case when greatest(a2d, b2d) = 0 then 0
             |else (b2d - a2d) * 1000 div greatest(a2d, b2d) end""".stripMargin))
@@ -812,33 +808,26 @@ object VectorOps {
     // lower-ranked window member has cosine ≥ 0.35 with it (keep the
     // most-central representative — SemDeDup's policy). Cosine uses
     // the embed_near_dup double-fold convention; output is the
-    // per-cluster retention report a curation pass reads.
+    // per-cluster retention report a curation pass reads. Physical
+    // shape: the rank window reads the memoized kmeansParts table (own
+    // dist², the vector and its norm are columns: no join), then ONE
+    // array pass per cluster over its rank-sorted window, on the
+    // window's own partitioning: member i is dropped when an `exists`
+    // over members 0..i-1 finds a cosine ≥ 0.35 — folded with
+    // dotFast(lower-ranked, higher-ranked), the operand order of the
+    // pairwise form, so every cosine is bit-identical to it.
     "q_semdedup" -> ((s, d) => {
-      val (d2, a2, _) = kmeansParts(s, d)
-      val own = d2.as("dd").join(a2.as("aa"),
-        col("dd.vec_id") === col("aa.vec_id") && col("dd.j") === col("aa.cluster"))
-        .select(col("aa.vec_id"), col("aa.cluster"), col("dd.dist2"))
-      val win = own.withColumn("rnk", row_number().over(
+      val m = kmeansParts(s, d).vecs
+        .withColumn("rnk", row_number().over(
           Window.partitionBy("cluster").orderBy(col("dist2"), col("vec_id"))))
         .filter(col("rnk") <= 64)
-        .select("cluster", "vec_id", "rnk")
-      val emb = embeddings(s, d)
-        .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
-        .withColumn("nv", normFast(col("v")))
-      val a = win.join(emb, "vec_id")
-        .select(col("cluster"), col("rnk").as("ra"),
-          col("v").as("va"), col("nv").as("na"))
-      val b = win.join(emb, "vec_id")
-        .select(col("cluster"), col("vec_id").as("vb"), col("rnk").as("rb"),
-          col("v").as("vc"), col("nv").as("nb"))
-      val drops = a.join(b, Seq("cluster"))
-        .filter(col("ra") < col("rb"))
-        .filter(dotFast(col("va"), col("vc")) / (col("na") * col("nb")) >= 0.35)
-        .select(col("cluster"), col("vb")).distinct()
-        .groupBy("cluster").agg(count(lit(1)).as("n_dropped"))
-      win.groupBy("cluster").agg(count(lit(1)).as("n_window"))
-        .join(drops, Seq("cluster"), "left")
-        .withColumn("n_dropped", coalesce(col("n_dropped"), lit(0L)))
+        .groupBy("cluster")
+        .agg(sort_array(collect_list(struct(col("rnk"), col("v"), col("nv")))).as("m"))
+      m.select(col("cluster"),
+          size(col("m")).cast("long").as("n_window"),
+          size(filter(col("m"), (b, i) => exists(slice(col("m"), lit(1), i),
+            a => dotFast(a("v"), b("v")) / (a("nv") * b("nv")) >= 0.35)))
+            .cast("long").as("n_dropped"))
         .withColumn("kept_ppm",
           expr("(n_window - n_dropped) * 1000000 div n_window"))
         .select("cluster", "n_window", "n_dropped", "kept_ppm")
@@ -2356,20 +2345,19 @@ object VectorOps {
     // cannot drift), stage 2 int8-quantizes the RESIDUAL v − centroid
     // per dimension with the exact q_sq_codes range formulas. The
     // report is the codec's own accounting: per cluster, the mean
-    // stage-1 error (‖v−c‖², straight from the shared distance table)
-    // vs the mean error AFTER the residual stage, and the ppm of
-    // stage-1 error the residual codebook recovers. All exact bigint.
-    // Scale: the kmeans legs are the proven Lloyd shapes; the
+    // stage-1 error (‖v−c‖², the own-centroid dist² of the shared
+    // kmeansParts table) vs the mean error AFTER the residual stage,
+    // and the ppm of stage-1 error the residual codebook recovers. All
+    // exact bigint. Scale: the kmeans legs are the shared memo; the
     // residual pass is one centroid-broadcast join + one O(dims)
-    // range broadcast over a single exploded scan.
+    // range broadcast over the memo's quantized arrays, exploded once.
     "q_residual_quantize" -> ((s, d) => {
-      val (d2, a2, c1) = kmeansParts(s, d)
-      val dims = embeddings(s, d)
-        .select(col("vec_id"), posexplode(col("embedding")).as(Seq("pos", "fval")))
-        .select(col("vec_id"), (col("pos") + 1).as("dim"),
-          round(col("fval").cast("double") * 1000000).cast("long").as("qv"))
-      val res = dims.join(a2, "vec_id")
-        .join(broadcast(c1),
+      val km = kmeansParts(s, d)
+      val res = km.vecs
+        .select(col("vec_id"), col("cluster"),
+          posexplode(col("qv")).as(Seq("pos", "qv")))
+        .select(col("vec_id"), col("cluster"), (col("pos") + 1).as("dim"), col("qv"))
+        .join(broadcast(km.c1),
           col("cluster") === col("j") && col("dim") === col("cd"))
         .select(col("vec_id"), col("cluster"), col("dim"),
           (col("qv") - col("cval")).as("r"))
@@ -2383,9 +2371,7 @@ object VectorOps {
         .withColumn("deq", expr("minr + code * (maxr - minr) div 255"))
         .groupBy("vec_id", "cluster")
         .agg(sum(expr("(r - deq) * (r - deq)")).as("e2"))
-      val e1 = d2.join(a2, Seq("vec_id"))
-        .filter(col("j") === col("cluster"))
-        .select(col("vec_id"), col("dist2").as("e1"))
+      val e1 = km.vecs.select(col("vec_id"), col("dist2").as("e1"))
       e2.join(e1, "vec_id")
         .groupBy("cluster")
         .agg(count(lit(1)).as("n_vecs"),
@@ -2416,26 +2402,13 @@ object VectorOps {
     // scope). Output: the k-occurrence histogram + its max (the
     // biggest hub's in-degree).
     "q_hubness" -> ((s, d) => {
-      val (d2, a2, _) = kmeansParts(s, d)
-      val own = d2.join(a2.withColumnRenamed("cluster", "jown"),
-          Seq("vec_id"))
-        .filter(col("j") === col("jown"))
-        .select(col("vec_id"), col("j").as("cluster"), col("dist2"))
-      val win = own.withColumn("rnk", row_number().over(
+      // the quantized vectors ride in the memoized kmeansParts table;
+      // wa, wb and the k-occurrence rollup all read this window
+      val weq = kmeansParts(s, d).vecs
+        .withColumn("rnk", row_number().over(
           Window.partitionBy("cluster").orderBy(col("dist2"), col("vec_id"))))
         .filter(col("rnk") <= 64)
-        .select("cluster", "vec_id")
-      val qemb = embeddings(s, d)
-        .select(col("vec_id"),
-          expr("transform(embedding, x -> cast(round(cast(x as double) * 1000000) as bigint))")
-            .as("qv"))
-      // cut the Lloyd lineage ONCE at the ≤ k·64-row window table:
-      // wa, wb and the k-occurrence rollup all consume it, and without
-      // the checkpoint each consumer re-executes the whole kmeans DAG
-      // (measured 14.5 s → the pairwise stage alone)
-      val weq = win.join(qemb, "vec_id")
         .select(col("cluster"), col("vec_id"), col("qv"))
-        .localCheckpoint()
       val wa = weq
         .select(col("cluster"), col("vec_id").as("va"), col("qv").as("qa"))
       val wb = weq
@@ -2454,75 +2427,114 @@ object VectorOps {
         .orderBy("k_occ")
     }))
 
+  /** Embeddings with their quantized form `qv array<bigint>`: each
+    * element in micro-units, `round(cast(x as double) * 1e6)` — the
+    * kmeansCte `dims` rule, one array per vector instead of one row per
+    * element. Null and empty embeddings are dropped, as the posexplode
+    * of the exploded form drops them. */
+  private def quantized(s: SparkSession, d: String): DataFrame =
+    embeddings(s, d)
+      .filter(size(col("embedding")) > 0)
+      .select(col("vec_id"), col("embedding"), transform(col("embedding"),
+        x => round(x.cast("double") * 1000000).cast("long")).as("qv"))
+
+  /** The seed centroids — the first k = 8 vectors (vec_id < 8) of `q` —
+    * collected in ascending vec_id, the order every pick breaks ties
+    * in. Bounded by k × dims (the q_pca_power precedent). */
+  private def seedCentroids(q: DataFrame): Seq[(Long, Array[java.lang.Long])] =
+    q.filter(col("vec_id") < 8).collect().toSeq
+      .map(r => r.getAs[Long]("vec_id") -> r.getAs[Seq[java.lang.Long]]("qv").toArray)
+      .sortBy(_._1)
+
+  /** 1-based position of the nearest centroid in a `centDist2` result,
+    * under the kmeansCte pick `ORDER BY dist2, j`: a null distance
+    * first, then the smallest, ties to the lower position (centroids
+    * are listed in ascending j). Null when there is no centroid. */
+  private def nearest(dists: Column): Column = {
+    val isNull = transform(dists, _.isNull)
+    when(array_contains(isNull, true), array_position(isNull, true))
+      .otherwise(array_position(dists, array_min(dists)))
+      .cast("int")
+  }
+
+  /** `q` plus `dists` (squared distances to `cents`, in their order),
+    * `i` (the position of the nearest) and `cluster` (its id): one
+    * kernel pass per vector against the broadcast literal centroids. */
+  private def assignNearest(q: DataFrame,
+                            cents: Seq[(Long, Array[java.lang.Long])]): DataFrame =
+    q.withColumn("dists", centDist2(col("qv"), lit(cents.map(_._2).toArray)))
+      .withColumn("i", nearest(col("dists")))
+      .filter(col("i").isNotNull)
+      .withColumn("cluster", element_at(lit(cents.map(_._1).toArray), col("i")))
+
+  /** The shared integer Lloyd pipeline: `vecs` holds one row per
+    * quantized vector — `vec_id`, its final `cluster`, `dist2` to that
+    * centroid, `dists` (array, one squared distance per final centroid,
+    * centroid `ids(i)` at position i), `qv`, and the embedding as
+    * array<double> `v` with its norm `nv` for the cosine consumers — and
+    * `c1` the final centroids as `(j, cd, cval)` rows, so residual codecs
+    * quantize against the EXACT centroids the assignment used (the
+    * kmeansCte lockstep rule). */
+  private[graft] final case class KMeans(vecs: DataFrame, ids: Seq[Long], c1: DataFrame)
+
+  /** The k-means family's clustering (q_kmeans, q_silhouette,
+    * q_semdedup, q_hubness, q_residual_quantize and q_cluster_purity
+    * through q_kmeans): seeds = the first 8 vectors, one assignment +
+    * one centroid update, then the assignment under the updated
+    * centroids, in exact micro-unit integer math so it is bit-identical
+    * to the exploded kmeansCte the oracle runs. The embeddings are
+    * quantized once into a transient checkpoint; three Spark passes read
+    * it, each against driver-held centroids:
+    *  1. collect the k seeds;
+    *  2. assign every vector to its nearest seed (CentroidDist2, one
+    *     kernel pass per vector) and aggregate the members' coordinates
+    *     per (cluster, position) — k × dims rows collected; the update
+    *     is `sum div count(1)` (truncating, null elements counted, all
+    *     null keeps the seed value) and an empty cluster keeps its seed;
+    *  3. one kernel pass against the updated centroids, materialized
+    *     once as `vecs`.
+    * MEMOIZED per (session, dir): deterministic derivation over an
+    * immutable snapshot dir, build wall-clock in memo_build_ms, the one
+    * checkpoint protected, cleared by Blocks.reset. */
+  private val kmeansCache = scala.collection.concurrent.TrieMap
+    .empty[(SparkSession, String), KMeans]
+
+  private[graft] def kmeansParts(s: SparkSession, d: String): KMeans =
+    kmeansCache.getOrElseUpdate((s, d), graft.MemoStats.timed("kmeans_parts") {
+      val q = quantized(s, d)
+        .select(col("vec_id"), col("qv"), col("embedding").cast("array<double>").as("v"))
+        .localCheckpoint()
+      val c0 = seedCentroids(q)
+      val upd = assignNearest(q, c0)
+        .select(col("cluster"), posexplode(col("qv")).as(Seq("pos", "x")))
+        .groupBy("cluster", "pos")
+        .agg(sum("x").as("sq"), count(lit(1)).as("cnt"))
+        .collect()
+        .map(r => (r.getLong(0), r.getInt(1)) -> r).toMap
+      val c1 = c0.map { case (j, seed) =>
+        j -> seed.indices.map { p =>
+          upd.get((j, p)).filterNot(_.isNullAt(2))
+            .map(r => java.lang.Long.valueOf(r.getLong(2) / r.getLong(3)))
+            .getOrElse(seed(p))
+        }.toArray
+      }
+      val vecs = assignNearest(q, c1)
+        .select(col("vec_id"), col("cluster"),
+          element_at(col("dists"), col("i")).as("dist2"), col("dists"), col("qv"),
+          col("v"), normFast(col("v")).as("nv"))
+        .localCheckpoint()
+      graft.Blocks.release(q)
+      val c1Rows = c1.flatMap { case (j, cent) =>
+        cent.indices.map(p => Row(j, p + 1, cent(p)))
+      }
+      KMeans(graft.Blocks.protect(vecs), c0.map(_._1),
+        s.createDataFrame(c1Rows.asJava, StructType(Seq(StructField("j", LongType),
+          StructField("cd", IntegerType), StructField("cval", LongType)))))
+    })
+
   /** The q_kmeans two-Lloyd-round pipeline as DuckDB CTEs ending with
     * `a2` (vec_id, cluster) — shared by the kmeans oracle and the
     * purity eval so the two can never drift (the ivfpqCte rule). */
-  /** The shared Lloyd pipeline (q_kmeans / q_silhouette): quantized
-    * micro-unit dim table, seeds = first 8 vectors, one assignment +
-    * one centroid update, then the full (vec × centroid) distance
-    * table under the FINAL centroids and the final assignment picked
-    * from it — returned as (finalDists, finalAssignment) so the
-    * silhouette eval rides the exact integer math the clustering ran
-    * (the kmeansCte lockstep rule). The dim table is materialized
-    * once: it feeds two distance tables and the centroid update —
-    * subtree references that would otherwise each rescan and
-    * re-explode the embeddings parquet; the final distance table is
-    * materialized because both its consumers (the rank pick and the
-    * a/b silhouette fold) scan it. */
-  /** MEMOIZED per (session, dir) — r15 optimization: SEVEN catalog
-    * queries consume the Lloyd pipeline (q_kmeans, q_silhouette,
-    * q_semdedup, q_cluster_purity via q_kmeans, q_residual_quantize,
-    * q_hubness, plus the purity rollup), and before the memo each one
-    * re-ran both Lloyd rounds from the parquet scan (2 localCheckpoints
-    * + ~8 stages per consumer). Same contract as every other memo:
-    * deterministic derivation over an immutable snapshot dir, build
-    * wall-clock in memo_build_ms, cleared by Blocks.reset. The three
-    * parts are each checkpointed and protected — a2/c1 were previously
-    * recomputed from d2/dims by every consumer. */
-  private val kmeansCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), (DataFrame, DataFrame, DataFrame)]
-
-  private def kmeansParts(s: SparkSession, d: String)
-      : (DataFrame, DataFrame, DataFrame) =
-    kmeansCache.getOrElseUpdate((s, d), graft.MemoStats.timed("kmeans_parts") {
-      val (d2, a2, c1) = kmeansPartsPlan(s, d)
-      (graft.Blocks.protect(d2),
-       graft.Blocks.protect(a2.localCheckpoint()),
-       graft.Blocks.protect(c1.localCheckpoint()))
-    })
-
-  private def kmeansPartsPlan(s: SparkSession, d: String)
-      : (DataFrame, DataFrame, DataFrame) = {
-    val dims = embeddings(s, d)
-      .select(col("vec_id"), posexplode(col("embedding")).as(Seq("pos", "fval")))
-      .select(col("vec_id"), (col("pos") + 1).as("dim"),
-        round(col("fval").cast("double") * 1000000).cast("long").as("qv"))
-      .localCheckpoint()
-    val c0 = dims.filter(col("vec_id") < 8)
-      .select(col("vec_id").as("j"), col("dim").as("cd"), col("qv").as("cval"))
-    def dists(cents: DataFrame): DataFrame =
-      dims.join(broadcast(cents), col("dim") === col("cd"))
-        .groupBy("vec_id", "j")
-        .agg(sum((col("qv") - col("cval")) * (col("qv") - col("cval"))).as("dist2"))
-    def pick(dd: DataFrame): DataFrame = {
-      val w = Window.partitionBy("vec_id").orderBy(col("dist2"), col("j"))
-      dd.withColumn("rn", row_number().over(w)).filter(col("rn") === 1)
-        .select(col("vec_id"), col("j").as("cluster"))
-    }
-    val a1 = pick(dists(c0))
-    val upd = a1.join(dims, "vec_id")
-      .groupBy(col("cluster"), col("dim"))
-      .agg(sum(col("qv")).as("sq"), count(lit(1)).as("cnt"))
-      .select(col("cluster").as("j2"), col("dim").as("cd2"),
-        expr("sq div cnt").as("nval"))
-    val c1 = c0.join(upd, col("j") === col("j2") && col("cd") === col("cd2"), "left")
-      .select(col("j"), col("cd"), coalesce(col("nval"), col("cval")).as("cval"))
-    val d2 = dists(c1).localCheckpoint()
-    // c1 (j, cd, cval) rides along so residual codecs quantize against
-    // the EXACT centroids the assignment used (the lockstep rule)
-    (d2, pick(d2), c1)
-  }
-
   private lazy val kmeansCte =
     """WITH dims AS (
       |  SELECT vec_id, d AS dim,

@@ -5,13 +5,14 @@ import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{
   BloomFilterMightContain, Expression, ExpressionInfo}
 import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
-import graft.functions.{CmsSketch, DotProduct, HllSketch, KllSketch, NGrams, Nfc, SortedIntersectCount}
+import graft.functions.{CentroidDist2, CmsSketch, DotProduct, HllSketch, KllSketch, NGrams, Nfc, SortedIntersectCount}
 
 /** Session extension point for the engine's custom Catalyst pieces
   * (enable with `spark.sql.extensions=graft.plans.GraftExtensions`).
   *
   * Registers the codegen'd `graft_dot(array<double>, array<double>)`
-  * scalar and the `graft_hll` sketch aggregate (SURVEY.md §4.3), the
+  * and `graft_cent_dist2(array<bigint>, array<array<bigint>>)` scalars
+  * and the `graft_hll` sketch aggregate (SURVEY.md §4.3), the
   * optimizer rule that rewrites the HOF dot-product idiom onto
   * graft_dot, and the planner strategy for the native
   * [[TopKPerGroupNode]] whole-operator (partial/final bounded-heap
@@ -34,6 +35,10 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       new ExpressionInfo(classOf[DotProduct].getName, "graft_dot"),
       (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
         DotProduct(exprs(0), exprs(1))))
+    ext.injectFunction((
+      new FunctionIdentifier("graft_cent_dist2"),
+      new ExpressionInfo(classOf[CentroidDist2].getName, "graft_cent_dist2"),
+      (exprs: Seq[Expression]) => CentroidDist2(exprs(0), exprs(1))))
     ext.injectFunction((
       new FunctionIdentifier("graft_sorted_inter"),
       new ExpressionInfo(classOf[SortedIntersectCount].getName, "graft_sorted_inter"),

@@ -1763,6 +1763,26 @@ class OperatorsSpec extends SparkTestBase {
     }
   }
 
+  test("q_itemset_triples: the slice form equals a naive a<b<c enumeration on literal baskets") {
+    // the catalog data has no triple at support >= 2, so these baskets
+    // are built to have several, plus a duplicated line and a singleton
+    val baskets = Seq(
+      1L -> Seq(1L, 2L, 3L, 4L), 2L -> Seq(1L, 2L, 3L), 3L -> Seq(2L, 3L, 4L, 5L),
+      4L -> Seq(1L, 3L, 4L), 5L -> Seq(5L, 6L, 7L), 6L -> Seq(5L, 6L, 7L, 1L),
+      7L -> Seq(2L, 2L, 3L, 4L), 8L -> Seq(9L))
+    val dir = java.nio.file.Files.createTempDirectory("graft_triples").toString
+    baskets.flatMap { case (o, ps) => ps.map(p => (o, p)) }
+      .toDF("l_orderkey", "l_partkey").write.parquet(s"$dir/lineitem.parquet")
+    val naive = baskets.flatMap { case (_, ps) => ps.distinct.sorted.combinations(3) }
+      .groupBy(identity).view.mapValues(_.size.toLong).toSeq
+      .collect { case (Seq(a, b, c), n) if n >= 2 => (a, b, c, n) }
+      .sortBy { case (a, b, c, n) => (-n, a, b, c) }
+    assert(naive.size >= 4, "the fixture must clear min-support")
+    val slice = graft.analytics.RelQueries.triplesSlice(spark, dir)
+      .as[(Long, Long, Long, Long)].collect().toSeq
+    assert(slice === naive)
+  }
+
   test("q_theil_sen: median slope matches an exact Scala recompute of all pairs") {
     val (nPairs, median, mn, mx) =
       graft.operators.EventOps.queries("q_theil_sen")(spark, sf)

@@ -117,28 +117,6 @@ class PipelineSpec extends SparkTestBase {
     assert(StreamingJobs.loadState(spark, wh).prices.count() === 2)
   }
 
-  /** Spark jobs `body` submits, counted by a listener scoped to a job
-    * group of its own (threads the body starts inherit the group). */
-  private def jobsOf(body: => Unit): Int = {
-    val sc = spark.sparkContext
-    val group = s"jobs_of_${java.util.UUID.randomUUID()}"
-    val jobs = new java.util.concurrent.atomic.AtomicInteger()
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group))
-          jobs.incrementAndGet()
-    }
-    sc.addSparkListener(listener)
-    sc.setJobGroup(group, "job count")
-    try body
-    finally {
-      sc.clearJobGroup()
-      org.apache.spark.graft.BusDrain(sc)
-      sc.removeSparkListener(listener)
-    }
-    jobs.get
-  }
-
   test("an SCD load stages its batch once: bounded jobs per load, none for a replay") {
     import graft.streaming.StreamingJobs
     val raw = Files.createTempDirectory("graft_jobs_raw").toFile.getAbsolutePath
