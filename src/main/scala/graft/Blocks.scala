@@ -16,46 +16,46 @@ import org.apache.spark.sql.{Dataset, SparkSession}
   * after ~500 catalog executions).
   *
   * [[sweep]] is the between-queries antidote: unpersist every
-  * persistent RDD EXCEPT the ids registered by [[protect]] — the 13
-  * memoized shared subtrees (pair mining, cluster labels, phash,
-  * NB scores, …) whose checkpoints are held across queries by design
-  * and whose data would be unrecoverable if dropped (a local
-  * checkpoint has no lineage to recompute from). Registration happens
-  * automatically in [[MemoStats.timed]], so every memo site is covered
-  * without per-site bookkeeping. Harnesses (Bench, Verify, ad-hoc
-  * sessions) call `Blocks.sweep(spark)` after consuming each query's
-  * result; cached-but-not-checkpointed RDDs swept here are merely
-  * recomputed if ever re-read (lineage intact), so the sweep is always
-  * safe between queries.
+  * persistent RDD EXCEPT the ids registered by [[protect]] — the
+  * checkpoints of the memoized shared subtrees (pair mining, cluster
+  * labels, phash, NB scores, …) held across queries by design, whose
+  * data would be unrecoverable if dropped (a local checkpoint has no
+  * lineage to recompute from). The memo registry [[MemoStats.get]] is
+  * the only caller of [[protect]] and [[unprotect]]: it protects every
+  * value it builds and unprotects a value whose input data changed, so
+  * every memo site is covered without per-site bookkeeping. Harnesses
+  * (Bench, Verify, ad-hoc sessions) call `Blocks.sweep(spark)` after
+  * consuming each query's result; cached-but-not-checkpointed RDDs
+  * swept here are merely recomputed if ever re-read (lineage intact),
+  * so the sweep is always safe between queries.
   */
 object Blocks {
   private val protectedIds =
     java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
 
-  /** Register the checkpoint RDDs backing `df` as sweep-survivors.
-    * A localCheckpointed Dataset's analyzed plan is a `LogicalRDD`
-    * holding the materialized RDD; collect every such node (there is
-    * exactly one for a plain checkpoint, possibly several if memo
-    * results are later composed). */
-  def protect[T](df: Dataset[T]): Dataset[T] = {
-    df.queryExecution.analyzed.foreach {
-      case l: org.apache.spark.sql.execution.LogicalRDD =>
-        protectedIds.add(l.rdd.id)
-      case _ => ()
+  /** The checkpoint RDDs backing `df`: a localCheckpointed Dataset's
+    * analyzed plan is a `LogicalRDD` holding the materialized RDD
+    * (exactly one for a plain checkpoint, possibly several if
+    * checkpoints are later composed). */
+  private def checkpoints(df: Dataset[_]) =
+    df.queryExecution.analyzed.collect {
+      case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd
     }
-    df
-  }
+
+  /** Register the checkpoint RDDs backing `df` as sweep-survivors. */
+  def protect(df: Dataset[_]): Unit =
+    checkpoints(df).foreach(r => protectedIds.add(r.id))
+
+  /** Withdraw [[protect]]: the next sweep frees `df`'s checkpoints. */
+  def unprotect(df: Dataset[_]): Unit =
+    checkpoints(df).foreach(r => protectedIds.remove(r.id))
 
   /** Unpersist the checkpoint RDDs backing `df` — the owner's release of
     * a transient checkpoint whose last consumer has run. Protected memo
     * checkpoints are left alone. */
   def release[T](df: Dataset[T]): Unit =
-    df.queryExecution.analyzed.foreach {
-      case l: org.apache.spark.sql.execution.LogicalRDD
-          if !protectedIds.contains(l.rdd.id) =>
-        l.rdd.unpersist(blocking = false)
-      case _ => ()
-    }
+    checkpoints(df).filterNot(r => protectedIds.contains(r.id))
+      .foreach(_.unpersist(blocking = false))
 
   /** Unpersist every persistent RDD except protected memo checkpoints.
     * Returns the number of RDDs dropped.
@@ -83,16 +83,11 @@ object Blocks {
   /** Number of currently protected checkpoint ids (spec observability). */
   def protectedCount: Int = protectedIds.size
 
-  /** Drop every memo cache (all four owners), the build accounting, and
-    * the protected-id registry, then sweep the now-unprotected blocks —
-    * the full reset a measurement harness needs before an attributed
-    * cold pass (Bench's warmDir == sfDir degenerate case, ScaleRehearsal
-    * batches). */
+  /** Drop every memo entry, the build accounting, and the protected-id
+    * registry, then sweep the now-unprotected blocks — the full reset a
+    * measurement harness needs before an attributed cold pass (Bench's
+    * warmDir == sfDir degenerate case, ScaleRehearsal batches). */
   def reset(spark: SparkSession): Unit = {
-    graft.analytics.RelQueries.clearMemos()
-    graft.operators.GraphOps.clearMemos()
-    graft.operators.TextOps.clearMemos()
-    graft.operators.VectorOps.clearMemos()
     MemoStats.clear()
     protectedIds.clear()
     sweep(spark)

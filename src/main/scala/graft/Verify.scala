@@ -23,10 +23,12 @@ import java.nio.file.{Files, Paths, StandardOpenOption}
   *    391 queries are sub-second at sf0.01, so wall time is dominated
   *    by per-query Catalyst planning, which is single-threaded per
   *    query but parallelizes perfectly across queries. Memo builds
-  *    stay single-build under concurrency (atomic TrieMap
-  *    getOrElseUpdate). Blocks.sweep is NOT safe mid-flight (it would
-  *    drop a running query's lineage-free localCheckpoints), so the
-  *    sweep runs as a BARRIER between batches, never inside one;
+  *    stay single-build under concurrency: [[MemoStats.get]] installs
+  *    one entry per memo and runs its build once, and a batch-mate
+  *    that needs the same memo waits for that build. Blocks.sweep is
+  *    NOT safe mid-flight (it would drop a running query's
+  *    lineage-free localCheckpoints), so the sweep runs as a BARRIER
+  *    between batches, never inside one;
   *  - `repartition(1)` replaces `coalesce(1)`: both yield the single
   *    output file the compare reads, but coalesce(1) collapsed every
   *    plan stage after the last shuffle to one task, serializing the

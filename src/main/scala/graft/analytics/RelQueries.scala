@@ -1583,65 +1583,35 @@ object RelQueries {
        |FROM g16 ORDER BY hkey, o_orderkey""".stripMargin
   }
 
-  /** Frequent part pairs (support ≥ 2) per the q_itemset_pairs
-    * Scaladoc — shared by the pair query and the top-k reco ranking,
-    * MEMOIZED per (session, dir) like GraphOps' cluster labels (same
-    * soundness argument: deterministic derivation over an immutable
-    * snapshot directory; ~3k rows localCheckpointed, session-lifetime).
-    * Without the memo the reco query re-derives the whole mining
-    * pipeline: 2.29 → ~0.4 s at sf0.1. */
-  private val pairCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
-
   /** The distinct (order, item) basket projection every Apriori-family
     * query starts from (pair mining, triples, association rules) —
     * memoized like the pairs themselves so the 600k-row distinct
     * shuffle is paid once per dataset, not once per consumer
     * (measured ~1 s per avoided re-derivation at sf0.1). */
-  private val basketCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
-
   private def basketItems(s: SparkSession, d: String): DataFrame =
-    basketCache.getOrElseUpdate((s, d),
-      graft.MemoStats.timed("basket_items")(
-        lineitem(s, d).select(col("l_orderkey"), col("l_partkey"))
-          .distinct().localCheckpoint()))
+    graft.MemoStats.get("basket_items", s, d)(
+      lineitem(s, d).select(col("l_orderkey"), col("l_partkey"))
+        .distinct().localCheckpoint())
 
   /** The distinct (customer, part) interaction table — the positives
     * both recsys queries start from (user-CF's co-purchase index,
     * negative sampling's anti-join side): one orders⋈lineitem +
     * distinct, memoized so the fact join is paid once per dataset
     * (measured ~1.5 s per avoided re-derivation at sf0.1). */
-  private val userItemCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
-
   private def userItemPairs(s: SparkSession, d: String): DataFrame =
-    userItemCache.getOrElseUpdate((s, d),
-      graft.MemoStats.timed("user_item_pairs")(
-        orders(s, d).join(lineitem(s, d),
-            col("o_orderkey") === col("l_orderkey"))
-          .select(col("o_custkey").as("c"), col("l_partkey").as("p"))
-          .distinct().localCheckpoint()))
+    graft.MemoStats.get("user_item_pairs", s, d)(
+      orders(s, d).join(lineitem(s, d),
+          col("o_orderkey") === col("l_orderkey"))
+        .select(col("o_custkey").as("c"), col("l_partkey").as("p"))
+        .distinct().localCheckpoint())
 
-  /** Part-catalog row count, memoized per (session, dataset): the
-    * broadcast-gate probe in [[negativeSampling]] is constant for an
-    * immutable input directory, but an unmemoized `count()` launched an
-    * uncached job at every DataFrame CONSTRUCTION (warmup + both bench
-    * passes + any plan inspection — round-7 ADVICE). */
-  private val partCountCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), Long]
-
+  /** Part-catalog row count, memoized: the broadcast-gate probe in
+    * [[negativeSampling]] is constant for a given input, but an
+    * unmemoized `count()` launched an uncached job at every DataFrame
+    * CONSTRUCTION (warmup + both bench passes + any plan inspection —
+    * round-7 ADVICE). */
   private def partCount(s: SparkSession, d: String): Long =
-    partCountCache.getOrElseUpdate((s, d), part(s, d).count())
-
-  /** Drop memoized mining results — measurement harnesses (ScaleRehearsal)
-    * call this so a timed run can't silently hit the cache. */
-  private[graft] def clearMemos(): Unit = {
-    pairCache.clear()
-    basketCache.clear()
-    userItemCache.clear()
-    partCountCache.clear()
-  }
+    graft.MemoStats.get("part_count", s, d)(part(s, d).count())
 
   /** The raw mining pipeline, pre-memo — PlanSpec pins ITS shape (the
     * memoized form executes as a checkpoint scan). */
@@ -1667,9 +1637,13 @@ object RelQueries {
       .filter(col("support") >= minSupport)
   }
 
+  /** Frequent part pairs (support ≥ 2) per the q_itemset_pairs
+    * Scaladoc — shared by the pair query and the top-k reco ranking,
+    * memoized (~3k rows localCheckpointed). Without the memo the reco
+    * query re-derives the whole mining pipeline: 2.29 → ~0.4 s at
+    * sf0.1. */
   private def itemsetPairs(s: SparkSession, d: String): DataFrame =
-    pairCache.getOrElseUpdate((s, d),
-      graft.MemoStats.timed("itemset_pairs")(itemsetPairsPlan(s, d).localCheckpoint()))
+    graft.MemoStats.get("itemset_pairs", s, d)(itemsetPairsPlan(s, d).localCheckpoint())
 
   // ---- r16 A/B: candidate physical strategies for ordered k-subset
   // generation from baskets (pairs / triples / user-CF pairs). Three

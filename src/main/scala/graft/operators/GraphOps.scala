@@ -275,31 +275,21 @@ object GraphOps {
   /** (doc_id, comp) over ALL documents: blocked union-find on the
     * verified pairs, singletons defaulting to their own id.
     *
-    * MEMOIZED per (session, input dir) as a localCheckpoint: the
-    * verify pipeline under it (tokenize → candidate join → verify →
-    * union-find) is the most expensive subtree in the catalog, and
-    * THREE queries consume its result (q_dedup_clusters,
-    * q_dedup_survivors, q_dedup_multisignal's text signal) — without
-    * the memo each re-derives the whole pipeline. Sound because the
-    * derivation is deterministic over an input directory read as an
-    * immutable snapshot (the testdata/lake contract); the cached
-    * frame is one row per document, and its lifetime is the session's. */
-  private val clusterCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
-
-  /** Drop memoized cluster labels — measurement harnesses (ScaleRehearsal)
-    * call this so a timed run can't silently hit the cache. */
-  private[graft] def clearMemos(): Unit = clusterCache.clear()
-
+    * Memoized as a localCheckpoint: the verify pipeline under it
+    * (tokenize → candidate join → verify → union-find) is the most
+    * expensive subtree in the catalog, and THREE queries consume its
+    * result (q_dedup_clusters, q_dedup_survivors, q_dedup_multisignal's
+    * text signal) — without the memo each re-derives the whole
+    * pipeline. The memoized frame is one row per document. */
   private def clusters(s: SparkSession, d: String): DataFrame =
-    clusterCache.getOrElseUpdate((s, d), graft.MemoStats.timed("cluster_labels") {
+    graft.MemoStats.get("cluster_labels", s, d) {
       val labels = blockedComponents(verifiedPairs(s, d))
       documents(s, d).select(col("doc_id"))
         .join(labels, col("doc_id") === col("node"), "left")
         .select(col("doc_id").as("node"),
           coalesce(col("comp"), col("doc_id")).as("comp"))
         .localCheckpoint()
-    })
+    }
 
   /** Embedding-cosine near-dup pairs blocked by `label` — the SECOND
     * dedup signal, with a DIFFERENT blocking key than the text pairs'

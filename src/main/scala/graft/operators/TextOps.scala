@@ -81,17 +81,11 @@ object TextOps {
   /** Winnowing near-dup candidate pairs (d1, d2, n_shared ≥ 3) over
     * the df-capped fingerprint index — shared by q_dedup_winnow and
     * GraphOps' modularity metric so the screen and its evaluation can
-    * never disagree on the edge set. MEMOIZED per (session, dir) like
-    * the cluster labels / itemset pairs / phash table (deterministic
-    * derivation over an immutable snapshot directory; the winnow
-    * selection's per-doc window sort is the expensive stage and was
-    * paid once per CONSUMER before the memo). */
-  private val winnowCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
-
+    * never disagree on the edge set. Memoized: the winnow selection's
+    * per-doc window sort is the expensive stage and was paid once per
+    * CONSUMER before the memo. */
   private[operators] def winnowPairs(s: SparkSession, d: String): DataFrame =
-    winnowCache.getOrElseUpdate((s, d),
-      graft.MemoStats.timed("winnow_pairs")(winnowPairsPlan(s, d).localCheckpoint()))
+    graft.MemoStats.get("winnow_pairs", s, d)(winnowPairsPlan(s, d).localCheckpoint())
 
   /** The raw pair pipeline, pre-memo (plan pins target THIS shape). */
   private[operators] def winnowPairsPlan(s: SparkSession, d: String): DataFrame = {
@@ -202,7 +196,7 @@ object TextOps {
     // a hash of a token absent from the doc). Collision probability is
     // ≈ |V|²/2^61 per permutation — negligible below ~10^8 tokens but
     // not zero; [[minhashSigsMemo]] therefore verifies the vocab is
-    // prefix-collision-free once per (session, dir) and falls back to
+    // prefix-collision-free once per memo build and falls back to
     // [[minhashSigsExactFromTokens]] when it is not. There is no vocab
     // size cutoff: the check runs at every size.
     val vocabP = vocab.select(col("token") +:
@@ -229,33 +223,28 @@ object TextOps {
   /** Memoized 8-permutation signature table over the documents corpus
     * — r15: the build was re-run by q_lsh_tuning, q_minhash_est AND
     * the bands memo (three signature builds per session); one
-    * checkpointed table now feeds all three. Same memo contract as
-    * every sibling cache. */
-  private val sigCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
-
+    * checkpointed table now feeds all three. */
   private[operators] def minhashSigsMemo(s: SparkSession, d: String): DataFrame =
-    sigCache.getOrElseUpdate((s, d),
-      graft.MemoStats.timed("minhash_sigs") {
-        val t = tokens(spreadIfCoarse(documents(s, d)))
-        // r16 prefix-collision guard (ADVICE): the 60-bit dictionary
-        // recovery in [[minhashSigsFromTokens]] is bit-exact iff no two
-        // vocab tokens collide on a hash prefix in any permutation.
-        // Verify that once per (session, dir) with one vocab-sized
-        // aggregate (8 count-distincts vs the row count); on collision
-        // — expected only at ≳10^8-token vocabs, |V|²/2^61 — build via
-        // the exact string-min path instead. The check is part of the
-        // one-time memo build, never per-query.
-        val vocab = minhashVocab(t)
-        val cd = vocab.agg(count(lit(1)).as("n"),
-          (0 until 8).map(i =>
-            countDistinct(minhashPrefix(i)).as(s"d$i")): _*).collect()(0)
-        val collisionFree = (0 until 8).forall(i =>
-          cd.getLong(i + 1) == cd.getLong(0))
-        val sigs = if (collisionFree) minhashSigsFromTokens(t)
-          else minhashSigsExactFromTokens(t)
-        sigs.localCheckpoint()
-      })
+    graft.MemoStats.get("minhash_sigs", s, d) {
+      val t = tokens(spreadIfCoarse(documents(s, d)))
+      // r16 prefix-collision guard (ADVICE): the 60-bit dictionary
+      // recovery in [[minhashSigsFromTokens]] is bit-exact iff no two
+      // vocab tokens collide on a hash prefix in any permutation.
+      // Verify that once per (session, dir) with one vocab-sized
+      // aggregate (8 count-distincts vs the row count); on collision
+      // — expected only at ≳10^8-token vocabs, |V|²/2^61 — build via
+      // the exact string-min path instead. The check is part of the
+      // one-time memo build, never per-query.
+      val vocab = minhashVocab(t)
+      val cd = vocab.agg(count(lit(1)).as("n"),
+        (0 until 8).map(i =>
+          countDistinct(minhashPrefix(i)).as(s"d$i")): _*).collect()(0)
+      val collisionFree = (0 until 8).forall(i =>
+        cd.getLong(i + 1) == cd.getLong(0))
+      val sigs = if (collisionFree) minhashSigsFromTokens(t)
+        else minhashSigsExactFromTokens(t)
+      sigs.localCheckpoint()
+    }
 
   /** Blocked token-set Jaccard near-dup pairs over
     * (source, doc_id, toks array) with an adaptive physical strategy:
@@ -339,10 +328,8 @@ object TextOps {
     *   re-materializes the exploded index where the window reuses its
     *   own sorted exchange).
     *
-    * MEMOIZED per (session, dir) like GraphOps' cluster labels (same
-    * soundness: deterministic derivation over an immutable snapshot
-    * directory; localCheckpoint, session lifetime) — the two consumers
-    * pay the explode+hash+window once between them. */
+    * Memoized ([[shingleIndex]]) — the two consumers pay the
+    * explode+hash+window once between them. */
   private[graft] def shingleIndexPlan(s: SparkSession, d: String): DataFrame =
     spreadIfCoarse(documents(s, d))
       .select(col("source"), col("doc_id"),
@@ -354,74 +341,37 @@ object TextOps {
       .withColumn("df", count(lit(1)).over(Window.partitionBy("source", "shingle_h")))
       .filter(col("df") <= 64)
 
-  private val shingleIdxCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
-
   private def shingleIndex(s: SparkSession, d: String): DataFrame =
-    shingleIdxCache.getOrElseUpdate((s, d),
-      graft.MemoStats.timed("shingle_index")(shingleIndexPlan(s, d).localCheckpoint()))
-
-  /** Drop memoized indexes — measurement harnesses (ScaleRehearsal)
-    * call this so a timed run can't silently hit the cache. */
-  private[graft] def clearMemos(): Unit = {
-    shingleIdxCache.clear()
-    winnowCache.clear()
-    fuzzyCache.clear()
-    sortedNbrCache.clear()
-    bandCache.clear()
-    nbCache.clear()
-    jacPairsCache.clear()
-    sigCache.clear()
-    probePairsCache.clear()
-    bpeCache.clear()
-  }
+    graft.MemoStats.get("shingle_index", s, d)(shingleIndexPlan(s, d).localCheckpoint())
 
   /** Verified token-Jaccard pair table at the catalog's LOOSEST
-    * threshold (0.5), MEMOIZED per (session, dir) — r15 optimization.
+    * threshold (0.5), memoized — r15 optimization.
     * [[tokenJaccardPairs]] is lossless at every threshold (the prefix/
     * size-ratio prunes never drop a qualifying pair — the documented
     * PPJoin theorem), so the t ≥ 0.5 consumers are pure FILTERS over
     * this one table: q_dedup_fuzzy (0.8), q_dedup_threshold_sweep
     * (0.5), q_dedup_audit_queue (0.7 then [0.75,0.85)), q_simhash_eval's
     * truth leg (0.5), and GraphOps' verified edges (0.8). Before the
-    * memo each one re-ran the full candidate+verify self-join. Same
-    * memo contract as every sibling cache. */
-  private val jacPairsCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
-
-  /** Unordered verified pairs at threshold 0.5 (source, d1, d2, inter,
+    * memo each one re-ran the full candidate+verify self-join.
+    *
+    * Unordered verified pairs at threshold 0.5 (source, d1, d2, inter,
     * uni, jaccard); filter `jaccard >= t` for any t ≥ 0.5 — identical
     * to running [[tokenJaccardPairs]] at t because the generation is
     * lossless and `jaccard` is the same round(·,4) value either way. */
   private[operators] def jaccardPairs05(s: SparkSession, d: String): DataFrame =
-    jacPairsCache.getOrElseUpdate((s, d),
-      graft.MemoStats.timed("jaccard_pairs")(
-        tokenJaccardPairs(
-          spreadIfCoarse(documents(s, d)).select(col("source"), col("doc_id"),
-            array_distinct(wordsOf).as("toks")),
-          threshold = 0.5, ordered = false).localCheckpoint()))
-
-  /** Verified ER pair tables, memoized per (session, dataset): both
-    * blocking families are consumed standalone AND pooled by
-    * q_er_pipeline, so each match table localCheckpoints once (the
-    * cluster-labels precedent — bounded verified-pair outputs shared
-    * across consumers; build wall-clock lands in memo_build_ms). */
-  private val fuzzyCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
-  private val sortedNbrCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
+    graft.MemoStats.get("jaccard_pairs", s, d)(
+      tokenJaccardPairs(
+        spreadIfCoarse(documents(s, d)).select(col("source"), col("doc_id"),
+          array_distinct(wordsOf).as("toks")),
+        threshold = 0.5, ordered = false).localCheckpoint())
 
   /** Memoized MinHash band table (doc_id, band_id, band_key) — shared
     * by the banding query and the self-evaluating recall (identical by
     * construction: min over a multiset equals min over its set, so the
     * distinct-token and raw-token explodes band identically). */
-  private val bandCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
-
   private def minhashBandsMemo(s: SparkSession, d: String): DataFrame =
-    bandCache.getOrElseUpdate((s, d),
-      graft.MemoStats.timed("minhash_bands")(
-        bandsFromSigs(minhashSigsMemo(s, d)).localCheckpoint()))
+    graft.MemoStats.get("minhash_bands", s, d)(
+      bandsFromSigs(minhashSigsMemo(s, d)).localCheckpoint())
 
   /** q_lsh_tuning's fused candidate pipeline, raw (pre any consumer
     * checkpoint) — PlanSpec pins ITS shape and plans/r16 dumps it.
@@ -505,47 +455,38 @@ object TextOps {
     * so this form is also the more oracle-faithful one). One memoized
     * build now feeds all three; consumers filter/derive:
     * jaccard ≥ t is `2·inter ≥ (s1+s2−inter)·…` and exact_ppm is
-    * integral arithmetic over (inter, s1, s2). Same memo contract as
-    * every sibling cache (per-(session, dir), MemoStats-accounted,
-    * Blocks.reset-cleared). Only pairs sharing at least one token
+    * integral arithmetic over (inter, s1, s2). Only pairs sharing at
+    * least one token
     * appear: a pair of two EMPTY documents (no tokens) is excluded,
     * although its Jaccard 0/0 would pass a `2·inter ≥ union` test —
     * the oracle's `iv` CTE is the same inner token join, so consumers
     * agree with it on corpora with empty documents. */
-  private val probePairsCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
-
   private[operators] def probeExactPairs(s: SparkSession, d: String): DataFrame =
-    probePairsCache.getOrElseUpdate((s, d),
-      graft.MemoStats.timed("probe_exact_pairs") {
-        val probeN = 50 // the q_ann_recall sampled-queries size
-        val tok = spreadIfCoarse(documents(s, d))
-          .select(col("doc_id"), explode(array_distinct(wordsOf)).as("token"))
-          .localCheckpoint() // feeds probe side, corpus side AND sizes
-        val sizes = tok.groupBy("doc_id").agg(count(lit(1)).as("sz"))
-        tok.filter(col("doc_id") < probeN)
-          .select(col("doc_id").as("d1"), col("token"))
-          .join(tok.select(col("doc_id").as("d2"), col("token")), "token")
-          .filter(col("d2") > col("d1"))
-          .groupBy("d1", "d2").agg(count(lit(1)).as("inter"))
-          // probe-side sizes are ≤probeN rows — broadcast; the d2 side
-          // is one row per corpus doc, shuffled like any fact-dim join
-          .join(broadcast(sizes.filter(col("doc_id") < probeN)
-            .select(col("doc_id").as("d1"), col("sz").as("s1"))), "d1")
-          .join(sizes.select(col("doc_id").as("d2"), col("sz").as("s2")), "d2")
-          .localCheckpoint()
-      })
+    graft.MemoStats.get("probe_exact_pairs", s, d) {
+      val probeN = 50 // the q_ann_recall sampled-queries size
+      val tok = spreadIfCoarse(documents(s, d))
+        .select(col("doc_id"), explode(array_distinct(wordsOf)).as("token"))
+        .localCheckpoint() // feeds probe side, corpus side AND sizes
+      val sizes = tok.groupBy("doc_id").agg(count(lit(1)).as("sz"))
+      tok.filter(col("doc_id") < probeN)
+        .select(col("doc_id").as("d1"), col("token"))
+        .join(tok.select(col("doc_id").as("d2"), col("token")), "token")
+        .filter(col("d2") > col("d1"))
+        .groupBy("d1", "d2").agg(count(lit(1)).as("inter"))
+        // probe-side sizes are ≤probeN rows — broadcast; the d2 side
+        // is one row per corpus doc, shuffled like any fact-dim join
+        .join(broadcast(sizes.filter(col("doc_id") < probeN)
+          .select(col("doc_id").as("d1"), col("sz").as("s1"))), "d1")
+        .join(sizes.select(col("doc_id").as("d2"), col("sz").as("s2")), "d2")
+        .localCheckpoint()
+    }
 
   /** Memoized multinomial-NB score table (doc_id, source, cs, score in
     * integral ppm log-prob units) — the trained model applied to the
     * corpus, consumed by the confusion matrix AND the active-learning
     * margin queue. */
-  private val nbCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
-
   private def nbScores(s: SparkSession, d: String): DataFrame =
-    nbCache.getOrElseUpdate((s, d),
-      graft.MemoStats.timed("nb_scores")(nbScoresPlan(s, d).localCheckpoint()))
+    graft.MemoStats.get("nb_scores", s, d)(nbScoresPlan(s, d).localCheckpoint())
 
   /** The raw NB train-and-score pipeline, pre-memo: Laplace-smoothed
     * per-class token likelihoods quantized to integral ppm BEFORE
@@ -584,14 +525,16 @@ object TextOps {
       .select("doc_id", "source", "cs", "score")
   }
 
+  /** Verified ER pair tables, memoized: both blocking families are
+    * consumed standalone AND pooled by q_er_pipeline, so each match
+    * table localCheckpoints once (bounded verified-pair outputs shared
+    * across consumers). */
   private def fuzzyMatches(s: SparkSession, d: String): DataFrame =
-    fuzzyCache.getOrElseUpdate((s, d),
-      graft.MemoStats.timed("fuzzy_pairs")(fuzzyMatchPlan(s, d).localCheckpoint()))
+    graft.MemoStats.get("fuzzy_pairs", s, d)(fuzzyMatchPlan(s, d).localCheckpoint())
 
   private def sortedNeighborhood(s: SparkSession, d: String): DataFrame =
-    sortedNbrCache.getOrElseUpdate((s, d),
-      graft.MemoStats.timed("sorted_pairs")(
-        sortedNeighborhoodPlan(s, d).localCheckpoint()))
+    graft.MemoStats.get("sorted_pairs", s, d)(
+      sortedNeighborhoodPlan(s, d).localCheckpoint())
 
   /** The raw equi-blocked fuzzy-match pipeline, pre-memo (PlanSpec
     * pins THIS shape). Blocks on the first token (equi join — never
@@ -3646,23 +3589,17 @@ object TextOps {
     * apiece, the serial chain behind all three queries' sub-1 core
     * ratios. One fit now feeds all three; the merge table is a plain
     * driver value (8 rows, deterministic) and the final dictionary
-    * state is checkpointed and Blocks-protected like every sibling
-    * memo. The 8-round chain itself stays sequential — each round's
-    * argmax feeds the next round's replace, the irreducible structure
-    * of iterative BPE (documented fixed-overhead floor). */
-  private val bpeCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), (Seq[(Long, String, Long)], DataFrame)]
-
+    * state is checkpointed. The 8-round chain itself stays sequential —
+    * each round's argmax feeds the next round's replace, the
+    * irreducible structure of iterative BPE (documented fixed-overhead
+    * floor). */
   private def bpeFitMemo(s: SparkSession, d: String)
       : (Seq[(Long, String, Long)], DataFrame) =
-    bpeCache.getOrElseUpdate((s, d),
-      graft.MemoStats.timed("bpe_fit") {
-        val (merges, dict, unpersist) = bpeFit(s, d, rounds = 8)
-        try {
-          val out = graft.Blocks.protect(dict.localCheckpoint())
-          (merges, out)
-        } finally unpersist()
-      })
+    graft.MemoStats.get("bpe_fit", s, d) {
+      val (merges, dict, unpersist) = bpeFit(s, d, rounds = 8)
+      try (merges, dict.localCheckpoint())
+      finally unpersist()
+    }
 
   private def bpeFit(s: SparkSession, d: String, rounds: Int)
       : (Seq[(Long, String, Long)], DataFrame, () => Unit) = {

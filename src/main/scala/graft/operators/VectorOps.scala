@@ -70,42 +70,21 @@ object VectorOps {
     * near-dup join so the hash math can't diverge between them.
     * Returns doc_id, width, height, phash_hi, phash_lo, mean_lum.
     *
-    * MEMOIZED per (session, dir), the cluster-label / itemset-pair
-    * precedent (same soundness argument: deterministic derivation over
-    * an immutable input directory, one compact localCheckpoint for the
-    * session): the pixel decode + block rollup is the expensive half of
+    * Memoized: the pixel decode + block rollup is the expensive half of
     * every image query, and without the memo each consumer re-decodes
     * the corpus. */
-  private val phashCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
-
-  /** Drop the memoized phash table — timed harnesses (ScaleRehearsal)
-    * call clearMemos so measurements can't silently hit the cache. */
-  private[graft] def clearMemos(): Unit = {
-    phashCache.clear()
-    cosTopkCache.clear()
-    ivfpqCache.clear()
-    kmeansCache.clear()
-  }
+  private def imagePhash(s: SparkSession, d: String): DataFrame =
+    graft.MemoStats.get("image_phash", s, d)(imagePhashPlan(s, d).localCheckpoint())
 
   /** Memoized retrieval result tables: the exact cosine top-k feeds
     * five evals (MRR, NDCG, MAP, ANN recall, RRF fusion) and the ADC
     * top-k feeds three — each a 15-row table whose recomputation was
-    * the whole brute-force/index pipeline per consumer. Same contract
-    * as every other memo: deterministic over an immutable snapshot
-    * dir, build wall-clock in memo_build_ms, cleared by harnesses. */
-  private val cosTopkCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
-  private val ivfpqCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
-
+    * the whole brute-force/index pipeline per consumer. */
   private def cosineTopk(s: SparkSession, d: String): DataFrame =
-    cosTopkCache.getOrElseUpdate((s, d),
-      graft.MemoStats.timed("cosine_topk")(cosineTopkPlan(s, d).localCheckpoint()))
+    graft.MemoStats.get("cosine_topk", s, d)(cosineTopkPlan(s, d).localCheckpoint())
 
   private def ivfpqTopk(s: SparkSession, d: String): DataFrame =
-    ivfpqCache.getOrElseUpdate((s, d),
-      graft.MemoStats.timed("ivfpq_topk")(ivfpqTopkPlan(s, d).localCheckpoint()))
+    graft.MemoStats.get("ivfpq_topk", s, d)(ivfpqTopkPlan(s, d).localCheckpoint())
 
   /** The raw brute-force cosine top-k, pre-memo (PlanSpec pins THIS
     * shape — the codegen'd graft_dot probe join). */
@@ -195,10 +174,6 @@ object VectorOps {
         col("vec_id").as("vid"), col("adist2"))
       .orderBy("qid", "rank")
   }
-
-  private def imagePhash(s: SparkSession, d: String): DataFrame =
-    phashCache.getOrElseUpdate((s, d),
-      graft.MemoStats.timed("image_phash")(imagePhashPlan(s, d).localCheckpoint()))
 
   /** The raw decode pipeline, pre-memo (PlanSpec pins THIS shape). */
   private[graft] def imagePhashPlan(s: SparkSession, d: String): DataFrame = {
@@ -2493,14 +2468,9 @@ object VectorOps {
     *     null keeps the seed value) and an empty cluster keeps its seed;
     *  3. one kernel pass against the updated centroids, materialized
     *     once as `vecs`.
-    * MEMOIZED per (session, dir): deterministic derivation over an
-    * immutable snapshot dir, build wall-clock in memo_build_ms, the one
-    * checkpoint protected, cleared by Blocks.reset. */
-  private val kmeansCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), KMeans]
-
+    * Memoized: the whole k-means family reads the one `vecs` table. */
   private[graft] def kmeansParts(s: SparkSession, d: String): KMeans =
-    kmeansCache.getOrElseUpdate((s, d), graft.MemoStats.timed("kmeans_parts") {
+    graft.MemoStats.get("kmeans_parts", s, d) {
       val q = quantized(s, d)
         .select(col("vec_id"), col("qv"), col("embedding").cast("array<double>").as("v"))
         .localCheckpoint()
@@ -2527,10 +2497,10 @@ object VectorOps {
       val c1Rows = c1.flatMap { case (j, cent) =>
         cent.indices.map(p => Row(j, p + 1, cent(p)))
       }
-      KMeans(graft.Blocks.protect(vecs), c0.map(_._1),
+      KMeans(vecs, c0.map(_._1),
         s.createDataFrame(c1Rows.asJava, StructType(Seq(StructField("j", LongType),
           StructField("cd", IntegerType), StructField("cval", LongType)))))
-    })
+    }
 
   /** The q_kmeans two-Lloyd-round pipeline as DuckDB CTEs ending with
     * `a2` (vec_id, cluster) — shared by the kmeans oracle and the

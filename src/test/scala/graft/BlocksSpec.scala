@@ -34,12 +34,16 @@ class BlocksSpec extends SparkTestBase {
 
   test("sweep preserves memo checkpoints: consumers re-run correctly after sweeping") {
     Blocks.reset(spark)
-    val first = SparkEntry.queries("q_dedup_clusters")(spark, sf).count()
-    Blocks.sweep(spark)
-    // cluster_labels memo was built by the first run; after the sweep the
-    // memoized checkpoint must still be readable (a dropped local
-    // checkpoint cannot be recomputed — this would throw, not mismatch)
-    val again = SparkEntry.queries("q_dedup_clusters")(spark, sf).count()
+    // one consumer per memo value shape: a DataFrame (cluster_labels), a
+    // case class holding DataFrames (kmeans_parts) and a tuple holding
+    // one (bpe_fit)
+    val consumers = Seq("q_dedup_clusters", "q_semdedup", "q_bpe_encode")
+    val first = consumers.map(n => SparkEntry.queries(n)(spark, sf).count())
+    Blocks.sweep(spark, blocking = true)
+    // the memos were built by the first runs; after the sweep their
+    // checkpoints must still be readable (a dropped local checkpoint
+    // cannot be recomputed — this would throw, not mismatch)
+    val again = consumers.map(n => SparkEntry.queries(n)(spark, sf).count())
     assert(again == first)
     val survivors = SparkEntry.queries("q_dedup_survivors")(spark, sf).count()
     assert(survivors > 0)
@@ -51,8 +55,10 @@ class BlocksSpec extends SparkTestBase {
     assert(MemoStats.snapshot.contains("minhash_bands"),
       "cold run must route the band build through MemoStats")
     assert(Blocks.protectedCount > 0)
+    assert(MemoStats.entries > 0)
     Blocks.reset(spark)
     assert(MemoStats.snapshot.isEmpty)
+    assert(MemoStats.entries == 0)
     assert(Blocks.protectedCount == 0)
   }
 }
