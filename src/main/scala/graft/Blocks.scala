@@ -62,12 +62,11 @@ object Blocks {
     *
     * `blocking`: ad-hoc sessions keep the non-blocking default (the
     * block manager reclaims asynchronously, fine between unrelated
-    * queries). TIMED harnesses must pass `blocking = true` — under the
-    * back-to-back bench protocol the async reclaim of run 1's large
-    * checkpoint blocks otherwise lands INSIDE run 2's timed window
-    * (measured: q_lsh_tuning, 3 checkpoints per execution, run 1
-    * 34 s / run 2 187 s; blocking sweeps put the reclaim between the
-    * windows where it belongs). */
+    * queries). TIMED harnesses must pass `blocking = true` — the async
+    * reclaim of one run's large checkpoint blocks otherwise lands INSIDE
+    * the next run's timed window (measured: q_lsh_tuning, 3 checkpoints
+    * per execution, run 1 34 s / run 2 187 s back to back; blocking
+    * sweeps put the reclaim between the windows where it belongs). */
   def sweep(spark: SparkSession, blocking: Boolean = false): Int = {
     val persistent = spark.sparkContext.getPersistentRDDs
     var dropped = 0

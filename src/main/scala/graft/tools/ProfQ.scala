@@ -1,41 +1,71 @@
 package graft.tools
 
-import org.apache.spark.scheduler._
+import java.util.concurrent.ConcurrentHashMap
 import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
 
-/** Per-query scheduling profile: times each named catalog query like
-  * QTime (1 warmup + timed reps, min) and reports how many Spark jobs,
-  * stages and tasks the timed run submitted plus the summed executor
-  * run time — separating scheduling/planning overhead (wall ≫ task
-  * time / many tiny stages) from genuine compute (task time ≈ wall ×
-  * cores). Measurement-only; not part of the driver contract.
+import org.apache.spark.scheduler._
+import org.apache.spark.sql.SparkSession
+
+/** Per-query scheduling profile: times each named catalog query (1 warmup,
+  * 1 timed run) and reports how many Spark jobs, stages and tasks the timed
+  * run submitted plus the summed executor run time — separating
+  * scheduling/planning overhead (wall ≫ task time / many tiny stages) from
+  * genuine compute (task time ≈ wall × cores). Measurement-only; Verify and
+  * Bench do not use it.
   *
   * Usage: runMain graft.tools.ProfQ <sfDir> <q1> [q2 ...]
   *        (q = "all" profiles the whole catalog)
   */
 object ProfQ {
+  final case class Profile(wallS: Double, jobs: Int, stages: Int, tasks: Int,
+                           taskS: Double, gcMs: Long)
+
+  /** Runs `body` under a job group of its own and counts only the jobs
+    * carrying that group, and only their stages and tasks, so work that
+    * other threads submit meanwhile is not charged to it. */
+  def profile(spark: SparkSession)(body: => Any): Profile = {
+    val sc = spark.sparkContext
+    val group = s"profq_${java.util.UUID.randomUUID()}"
+    val stageIds = ConcurrentHashMap.newKeySet[Int]()
+    val jobs = new AtomicInteger; val stages = new AtomicInteger
+    val tasks = new AtomicInteger; val taskMs = new AtomicLong
+    val gcMs = new AtomicLong
+    val listener = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit =
+        if (Option(j.properties).exists(_.getProperty("spark.jobGroup.id") == group)) {
+          jobs.incrementAndGet()
+          j.stageIds.foreach(stageIds.add)
+        }
+      override def onStageCompleted(s: SparkListenerStageCompleted): Unit =
+        if (stageIds.contains(s.stageInfo.stageId)) stages.incrementAndGet()
+      override def onTaskEnd(t: SparkListenerTaskEnd): Unit =
+        if (stageIds.contains(t.stageId)) {
+          tasks.incrementAndGet()
+          if (t.taskMetrics != null) {
+            taskMs.addAndGet(t.taskMetrics.executorRunTime)
+            gcMs.addAndGet(t.taskMetrics.jvmGCTime)
+          }
+        }
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "ProfQ")
+      val t0 = System.nanoTime()
+      try body finally sc.clearJobGroup()
+      val wall = (System.nanoTime() - t0) / 1e9
+      // every event of the body's jobs is posted by now; the drain
+      // delivers them to the listener
+      org.apache.spark.graft.BusDrain(sc)
+      Profile(wall, jobs.get, stages.get, tasks.get, taskMs.get / 1000.0, gcMs.get)
+    } finally sc.removeSparkListener(listener)
+  }
+
   def main(args: Array[String]): Unit = {
     require(args.length >= 2, "usage: ProfQ <sfDir> <q...|all>")
     val dir = args(0)
     val spark = graft.GraftSession.local(
       sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
     spark.sparkContext.setLogLevel("ERROR")
-    val jobs = new AtomicInteger; val stages = new AtomicInteger
-    val tasks = new AtomicInteger; val taskMs = new AtomicLong
-    val gcMs = new AtomicLong
-    val listener = new SparkListener {
-      override def onJobStart(j: SparkListenerJobStart): Unit = jobs.incrementAndGet()
-      override def onStageCompleted(s: SparkListenerStageCompleted): Unit = {
-        stages.incrementAndGet()
-        tasks.addAndGet(s.stageInfo.numTasks)
-      }
-      override def onTaskEnd(t: SparkListenerTaskEnd): Unit =
-        if (t.taskMetrics != null) {
-          taskMs.addAndGet(t.taskMetrics.executorRunTime)
-          gcMs.addAndGet(t.taskMetrics.jvmGCTime)
-        }
-    }
-    spark.sparkContext.addSparkListener(listener)
     val names =
       if (args(1) == "all") graft.SparkEntry.queries.keys.toSeq.sorted
       else args.drop(1).toSeq
@@ -45,13 +75,8 @@ object ProfQ {
       try {
         fn(spark, dir).count() // warmup
         graft.Blocks.sweep(spark, blocking = true)
-        jobs.set(0); stages.set(0); tasks.set(0); taskMs.set(0); gcMs.set(0)
-        val t0 = System.nanoTime()
-        fn(spark, dir).count()
-        val wall = (System.nanoTime() - t0) / 1e9
-        // listener events are async; give the bus a beat to drain
-        Thread.sleep(250)
-        println(f"$q,$wall%.3f,${jobs.get},${stages.get},${tasks.get},${taskMs.get / 1000.0}%.2f,${gcMs.get}")
+        val p = profile(spark)(fn(spark, dir).count())
+        println(f"$q,${p.wallS}%.3f,${p.jobs},${p.stages},${p.tasks},${p.taskS}%.2f,${p.gcMs}")
         graft.Blocks.sweep(spark, blocking = true)
       } catch { case e: Throwable =>
         println(s"$q,ERR,${e.getClass.getSimpleName}")

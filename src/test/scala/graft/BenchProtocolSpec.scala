@@ -1,50 +1,88 @@
 package graft
 
+import com.fasterxml.jackson.databind.ObjectMapper
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Pins the bench retry trigger (round-8 verdict item 2 + ADVICE): the
-  * predicate must catch weather victims without becoming a one-sided
-  * lower-the-headline filter — stable entries, however heavy, never
-  * retry; lucky-fast entries are left alone. */
+import scala.jdk.CollectionConverters._
+
+/** Pins the bench protocol: rotated full passes, the per-query min /
+  * median / dispersion record, and that a query which throws is reported
+  * as failed, never timed. */
 class BenchProtocolSpec extends AnyFunSuite {
-  private val med = 0.3 // a plausible catalog median
+  private def ok(t: Double, gc: Long = 0L): Bench.Run = Right((t, gc))
+  private val json = new ObjectMapper()
 
-  test("referenced entries: retry only when min exceeds 3x the committed reference") {
-    // genuinely heavy but stable: 6.0 vs ref 5.0 — never retried
-    assert(!Bench.isSuspect(Some(5.0), med, 6.0, 6.2, 6.0))
-    // weather victim: 4.0 vs ref 1.0 — retried
-    assert(Bench.isSuspect(Some(1.0), med, 4.0, 22.6, 4.0))
-    // exactly at the boundary stays (strictly greater triggers)
-    assert(!Bench.isSuspect(Some(1.0), med, 3.0, 3.0, 3.1))
-    // lucky-fast vs reference: never retried (min can't be unlucky-fast)
-    assert(!Bench.isSuspect(Some(2.0), med, 0.5, 0.5, 0.6))
-    // micro-entry references floor at 50 ms: 0.2 s vs ref 0.01 retries
-    // (3 x max(0.01, 0.05) = 0.15), scheduler jitter below it doesn't
-    assert(Bench.isSuspect(Some(0.01), med, 0.2, 0.2, 0.3))
-    assert(!Bench.isSuspect(Some(0.01), med, 0.1, 0.1, 0.12))
+  test("every query runs once per pass, at K distinct positions") {
+    for (n <- Seq(3, 4, 10, 417)) {
+      val names = (0 until n).map(i => f"q_$i%03d").reverse
+      val orders = (0 until Bench.Passes).map(Bench.passOrder(names, _))
+      orders.foreach(o => assert(o.sorted == names.sorted, s"n=$n"))
+      names.foreach { q =>
+        val positions = orders.map(_.indexOf(q))
+        assert(positions.distinct.size == Bench.Passes, s"n=$n $q at $positions")
+      }
+    }
+    assert(Bench.passOrder(Seq("c", "a", "b", "d", "e", "f"), 1) ==
+      Seq("c", "d", "e", "f", "a", "b"))
   }
 
-  test("in-catalog referenced entries: 2x the same-basis ref AND a material excess") {
-    // 2.3x an 0.1 s ic ref but only +0.13 s over it: scheduler jitter,
-    // not weather — min-of-2 already bounded it, no retry (r16 floor)
-    assert(!Bench.isSuspect(None, med, 0.23, 0.3, 0.23, icRef = Some(0.1)))
-    // 2x+ AND more than a quarter second over the ic ref: retried
-    assert(Bench.isSuspect(None, med, 1.1, 2.2, 1.1, icRef = Some(0.4)))
-    // material excess but under 2x: heavy-but-stable, never retried
-    assert(!Bench.isSuspect(None, med, 5.5, 5.5, 5.8, icRef = Some(4.0)))
-    // ic basis wins over the isolated ref when both exist (the
-    // isolated minimum would have fired at 3x here)
-    assert(!Bench.isSuspect(Some(0.2), med, 0.7, 0.7, 0.75, icRef = Some(0.6)))
+  test("min, median, dispersion and the outlier flag on given timings") {
+    assert(Bench.aggregate(Seq(ok(3.0, 7), ok(1.0, 5), ok(1.5, 9))) ==
+      Right(Bench.Stats(min = 1.0, median = 1.5, dispersion = 3.0, gcMs = 5)))
+    val stable = Bench.aggregate(Seq(ok(2.2), ok(2.0), ok(2.1))).toOption.get
+    assert(stable.min == 2.0 && stable.median == 2.1 && !stable.outlier)
+    assert(math.abs(stable.dispersion - 1.1) < 1e-12)
+    // a single stalled pass makes an outlier, but the min stays the
+    // unstalled time
+    val stalled = Bench.aggregate(Seq(ok(0.3), ok(9.0), ok(0.4))).toOption.get
+    assert(stalled.outlier && stalled.min == 0.3 && stalled.median == 0.4)
+    // dispersion exactly 2 is not an outlier
+    assert(!Bench.aggregate(Seq(ok(1.0), ok(2.0), ok(1.5))).toOption.get.outlier)
   }
 
-  test("unreferenced entries: need run disagreement AND a slow min") {
-    // both runs agree, entry just heavy: not a suspect
-    assert(!Bench.isSuspect(None, med, 5.0, 5.0, 5.4))
-    // >2x disagreement with a slow min: suspect
-    assert(Bench.isSuspect(None, med, 5.0, 5.0, 22.0))
-    // disagreement but the min is healthy (fast): the min is trusted
-    assert(!Bench.isSuspect(None, med, 0.4, 0.4, 2.0))
-    // disagreement, above 3x median but under the 1 s absolute floor
-    assert(!Bench.isSuspect(None, med, 0.95, 0.95, 2.5))
+  test("a run that throws is failed: left out of the totals, counted in n_failed") {
+    val boom = Bench.time(throw new IllegalStateException("bad \"plan\"\nline 2"))
+    assert(boom == Left("java.lang.IllegalStateException: bad \"plan\"\nline 2"))
+    assert(Bench.time(()).isRight)
+    val passes = Seq(
+      Map("q_a" -> ok(1.0), "q_b" -> ok(5.0), "q_c" -> ok(2.0)),
+      Map("q_a" -> ok(1.2), "q_b" -> boom, "q_c" -> ok(3.0)),
+      Map("q_a" -> ok(1.1), "q_b" -> ok(5.5), "q_c" -> ok(2.5)))
+    val s = Bench.summarize(passes)
+    assert(s.failed == Seq("q_b" -> boom.swap.toOption.get))
+    assert(s.timed.map(_._1) == Seq("q_a", "q_c"))
+    assert(math.abs(s.total - 3.0) < 1e-12)
+
+    val out = json.readTree(Bench.line(s, memoSec = 0.5, sf = "/data/sf0.1"))
+    assert(out.get("n_failed").asInt == 1)
+    assert(out.get("n_queries").asInt == 2)
+    assert(out.get("value").asDouble == 3.0)
+    assert(out.get("sec_per_query").asDouble == 1.5)
+    assert(out.get("total_with_memo").asDouble == 3.5)
+    assert(out.get("queries").fieldNames.asScala.toSet == Set("q_a", "q_c"))
+
+    val det = json.readTree(Bench.detail(s, passes, Map("m" -> 500L), "/data/sf0.1", "4"))
+    assert(det.get("failed").get("q_b").asText == boom.swap.toOption.get)
+    assert(det.get("queries").fieldNames.asScala.toSet == Set("q_a", "q_c"))
+    assert(det.get("passes").size == Bench.Passes)
+    assert(!det.get("passes").get(1).has("q_b") && det.get("passes").get(0).has("q_b"))
+  }
+
+  test("the stdout line keeps its keys and fits the 2000-character tail") {
+    val timed = (0 until 417).map(i =>
+      f"q_some_long_catalog_query_name_$i%03d" -> Bench.Stats(i * 0.01 + 0.1, 0.2, 1.0, 0))
+    val text = Bench.line(Bench.Summary(timed, Seq("q_x" -> "boom")), 12.0, "/data/sf0.1")
+    assert(text.length <= 2000, text.length)
+    val out = json.readTree(text)
+    assert(out.fieldNames.asScala.toSet == Set("metric", "value", "unit", "n_queries",
+      "sec_per_query", "protocol", "pre_retry_total", "n_retried", "n_failed",
+      "memo_build_sec", "total_with_memo", "queries", "queries_omitted", "sf"))
+    assert(out.get("protocol").asText == "min_of_3_rotated_passes+sweep")
+    assert(out.get("n_retried").asInt == 0)
+    assert(out.get("pre_retry_total").asDouble == out.get("value").asDouble)
+    val kept = out.get("queries").size
+    assert(kept > 0 && kept + out.get("queries_omitted").asInt == 417)
+    // the kept entries are the slowest ones
+    assert(out.get("queries").has("q_some_long_catalog_query_name_416"))
   }
 }
