@@ -17,7 +17,9 @@ package graft
   *
   * The first run of a memo's first consumer pays the shared build, which
   * MemoStats reports separately as memo_build_ms; later passes hit the warm
-  * memo, so the min is the query's own cost.
+  * memo, so the min is the query's own cost. A run that built a memo is
+  * marked in the detail file and left out of the dispersion: its extra time
+  * is a one-time build, not a stall.
   *
   * A run that throws marks its query failed: the error goes to the detail
   * file's `failed` map, and the query is left out of every total.
@@ -27,8 +29,9 @@ object Bench {
   val MaxDispersion = 2.0
   val Protocol = "min_of_3_rotated_passes+sweep"
 
-  /** One timed run: seconds and GC milliseconds, or the error it threw. */
-  type Run = Either[String, (Double, Long)]
+  /** One timed run: seconds, GC milliseconds and the milliseconds of memo
+    * builds it paid, or the error it threw. */
+  type Run = Either[String, (Double, Long, Long)]
 
   /** The queries of pass `p` in visiting order: sorted, rotated by p·n/Passes. */
   def passOrder(names: Seq[String], p: Int): Seq[String] = {
@@ -44,17 +47,22 @@ object Bench {
       .asScala.map(_.getCollectionTime).sum
   }
 
+  private def memoBuildMs: Long = MemoStats.snapshot.values.sum
+
   /** Times one run of `body`. A run that throws yields its error, never a time. */
   def time(body: => Any): Run = {
     val g0 = gcMs
+    val m0 = memoBuildMs
     val t0 = System.nanoTime()
     try {
       body
-      Right(((System.nanoTime() - t0) / 1e9, gcMs - g0))
+      Right(((System.nanoTime() - t0) / 1e9, gcMs - g0, memoBuildMs - m0))
     } catch { case e: Throwable => Left(s"${e.getClass.getName}: ${e.getMessage}") }
   }
 
-  /** `gcMs` is the GC time of the run that gave the min. */
+  /** `gcMs` is the GC time of the run that gave the min. `dispersion` is
+    * max/min over the runs that built no memo (over all runs when every
+    * run built one). */
   final case class Stats(min: Double, median: Double, dispersion: Double, gcMs: Long) {
     def outlier: Boolean = dispersion > MaxDispersion
   }
@@ -64,9 +72,11 @@ object Bench {
     val (errors, ok) = runs.partitionMap(identity)
     errors.headOption.toLeft {
       val ts = ok.map(_._1).sorted
-      val (min, gc) = ok.minBy(_._1)
+      val (min, gc, _) = ok.minBy(_._1)
+      val noMemo = ok.filter(_._3 == 0).map(_._1)
+      val steady = if (noMemo.nonEmpty) noMemo else ts
       // the middle run: Passes is odd
-      Stats(min, ts(ts.size / 2), ts.last / min, gc)
+      Stats(min, ts(ts.size / 2), steady.max / steady.min, gc)
     }
   }
 
@@ -121,7 +131,8 @@ object Bench {
 
   /** The detail file: every query's min, median, dispersion and per-pass
     * times, the outliers, the failed queries with their errors, GC of the
-    * min run and the memo builds. */
+    * min run, the memo builds, and per pass the runs that built a memo with
+    * the milliseconds they paid. */
   def detail(s: Summary, passes: Seq[Map[String, Run]], memoMs: Map[String, Long],
              sf: String, cpus: String): String = {
     def per(f: Stats => String) = jmap(s.timed.map { case (k, v) => k -> f(v) })
@@ -137,7 +148,9 @@ object Bench {
       "dispersion" -> per(v => fmt(v.dispersion)),
       "outliers" -> jmap(s.timed.collect { case (k, v) if v.outlier => k -> fmt(v.dispersion) }),
       "passes" -> passes.map(p => jmap(p.toSeq.sortBy(_._1)
-        .collect { case (k, Right((t, _))) => k -> fmt(t) })).mkString("[", ",", "]"),
+        .collect { case (k, Right((t, _, _))) => k -> fmt(t) })).mkString("[", ",", "]"),
+      "memo_runs" -> passes.map(p => jmap(p.toSeq.sortBy(_._1)
+        .collect { case (k, Right((_, _, m))) if m > 0 => k -> m.toString })).mkString("[", ",", "]"),
       "failed" -> jmap(s.failed.map { case (k, e) => k -> jstr(e) }),
       "gc_ms" -> per(_.gcMs.toString),
       "memo_build_ms" -> jmap(memoMs.toSeq.sortBy(_._1).map { case (k, v) => k -> v.toString })))

@@ -476,7 +476,7 @@ object RefQueries {
 
     // E18 PREDICATE DELETE exercised through the oracle gate: three
     // files with known disjoint key ranges take a retention-shaped
-    // deleteWhere. The output folds the DeleteResult accounting INTO
+    // deleteWhere. The output folds the DmlResult accounting INTO
     // the compared frame, so the hash check proves not just the final
     // row set but the classification itself: the fully-covered file
     // must drop METADATA-ONLY (files_dropped=1 — at 100 TB this is a

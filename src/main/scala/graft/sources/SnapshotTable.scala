@@ -2776,48 +2776,6 @@ final class SnapshotTable(root: String, val store: LogStore) {
     else None
   }
 
-  /** COPY-ON-WRITE MERGE — the row-level upsert/delete every lakehouse
-    * format builds on copy-on-write first (Delta/Iceberg/Hudi all
-    * shipped this shape before merge-on-read): current-snapshot rows
-    * whose `keys` match a delta row are REPLACED by that delta row (or
-    * DROPPED when the delta row's `deleteCol` is true); unmatched
-    * delta rows are INSERTED. The work is file-local, in three steps:
-    *
-    *  1. TOUCH DETECTION at zone-map granularity: each file's
-    *     [min, max] for `keys.head` (already in the manifest — zero
-    *     footer I/O) is joined BROADCAST against the delta keys in ONE
-    *     distributed pass over the delta, so a file is rewritten only
-    *     when the delta provably carries a key inside its range. On a
-    *     table clustered by the merge key ([[compact]]'s sortKey) a
-    *     narrow delta touches only the files covering its key range —
-    *     merge cost tracks the TOUCHED data, never the table size,
-    *     which is the property that makes daily upserts viable at
-    *     100 TB. Files without stats (or with a key type the stat
-    *     domain can't compare) are rewritten conservatively.
-    *  2. REWRITE: touched files are read back under the manifest
-    *     schema, matched keys are anti-joined out, the delta's
-    *     non-delete rows are unioned in, and the result lands as a
-    *     fresh invisible batch. Untouched files' manifest lines AND
-    *     zone-map stats carry forward verbatim — no footer re-read,
-    *     no data copy. An insert-only merge (no range overlap)
-    *     rewrites ZERO files and degenerates to an append.
-    *  3. PUBLISH: one atomic manifest put-if-absent against the head
-    *     resolved at merge start. A concurrent commit landing
-    *     mid-merge makes the publish REFUSE (the rewrite's base is
-    *     stale) and clean up its batch, rather than blindly retry —
-    *     rerun the merge against the new head. Delta Lake surfaces
-    *     the same conflict the same way (ConcurrentAppendException).
-    *
-    * Contract: `delta` must be key-unique (one row per key — SQL
-    * MERGE's own rule; duplicate delta keys make the surviving row
-    * nondeterministic) with non-null keys, and its columns must equal
-    * the table's (plus `deleteCol`). Key-uniqueness is ENFORCED with
-    * one bounded aggregation over the delta before any rewrite —
-    * the same cardinality-violation error standard SQL MERGE and
-    * Delta raise ("multiple source rows matched"). Upsert rows are
-    * cast to the table's column types so the written files always
-    * match the manifest `#schema=` line. `targetFiles` bounds the
-    * rewrite fan-out; 0 = one output file per touched file. */
   /** Zone-map touch detection, shared by [[merge]] and [[readMatchable]]:
     * which manifest files COULD contain a `pk` value present in `delta`.
     * Each file's [min, max] for pk (already in the manifest — zero
@@ -2894,12 +2852,43 @@ final class SnapshotTable(root: String, val store: LogStore) {
       mapping = mapping)
   }
 
+  /** KEYED MERGE, the row-level upsert: current-snapshot rows whose
+    * `keys` match a delta row are REPLACED by that delta row (or
+    * DROPPED when the delta row's `deleteCol` is true); unmatched delta
+    * rows are INSERTED. It runs on the mutation core
+    * ([[classifyMatches]]); what merge adds:
+    *
+    *  - CANDIDATES by key-touch detection ([[touchDetect]]): each
+    *    file's [min, max] for `keys.head` (already in the manifest —
+    *    zero footer I/O) is joined BROADCAST against the delta keys in
+    *    one distributed pass, so on a table clustered by the merge key
+    *    ([[compact]]'s sortKey) a narrow delta touches only the files
+    *    covering its key range. Files without usable stats are
+    *    candidates conservatively; an insert-only merge touches none
+    *    and degenerates to an append.
+    *  - CARDINALITY: duplicate delta keys are an error only when they
+    *    match an existing target row — SQL MERGE's cardinality
+    *    violation, Delta's "multiple source rows matched". Keys must
+    *    be non-null.
+    *  - ROWS WRITTEN: rewritten files lose their matched keys and the
+    *    delta's non-delete rows are unioned in, cast to the table's
+    *    column types so the files match the `#schema=` line. CHECK
+    *    constraints gate them.
+    *  - SCHEMA: the delta's columns must equal the table's (plus
+    *    `deleteCol`); with `evolveSchema` the extra delta columns
+    *    become nullable table columns in the same commit.
+    *  - CONFLICTS: a concurrent append rebases iff key-touch detection
+    *    proves none of its files can hold a delta key.
+    *
+    * `expectedBase` refuses a merge whose head moved after the caller
+    * classified its delta. `targetFiles` bounds the write fan-out;
+    * 0 = one output file per rewritten file. */
   def merge(spark: SparkSession, delta: DataFrame, keys: Seq[String],
             deleteCol: Option[String] = None,
             targetFiles: Int = 0,
             expectedBase: Option[Long] = None,
             evolveSchema: Boolean = false,
-            dvMaxRowsPerFile: Int = 0): SnapshotTable.MergeResult = {
+            dvMaxRowsPerFile: Int = 0): SnapshotTable.DmlResult = {
     import org.apache.spark.sql.functions._
     require(keys.nonEmpty, "merge needs at least one key column")
     val v = currentVersion()
@@ -3007,10 +2996,10 @@ final class SnapshotTable(root: String, val store: LogStore) {
     }
 
     // ---- 1. touch detection ------------------------------------------
-    val touched: Set[String] = touchDetect(spark, deltaCk, rels, zm, pk)
-    val untouched = rels.filterNot(touched)
+    val touched = touchDetect(spark, deltaCk, rels, zm, pk)
+    val untouched = rels.count(r => !touched(r))
 
-    // ---- 2. rewrite / merge-on-read ----------------------------------
+    // ---- 2. the mutation core ----------------------------------------
     val upserts0 = deleteCol match {
       case Some(c) =>
         deltaCk.filter(!coalesce(col(c).cast("boolean"), lit(false))).drop(c)
@@ -3027,121 +3016,49 @@ final class SnapshotTable(root: String, val store: LogStore) {
     // deletes them — the upsert rows re-enter through the union
     val deltaKeys = deltaCk.select(keys.map(col): _*).distinct()
     val dvs = dvRelOf(v)
+    def scanMatched(onRels: Seq[String]): DataFrame =
+      liveRowsWithPos(spark, schema, onRels, dvs, mapping)
+        .join(deltaKeys, keys, "left_semi")
+    val m = classifyMatches(touched.toSeq.sorted, dvMaxRowsPerFile, scanMatched)
+    vectorOut(spark, schema, m, scanMatched, dvs, mapping) { vo =>
+      // deletion vectors applied: a DV-deleted row must not be
+      // resurrected by the rewrite of its file
+      val survivors =
+        if (m.rewrites.isEmpty) None
+        else Some(readFilesDvAware(spark, schema, m.rewrites, dvs, mapping = mapping)
+          .join(deltaKeys, keys, "left_anti"))
+      // a delete-only merge-on-read pass (no rewrites, no upserts) has
+      // nothing to write — skipping the batch avoids appending a junk
+      // zero-row file per trickle delete-merge (the upsert emptiness
+      // probe is one limit(1) over the PINNED delta, not a table scan)
+      val rows =
+        if (m.rewrites.isEmpty && upserts.limit(1).count() == 0) None
+        else Some(survivors.fold(upserts)(_.unionByName(upserts)))
+      val written = writeRows(rows, targetFiles, m, vo, mapping)(
+        enforceChecks(spark, _, mapping, v))
+      publishDml(v, Some(schema), "merge", "merge", mapLineOut, untouched,
+        Nil, m, vo, written,
+        // a concurrent append is benign iff key-touch detection proves
+        // none of its files can hold a delta key (stat-less files are
+        // touch-detected conservatively and conflict)
+        (added, head) =>
+          added.isEmpty || {
+            val addedAbs = added.map(abs).toSet
+            touchDetect(spark, deltaCk, added,
+              logicalZoneMaps(zoneMapsOf(head).view.filterKeys(addedAbs).toMap,
+                mapping), pk).isEmpty
+          })
+    }
 
-    // MERGE-ON-READ phase (dvMaxRowsPerFile > 0): matched target rows
-    // VECTOR OUT of their files instead of rewriting them — carried-
-    // along rows stay physically in place, the matched old versions
-    // pre-materialize as the delete-side change sidecar, and only the
-    // upserts land as new files. A narrow daily upsert commits
-    // O(matched + delta rows) bytes; a file with more matches than
-    // the cap still rewrites copy-on-write (cheaper than carrying a
-    // near-full vector), zero-match touch-detected files carry
-    // forward by reference.
-    val touchedSorted = touched.toSeq.sorted
-    var dvCheckpoint: Option[DataFrame] = None
-    val (kept, dvClass, dvNew, rewriteClass, sidecarOut, cdcNew, dvRowsNew) =
-      if (dvMaxRowsPerFile <= 0 || touched.isEmpty)
-        (Seq.empty[String], Seq.empty[String],
-          Map.empty[String, DeletionVectors.Dv], touchedSorted,
-          Seq.empty[Path], Seq.empty[String], 0L)
-      else {
-        def scanMatched(onRels: Seq[String]): DataFrame =
-          liveRowsWithPos(spark, schema, onRels, dvs, mapping)
-            .join(deltaKeys, keys, "left_semi")
-        val counts: Map[String, Long] = scanMatched(touchedSorted)
-          .groupBy("__dv_file").agg(count(lit(1)).as("__n"))
-          .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-        val zeroMatch = touchedSorted.filterNot(counts.contains)
-        val dvC = touchedSorted.filter(r =>
-          counts.get(r).exists(n => n > 0 && n <= dvMaxRowsPerFile))
-        val rw = touchedSorted.filter(r =>
-          counts.get(r).exists(_ > dvMaxRowsPerFile))
-        if (dvC.isEmpty)
-          (zeroMatch, Seq.empty[String], Map.empty[String, DeletionVectors.Dv],
-            rw, Seq.empty[Path], Seq.empty[String], 0L)
-        else {
-          val matched = scanMatched(dvC).localCheckpoint()
-          dvCheckpoint = Some(matched)
-          val newRows = dvC.map(counts).sum
-          val (merged, outDirs, cdcLines) = dvMaterialize(spark, schema,
-            matched, dvs.view.filterKeys(dvC.toSet).toMap, newRows, mapping)
-          (zeroMatch, dvC, merged, rw, outDirs, cdcLines, newRows)
-        }
-      }
-
-    val survivors =
-      if (rewriteClass.isEmpty)
-        spark.createDataFrame(
-          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-      else
-        // deletion vectors applied: a DV-deleted row must not be
-        // resurrected by the rewrite of its file
-        readFilesDvAware(spark, schema, rewriteClass, dvs, mapping = mapping)
-          .join(deltaKeys, keys, "left_anti")
-    val rewrite = survivors.unionByName(upserts)
-    // a delete-only merge-on-read pass (no rewrites, no upserts) has
-    // nothing to write — skipping the batch avoids appending a junk
-    // zero-row file per trickle delete-merge (the upsert emptiness
-    // probe is one limit(1) over the PINNED delta, not a table scan)
-    val nothingToWrite = rewriteClass.isEmpty && upserts.limit(1).count() == 0
-    val (out, newFiles, zmNew) = try {
-      if (nothingToWrite) (None: Option[Path], Seq.empty[String], Seq.empty[String])
-      else {
-        val nOut = if (targetFiles > 0) targetFiles
-          else math.max(1, rewriteClass.size)
-        val (o, nf, zn, _) = writeBatch(
-          toPhysical(rewrite, mapping).repartition(nOut), partCluster = false)
-        // CHECK constraints gate the merge's new row versions
-        try enforceChecks(spark, nf, mapping, v)
-        catch { case e: Throwable =>
-          SnapshotTable.deleteRecursively(o)
-          sidecarOut.foreach(SnapshotTable.deleteRecursively)
-          throw e }
-        (Some(o), nf, zn)
-      }
-    } finally dvCheckpoint.foreach(_.unpersist(blocking = false))
-
-    // ---- 3. publish (refuse, don't retry, on a concurrent commit) ----
-    // DELTA manifest: kept files (and their stats and carried vectors)
-    // ride the fold untouched — the commit writes O(touched) lines:
-    // #rm for the rewritten files, replacement #dv lines for the
-    // DV-class files (union done executor-side in dvMaterialize),
-    // stats + #add for the fresh batch
-    val bodyLines = Seq(s"#schema=${SnapshotTable.bareDdl(schema)}",
-        s"#ts=${System.currentTimeMillis()}", "#op=merge") ++
-      mapLineOut ++
-      zmNew ++
-      dvClass.map(rel => DeletionVectors.lineOf(rel, dvNew(rel))) ++
-      cdcNew ++
-      rewriteClass.map(rel => s"#rm=$rel") ++
-      newFiles.map(rel => s"#add=$rel")
-    val committed = publishRebaseable(v, bodyLines, "merge",
-      () => {
-        out.foreach(SnapshotTable.deleteRecursively)
-        sidecarOut.foreach(SnapshotTable.deleteRecursively)
-      },
-      // a concurrent append is benign iff key-touch detection proves
-      // none of its files can hold a delta key (stat-less files are
-      // touch-detected conservatively and conflict)
-      (added, w) =>
-        added.isEmpty || {
-          val addedAbs = added.map(abs).toSet
-          touchDetect(spark, deltaCk, added,
-            logicalZoneMaps(zoneMapsOf(w).view.filterKeys(addedAbs).toMap,
-              mapping), pk).isEmpty
-        })
-    SnapshotTable.MergeResult(committed, filesRewritten = rewriteClass.size,
-      filesUntouched = untouched.size + kept.size, filesAdded = newFiles.size,
-      filesDvUpdated = dvClass.size,
-      dvRowsAdded = dvRowsNew)
-
-    } finally deltaCk.unpersist(blocking = false)
+    } finally graft.Blocks.release(deltaCk)
   }
 
-  /** PREDICATE DELETE with three-way zone-map file classification —
-    * the other half of row-level mutation (see [[merge]] for keyed
-    * upserts). Each file of the current snapshot is classified from
-    * its manifest stats, with zero data I/O:
+  /** PREDICATE DELETE (`DELETE FROM t WHERE p`): rows where `condition`
+    * is true leave the table; null-predicate rows survive (standard SQL
+    * DELETE semantics). It runs on the mutation core
+    * ([[classifyMatches]]); what deleteWhere adds is a three-way
+    * classification of every file from its manifest stats, with zero
+    * data I/O:
     *
     *  - predicate provably matches NO rows → file UNTOUCHED (its
     *    manifest line and stats carry forward verbatim);
@@ -3152,22 +3069,21 @@ final class SnapshotTable(root: String, val store: LogStore) {
     *    retention sweep that costs O(manifest) and one that rewrites
     *    the table. Requires a recorded zero null count on every
     *    referenced column (a null row matches no predicate and must
-    *    survive), which the `#zm=` lines now carry;
+    *    survive), which the `#zm=` lines carry;
     *  - anything else (straddling ranges, unknown shapes, missing
-    *    stats) → file REWRITTEN with the non-matching rows kept
-    *    (`NOT coalesce(pred, false)` — null-predicate rows survive,
-    *    standard SQL DELETE semantics).
+    *    stats) → a candidate of the core, whose rewrites keep the
+    *    non-matching rows (`NOT coalesce(pred, false)`).
     *
     * On a retention-shaped predicate over a table clustered by that
     * column ([[compact]]'s sortKey), almost every affected file is in
-    * the drop class and at most the two boundary files rewrite. A
-    * no-op delete (nothing dropped, nothing rewritten) publishes NO
-    * new version. Publish refuses on a concurrent commit, as in
-    * [[merge]]. */
+    * the drop class and at most the two boundary files straddle. A
+    * no-op delete publishes NO new version. No CHECK constraint runs:
+    * removing rows cannot break one. A concurrent append rebases iff
+    * its files provably hold no matching row. */
   def deleteWhere(spark: SparkSession,
                   condition: org.apache.spark.sql.Column,
                   targetFiles: Int = 0,
-                  dvMaxRowsPerFile: Int = 0): SnapshotTable.DeleteResult = {
+                  dvMaxRowsPerFile: Int = 0): SnapshotTable.DmlResult = {
     import org.apache.spark.sql.functions._
     val v = currentVersion()
     require(v >= 0, s"deleteWhere at $root: table has no committed snapshot")
@@ -3184,7 +3100,7 @@ final class SnapshotTable(root: String, val store: LogStore) {
 
     val cond = resolvePredicate(spark, v, condition, schema)
 
-    val (untouched0, dropped, straddling) = {
+    val (untouched, dropped, straddling) = {
       val u = Seq.newBuilder[String]
       val d = Seq.newBuilder[String]
       val r = Seq.newBuilder[String]
@@ -3197,111 +3113,28 @@ final class SnapshotTable(root: String, val store: LogStore) {
       (u.result(), d.result(), r.result())
     }
     if (dropped.isEmpty && straddling.isEmpty)
-      return SnapshotTable.DeleteResult(v, 0, 0, untouched0.size, 0)
+      return SnapshotTable.DmlResult(v, 0, 0, untouched.size, 0)
 
     lazy val sch = schema.getOrElse(
       spark.read.parquet(straddling.map(abs): _*).schema)
     val pred = coalesce(condition, lit(false))
+    def scanMatched(onRels: Seq[String]): DataFrame =
+      liveRowsWithPos(spark, sch, onRels, dvs, mapping).filter(pred)
+    val m = classifyMatches(straddling, dvMaxRowsPerFile, scanMatched)
+    if (dropped.isEmpty && m.dvClass.isEmpty && m.rewrites.isEmpty)
+      return SnapshotTable.DmlResult(v, 0, 0, untouched.size + m.zeroMatch.size, 0)
 
-    // MERGE-ON-READ phase (dvMaxRowsPerFile > 0): straddling files do
-    // NOT rewrite — the matched LIVE row positions land as `#dv=`
-    // deletion vectors and the matched rows pre-materialize as a
-    // `#cdc=` change sidecar, so a one-row delete commits O(deleted
-    // rows) bytes instead of rewriting its whole file. Per-file match
-    // counts classify first (one column-pruned aggregation): zero
-    // matches -> untouched by reference; over the cap -> copy-on-write
-    // rewrite (a delete touching most of a file is cheaper rewritten
-    // than carried as a vector — Delta's own fallback heuristic).
-    val (untouched, dvClass, dvNew, rewrites, sidecarOut, cdcNew, dvRowsNew) =
-      if (dvMaxRowsPerFile <= 0 || straddling.isEmpty)
-        (untouched0, Seq.empty[String], Map.empty[String, DeletionVectors.Dv],
-          straddling, Seq.empty[Path], Seq.empty[String], 0L)
-      else {
-        def scanMatched(onRels: Seq[String]): DataFrame =
-          liveRowsWithPos(spark, sch, onRels, dvs, mapping).filter(pred)
-        val counts: Map[String, Long] = scanMatched(straddling)
-          .groupBy("__dv_file").agg(count(lit(1)).as("__n"))
-          .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-        val zeroMatch = straddling.filterNot(counts.contains)
-        val dvC = straddling.filter(r =>
-          counts.get(r).exists(n => n > 0 && n <= dvMaxRowsPerFile))
-        val rw = straddling.filter(r =>
-          counts.get(r).exists(_ > dvMaxRowsPerFile))
-        if (dvC.isEmpty)
-          (untouched0 ++ zeroMatch, Seq.empty[String],
-            Map.empty[String, DeletionVectors.Dv], rw, Seq.empty[Path],
-            Seq.empty[String], 0L)
-        else {
-          // one bounded materialization feeds both the executor-side
-          // vector encode and the change-sidecar write (<= cap rows
-          // per DV'd file)
-          val matched = scanMatched(dvC).localCheckpoint()
-          try {
-            val newRows = dvC.map(counts).sum
-            val (merged, outDirs, cdcLines) = dvMaterialize(spark, sch,
-              matched, dvs.view.filterKeys(dvC.toSet).toMap, newRows,
-              mapping)
-            (untouched0 ++ zeroMatch, dvC, merged, rw, outDirs, cdcLines,
-              newRows)
-          } finally matched.unpersist(blocking = false)
-        }
-      }
-    if (dropped.isEmpty && dvClass.isEmpty && rewrites.isEmpty) {
-      sidecarOut.foreach(SnapshotTable.deleteRecursively)
-      return SnapshotTable.DeleteResult(v, 0, 0, untouched.size, 0)
+    vectorOut(spark, sch, m, scanMatched, dvs, mapping) { vo =>
+      // DV-aware survivor read: rows already deleted by an earlier
+      // vector must not resurrect in the rewritten file
+      val kept =
+        if (m.rewrites.isEmpty) None
+        else Some(readFilesDvAware(spark, sch, m.rewrites, dvs, mapping = mapping)
+          .filter(!pred))
+      val written = writeRows(kept, targetFiles, m, vo, mapping)(_ => ())
+      publishDml(v, schema, "delete", "deleteWhere", Nil, untouched.size,
+        dropped, m, vo, written, appendCannotMatch(cond, mapping))
     }
-
-    val (out, newFiles, zmNew) =
-      if (rewrites.isEmpty) (None, Seq.empty[String], Seq.empty[String])
-      else {
-        // DV-aware survivor read: rows already deleted by an earlier
-        // vector must not resurrect in the rewritten file; mapped
-        // tables filter logically and write back the physical names
-        val kept = readFilesDvAware(spark, sch, rewrites, dvs,
-            mapping = mapping)
-          .filter(!pred)
-        val nOut = if (targetFiles > 0) targetFiles else math.max(1, rewrites.size)
-        val (o, nf, zn, _) = writeBatch(
-          toPhysical(kept, mapping).repartition(nOut), partCluster = false)
-        (Some(o), nf, zn)
-      }
-
-    // DELTA manifest: files that stay in the listing keep their stats
-    // (superset min/max stays sound under row deletion) and their
-    // vectors through the fold; DV-class files get replacement lines
-    // (old ∪ new positions, unioned executor-side); dropped and
-    // rewritten files leave via #rm — O(touched) lines total, which is
-    // what makes a retention sweep on a million-file table commit
-    // kilobytes
-    val bodyLines = schema.map(s =>
-        s"#schema=${SnapshotTable.bareDdl(s)}").toSeq ++
-      Seq(s"#ts=${System.currentTimeMillis()}", "#op=delete") ++
-      zmNew ++
-      dvClass.map(rel => DeletionVectors.lineOf(rel, dvNew(rel))) ++
-      cdcNew ++
-      (dropped ++ rewrites).map(rel => s"#rm=$rel") ++
-      newFiles.map(rel => s"#add=$rel")
-    val committed = publishRebaseable(v, bodyLines, "deleteWhere",
-      () => {
-        out.foreach(SnapshotTable.deleteRecursively)
-        sidecarOut.foreach(SnapshotTable.deleteRecursively)
-      },
-      // a concurrent append is benign iff every file it added provably
-      // holds no predicate-matching row (a stat-less file conflicts)
-      (added, w) => {
-        // translate only the ADDED files' stats, not the whole table's
-        val addedAbs = added.map(abs).toSet
-        val zmW = logicalZoneMaps(
-          zoneMapsOf(w).view.filterKeys(addedAbs).toMap, mapping)
-        added.forall { rel =>
-          val st = zmW.getOrElse(abs(rel), Map.empty[String, ZoneMaps.ColStat])
-          st.nonEmpty && ZoneMaps.provablyEmpty(cond, st)
-        }
-      })
-    SnapshotTable.DeleteResult(committed, filesDropped = dropped.size,
-      filesRewritten = rewrites.size, filesUntouched = untouched.size,
-      filesAdded = newFiles.size, filesDvUpdated = dvClass.size,
-      dvRowsAdded = dvRowsNew)
   }
 
   /** Resolve a user predicate `Column` against snapshot `v`'s schema
@@ -3334,31 +3167,32 @@ final class SnapshotTable(root: String, val store: LogStore) {
     }
   }
 
-  /** PREDICATE UPDATE (copy-on-write) — `UPDATE t SET ... WHERE p` for
-    * snapshot tables, completing the DML triad with [[merge]] (keyed
-    * upserts) and [[deleteWhere]] (predicate deletes). Files where the
-    * predicate is PROVABLY empty on the manifest zone maps carry
-    * forward by reference — manifest line and stats verbatim, zero
-    * I/O — and only the files that might hold matching rows rewrite,
-    * with each assignment applied under `when(coalesce(p, false))`
-    * (null-predicate rows keep their values: SQL UPDATE semantics).
-    * There is no metadata-only fast path here by nature: a changed
-    * row must be written somewhere. On a clustered table
-    * ([[compact]]'s sortKey) a key-range update rewrites only the
-    * covering files — the 100 TB cost is O(matched files), not
-    * O(table).
+  /** PREDICATE UPDATE — `UPDATE t SET ... WHERE p` for snapshot
+    * tables: each assignment applies to the rows where `condition` is
+    * true; null-predicate rows keep their values (SQL UPDATE
+    * semantics). It runs on the mutation core ([[classifyMatches]]);
+    * what updateWhere adds:
     *
-    * Assignments must target existing columns and are cast back to
-    * the column's manifest type, so the table schema is invariant
-    * under updates (the written files always match the `#schema=`
-    * line). A no-op update (no file could match) publishes NO new
-    * version. Publish refuses on a concurrent commit, as in
-    * [[merge]]. */
+    *  - CANDIDATES: every file where the predicate is not PROVABLY
+    *    empty on the manifest zone maps; the rest carry forward by
+    *    reference. There is no metadata-only class: a changed row must
+    *    be written somewhere. On a clustered table ([[compact]]'s
+    *    sortKey) a key-range update touches only the covering files.
+    *  - ROWS WRITTEN: rewritten files apply each assignment under
+    *    `when(coalesce(p, false))`; vectored-out rows, which all
+    *    match, take it unconditionally. Assignments must target
+    *    existing columns and are cast back to the column's manifest
+    *    type, so the table schema is invariant under updates. CHECK
+    *    constraints gate the new row versions.
+    *  - CONFLICTS: a concurrent append rebases iff its files provably
+    *    hold no matching row.
+    *
+    * A no-op update (no file could match) publishes NO new version. */
   def updateWhere(spark: SparkSession,
                   condition: org.apache.spark.sql.Column,
                   set: Map[String, org.apache.spark.sql.Column],
                   targetFiles: Int = 0,
-                  dvMaxRowsPerFile: Int = 0): SnapshotTable.UpdateResult = {
+                  dvMaxRowsPerFile: Int = 0): SnapshotTable.DmlResult = {
     import org.apache.spark.sql.functions._
     require(set.nonEmpty, s"updateWhere at $root: empty SET clause")
     val v = currentVersion()
@@ -3378,137 +3212,186 @@ final class SnapshotTable(root: String, val store: LogStore) {
         s"updateWhere at $root: SET targets unknown column(s) ${unknown.mkString(", ")}")
     }
     val cond = resolvePredicate(spark, v, condition, schema)
-    val (untouched0, candidates) = rels.partition { rel =>
+    val (untouched, candidates) = rels.partition { rel =>
       val stats = zm.getOrElse(abs(rel), Map.empty[String, ZoneMaps.ColStat])
       stats.nonEmpty && ZoneMaps.provablyEmpty(cond, stats)
     }
     if (candidates.isEmpty)
-      return SnapshotTable.UpdateResult(v, 0, untouched0.size, 0)
+      return SnapshotTable.DmlResult(v, 0, 0, untouched.size, 0)
 
     val sch = schema.getOrElse(spark.read.parquet(candidates.map(abs): _*).schema)
     val unknown = set.keySet -- sch.fieldNames.toSet
     require(unknown.isEmpty,
       s"updateWhere at $root: SET targets unknown column(s) ${unknown.mkString(", ")}")
     val pred = coalesce(condition, lit(false))
+    def scanMatched(onRels: Seq[String]): DataFrame =
+      liveRowsWithPos(spark, sch, onRels, dvs, mapping).filter(pred)
+    val m = classifyMatches(candidates, dvMaxRowsPerFile, scanMatched)
+    if (m.dvClass.isEmpty && m.rewrites.isEmpty)
+      return SnapshotTable.DmlResult(v, 0, 0, untouched.size + m.zeroMatch.size, 0)
 
-    // MERGE-ON-READ phase (dvMaxRowsPerFile > 0): an UPDATE is a
-    // row-level DELETE of the old versions plus an APPEND of the new
-    // ones — matched live rows vector out of their files (`#dv=`),
-    // their old versions pre-materialize as the delete-side change
-    // sidecar, and the SET-applied rows land as a fresh appended
-    // batch. A one-row UPDATE commits O(changed rows) bytes; files
-    // with more matches than the cap rewrite copy-on-write, zero
-    // matches carry forward by reference.
-    var dvCheckpoint: Option[DataFrame] = None
-    val (untouched, dvClass, dvNew, rewrites, sidecarOut, cdcNew,
-         dvUpdatedRows, dvRowsNew) =
-      if (dvMaxRowsPerFile <= 0)
-        (untouched0, Seq.empty[String], Map.empty[String, DeletionVectors.Dv],
-          candidates, Seq.empty[Path], Seq.empty[String],
-          None: Option[DataFrame], 0L)
-      else {
-        def scanMatched(onRels: Seq[String]): DataFrame =
-          liveRowsWithPos(spark, sch, onRels, dvs, mapping).filter(pred)
-        val counts: Map[String, Long] = scanMatched(candidates)
-          .groupBy("__dv_file").agg(count(lit(1)).as("__n"))
-          .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-        val zeroMatch = candidates.filterNot(counts.contains)
-        val dvC = candidates.filter(r =>
-          counts.get(r).exists(n => n > 0 && n <= dvMaxRowsPerFile))
-        val rw = candidates.filter(r =>
-          counts.get(r).exists(_ > dvMaxRowsPerFile))
-        if (dvC.isEmpty)
-          (untouched0 ++ zeroMatch, Seq.empty[String],
-            Map.empty[String, DeletionVectors.Dv], rw, Seq.empty[Path],
-            Seq.empty[String], None: Option[DataFrame], 0L)
-        else {
-          val matched = scanMatched(dvC).localCheckpoint()
-          dvCheckpoint = Some(matched) // unpersisted after the append lands
-          val newRows = dvC.map(counts).sum
-          val (merged, outDirs, cdcLines) = dvMaterialize(spark, sch,
-            matched, dvs.view.filterKeys(dvC.toSet).toMap, newRows, mapping)
-          // the new row versions: every matched row has pred true, so
-          // assignments apply unconditionally, cast to manifest types
-          val applied = matched.select(sch.fields.map { f =>
+    vectorOut(spark, sch, m, scanMatched, dvs, mapping) { vo =>
+      // deletion vectors applied: DV-deleted rows neither update nor
+      // survive into the rewritten files
+      val rewritten =
+        if (m.rewrites.isEmpty) None
+        else Some(readFilesDvAware(spark, sch, m.rewrites, dvs, mapping = mapping)
+          .select(sch.fields.map { f =>
             set.get(f.name) match {
-              case Some(e) => e.cast(f.dataType).as(f.name)
+              case Some(e) => when(pred, e.cast(f.dataType)).otherwise(col(f.name)).as(f.name)
               case None => col(f.name)
             }
-          }.toIndexedSeq: _*)
-          (untouched0 ++ zeroMatch, dvC, merged, rw, outDirs, cdcLines,
-            Some(applied), newRows)
+          }.toIndexedSeq: _*))
+      // the new versions of the vectored-out rows: every one has pred
+      // true, so assignments apply unconditionally
+      val applied = vo.matched.map(_.select(sch.fields.map { f =>
+        set.get(f.name) match {
+          case Some(e) => e.cast(f.dataType).as(f.name)
+          case None => col(f.name)
         }
-      }
-    if (dvClass.isEmpty && rewrites.isEmpty) {
-      sidecarOut.foreach(SnapshotTable.deleteRecursively)
-      return SnapshotTable.UpdateResult(v, 0, untouched.size, 0)
+      }.toIndexedSeq: _*))
+      val written = writeRows((rewritten ++ applied).reduceOption(_ unionByName _),
+        targetFiles, m, vo, mapping)(enforceChecks(spark, _, mapping, v))
+      publishDml(v, Some(sch), "update", "updateWhere", Nil, untouched.size,
+        Nil, m, vo, written, appendCannotMatch(cond, mapping))
     }
-
-    val projected = sch.fields.map { f =>
-      set.get(f.name) match {
-        case Some(e) => when(pred, e.cast(f.dataType)).otherwise(col(f.name)).as(f.name)
-        case None => col(f.name)
-      }
-    }
-    // rewrite class (or the whole candidate set in copy-on-write mode):
-    // deletion vectors applied — DV-deleted rows neither update nor
-    // survive into the rewritten files
-    val rewritten =
-      if (rewrites.isEmpty) None
-      else Some(readFilesDvAware(spark, sch, rewrites, dvs, mapping = mapping)
-        .select(projected.toIndexedSeq: _*))
-    val toWrite = (rewritten, dvUpdatedRows) match {
-      case (Some(a), Some(b)) => Some(a.unionByName(b))
-      case (a, b) => a.orElse(b)
-    }
-    val (out, newFiles, zmNew) = try {
-      toWrite match {
-        case None => (None, Seq.empty[String], Seq.empty[String])
-        case Some(df) =>
-          val nOut = if (targetFiles > 0) targetFiles
-            else math.max(1, rewrites.size)
-          val (o, nf, zn, _) = writeBatch(
-            toPhysical(df, mapping).repartition(nOut), partCluster = false)
-          // CHECK constraints gate the updated row versions
-          try enforceChecks(spark, nf, mapping, v)
-          catch { case e: Throwable =>
-            SnapshotTable.deleteRecursively(o)
-            sidecarOut.foreach(SnapshotTable.deleteRecursively)
-            throw e }
-          (Some(o), nf, zn)
-      }
-    } finally dvCheckpoint.foreach(_.unpersist(blocking = false))
-
-    // DELTA manifest, same shape as deleteWhere: kept files (stats,
-    // carried vectors) ride the fold, O(touched) lines written
-    val bodyLines = Seq(s"#schema=${SnapshotTable.bareDdl(sch)}",
-        s"#ts=${System.currentTimeMillis()}", "#op=update") ++
-      zmNew ++
-      dvClass.map(rel => DeletionVectors.lineOf(rel, dvNew(rel))) ++
-      cdcNew ++
-      rewrites.map(rel => s"#rm=$rel") ++
-      newFiles.map(rel => s"#add=$rel")
-    val committed = publishRebaseable(v, bodyLines, "updateWhere",
-      () => {
-        out.foreach(SnapshotTable.deleteRecursively)
-        sidecarOut.foreach(SnapshotTable.deleteRecursively)
-      },
-      (added, w) => {
-        // translate only the ADDED files' stats, not the whole table's
-        val addedAbs = added.map(abs).toSet
-        val zmW = logicalZoneMaps(
-          zoneMapsOf(w).view.filterKeys(addedAbs).toMap, mapping)
-        added.forall { rel =>
-          val st = zmW.getOrElse(abs(rel), Map.empty[String, ZoneMaps.ColStat])
-          st.nonEmpty && ZoneMaps.provablyEmpty(cond, st)
-        }
-      })
-    SnapshotTable.UpdateResult(committed, filesRewritten = rewrites.size,
-      filesUntouched = untouched.size, filesAdded = newFiles.size,
-      filesDvUpdated = dvClass.size,
-      dvRowsAdded = dvRowsNew)
   }
 
+  // ---- ROW-LEVEL MUTATION CORE ---------------------------------------
+  //
+  // merge, deleteWhere and updateWhere each choose their candidate files
+  // from manifest stats and then run the same four steps:
+  // classifyMatches → vectorOut → writeRows → publishDml. A verb passes
+  // in only what is its own: the matched-rows scan, the rows to write,
+  // the CHECK gate and the concurrent-append conflict rule.
+  import SnapshotTable.{Matches, VectorOut, Written}
+
+  /** The MERGE-ON-READ contract the three DML verbs share, as in Delta
+    * Lake. With `dvMaxRowsPerFile <= 0` (copy-on-write) every candidate
+    * file rewrites and nothing is read here. Otherwise one column-pruned
+    * aggregation over `scanMatched(candidates)` — the live rows the DML
+    * matches, deletion vectors subtracted, with `__dv_file` and
+    * `__dv_pos` attached — counts each file's matches:
+    *
+    *  - zero matches → the file carries forward by reference;
+    *  - 1 to the cap → DV class: the matched rows VECTOR OUT of their
+    *    file ([[vectorOut]]) — their positions land as `#dv=` vectors,
+    *    their old versions as a `#cdc=` change sidecar, and the
+    *    carried-along rows stay physically in place, so a narrow DML
+    *    commits O(matched rows) bytes instead of rewriting its files;
+    *  - over the cap → rewritten copy-on-write: a file touched for most
+    *    of its rows is cheaper rewritten than carried as a near-full
+    *    vector (Delta's own fallback heuristic).
+    *
+    * This count pass and [[vectorOut]]'s checkpoint are separate so an
+    * over-cap file never materializes its matched rows; a single-pass
+    * operator that drops a file's buffered positions once it passes the
+    * cap would replace both, here. */
+  private def classifyMatches(candidates: Seq[String], dvMaxRowsPerFile: Int,
+      scanMatched: Seq[String] => DataFrame): Matches =
+    if (dvMaxRowsPerFile <= 0 || candidates.isEmpty) Matches(Nil, Nil, 0L, candidates)
+    else {
+      import org.apache.spark.sql.functions._
+      val counts: Map[String, Long] = scanMatched(candidates)
+        .groupBy("__dv_file").agg(count(lit(1)).as("__n"))
+        .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+      val (dvClass, rewrites) = candidates.filter(counts.contains)
+        .partition(counts(_) <= dvMaxRowsPerFile)
+      Matches(candidates.filterNot(counts.contains), dvClass,
+        dvClass.map(counts).sum, rewrites)
+    }
+
+  /** Vectors out the DV class of `m`, then runs `use` (the verb's write
+    * and publish) with the result. The matched rows are checkpointed
+    * once — at most the cap per file — and feed both the executor-side
+    * vector encode and the change-sidecar write of [[dvMaterialize]];
+    * UPDATE derives its new row versions from them too. The checkpoint
+    * is released when `use` returns or throws. `sch` is by name: a table
+    * without a recorded schema infers it only when it has a DV class. */
+  private def vectorOut[T](spark: SparkSession,
+      sch: => org.apache.spark.sql.types.StructType, m: Matches,
+      scanMatched: Seq[String] => DataFrame,
+      dvs: Map[String, DeletionVectors.Dv], mapping: Seq[(Int, String, String)])
+      (use: VectorOut => T): T =
+    if (m.dvClass.isEmpty) use(VectorOut(Map.empty, Nil, Nil, None))
+    else {
+      val matched = scanMatched(m.dvClass).localCheckpoint()
+      try {
+        val (merged, sidecars, cdcLines) = dvMaterialize(spark, sch, matched,
+          dvs.view.filterKeys(m.dvClass.toSet).toMap, m.dvRows, mapping)
+        use(VectorOut(merged, sidecars, cdcLines, Some(matched)))
+      } finally graft.Blocks.release(matched)
+    }
+
+  /** Writes `rows` as one new batch under the physical names, fanned out
+    * to `targetFiles` files (0 = one per rewritten file), then runs
+    * `check` over the new files; a failing check deletes the batch and
+    * the vector-out's sidecars before it rethrows. No rows, no batch. */
+  private def writeRows(rows: Option[DataFrame], targetFiles: Int, m: Matches,
+      vo: VectorOut, mapping: Seq[(Int, String, String)])
+      (check: Seq[String] => Unit): Written = rows match {
+    case None => Written(None, Nil, Nil)
+    case Some(df) =>
+      val nOut = if (targetFiles > 0) targetFiles else math.max(1, m.rewrites.size)
+      val (out, files, zmLines, _) = writeBatch(
+        toPhysical(df, mapping).repartition(nOut), partCluster = false)
+      try check(files)
+      catch { case e: Throwable =>
+        SnapshotTable.deleteRecursively(out)
+        vo.sidecars.foreach(SnapshotTable.deleteRecursively)
+        throw e }
+      Written(Some(out), files, zmLines)
+  }
+
+  /** Publishes a row-level DML as a DELTA manifest of O(touched) lines:
+    * files that stay listed keep their stats (a superset min/max stays
+    * sound under row deletion) and their vectors through the fold;
+    * DV-class files get replacement `#dv=` lines (unioned executor-side
+    * in [[dvMaterialize]]); `dropped` and rewritten files leave via
+    * `#rm=`; the new batch enters with its stats and `#add=` lines.
+    * `#op=op` is what the change feed reads, `extraLines` follow it.
+    * A concurrent commit refuses, except an append that `noMatch` proves
+    * disjoint, which rebases ([[publishRebaseable]]; `what` names the
+    * verb in its errors); a refused publish reaps the batch and the
+    * sidecars. `untouched` counts the candidates the verb ruled out. */
+  private def publishDml(v: Long, schema: Option[org.apache.spark.sql.types.StructType],
+      op: String, what: String, extraLines: Seq[String], untouched: Int,
+      dropped: Seq[String], m: Matches, vo: VectorOut, w: Written,
+      noMatch: (Seq[String], Long) => Boolean): SnapshotTable.DmlResult = {
+    val bodyLines = schema.map(s => s"#schema=${SnapshotTable.bareDdl(s)}").toSeq ++
+      Seq(s"#ts=${System.currentTimeMillis()}", s"#op=$op") ++
+      extraLines ++
+      w.zmLines ++
+      m.dvClass.map(rel => DeletionVectors.lineOf(rel, vo.dvs(rel))) ++
+      vo.cdcLines ++
+      (dropped ++ m.rewrites).map(rel => s"#rm=$rel") ++
+      w.files.map(rel => s"#add=$rel")
+    val committed = publishRebaseable(v, bodyLines, what,
+      () => {
+        w.out.foreach(SnapshotTable.deleteRecursively)
+        vo.sidecars.foreach(SnapshotTable.deleteRecursively)
+      },
+      noMatch)
+    SnapshotTable.DmlResult(committed, filesDropped = dropped.size,
+      filesRewritten = m.rewrites.size, filesUntouched = untouched + m.zeroMatch.size,
+      filesAdded = w.files.size, filesDvUpdated = m.dvClass.size,
+      dvRowsAdded = m.dvRows)
+  }
+
+  /** The conflict rule of the predicate verbs: a concurrent append is
+    * benign iff every file it added provably holds no row matching
+    * `cond` on its zone maps (a stat-less file conflicts). */
+  private def appendCannotMatch(
+      cond: org.apache.spark.sql.catalyst.expressions.Expression,
+      mapping: Seq[(Int, String, String)])(added: Seq[String], head: Long): Boolean = {
+    // translate only the ADDED files' stats, not the whole table's
+    val zmHead = logicalZoneMaps(
+      zoneMapsOf(head).view.filterKeys(added.map(absPath).toSet).toMap, mapping)
+    added.forall { rel =>
+      val st = zmHead.getOrElse(absPath(rel), Map.empty[String, ZoneMaps.ColStat])
+      st.nonEmpty && ZoneMaps.provablyEmpty(cond, st)
+    }
+  }
   /** VACUUM: physically delete data files no committed-and-retained
     * snapshot references, and expire manifests older than the newest
     * `keepVersions` — the storage-reclaim half of the table format
@@ -3916,15 +3799,37 @@ object SnapshotTable {
     * fast path. ~2M pairs ≈ 100 MB broadcast. */
   val DvBroadcastMaxPositions: Long = 2000000L
 
-  /** What a [[SnapshotTable.merge]] did, for callers and specs: the
-    * committed version plus the file-level work accounting that proves
-    * (or disproves) the copy-on-write pruning — `filesUntouched` are
-    * carried by reference, only `filesRewritten` were read and only
-    * `filesAdded` were written. */
-  final case class MergeResult(version: Long, filesRewritten: Int,
-                               filesUntouched: Int, filesAdded: Int,
-                               filesDvUpdated: Int = 0,
-                               dvRowsAdded: Long = 0L)
+  /** What a row-level DML ([[SnapshotTable.merge]],
+    * [[SnapshotTable.deleteWhere]], [[SnapshotTable.updateWhere]]) did:
+    * the committed version plus the file-level work accounting that
+    * proves (or disproves) the pruning. `filesDropped` left the manifest
+    * without being read (metadata-only; only deleteWhere drops),
+    * `filesRewritten` were read and rewritten, `filesUntouched` carry
+    * by reference, `filesAdded` were written, and `filesDvUpdated`
+    * gained `dvRowsAdded` deleted positions. A no-op keeps the old
+    * `version`. */
+  final case class DmlResult(version: Long, filesDropped: Int,
+                             filesRewritten: Int, filesUntouched: Int,
+                             filesAdded: Int, filesDvUpdated: Int = 0,
+                             dvRowsAdded: Long = 0L)
+
+  /** Per-file match classes of a row-level DML, see
+    * [[SnapshotTable.classifyMatches]]: `dvRows` is the number of
+    * matched rows in the `dvClass` files. */
+  private final case class Matches(zeroMatch: Seq[String], dvClass: Seq[String],
+                                   dvRows: Long, rewrites: Seq[String])
+
+  /** What [[SnapshotTable.vectorOut]] made: the replacement vectors by
+    * rel (old ∪ new positions), the dirs to reap if the commit fails,
+    * the `#cdc=` lines, and the checkpointed matched rows (None without
+    * a DV class). */
+  private final case class VectorOut(dvs: Map[String, DeletionVectors.Dv],
+      sidecars: Seq[Path], cdcLines: Seq[String], matched: Option[DataFrame])
+
+  /** The new batch of a row-level DML ([[SnapshotTable.writeRows]]): its
+    * dir, rels and `#zm=` lines. */
+  private final case class Written(out: Option[Path], files: Seq[String],
+                                   zmLines: Seq[String])
 
   /** [[SnapshotTable.tableStats]] result: exact `rows` when every
     * file recorded a count (None otherwise — never extrapolated),
@@ -3937,23 +3842,6 @@ object SnapshotTable {
   // only when NO listed file carries a pending vector — a vectored
   // file's recorded min/max may describe deleted rows, and this
   // surface answers queries, it doesn't just prune)
-
-  /** [[SnapshotTable.updateWhere]] accounting: only files that might
-    * hold predicate-matching rows rewrite; the rest carry forward by
-    * reference. A no-op update keeps the old `version`. */
-  final case class UpdateResult(version: Long, filesRewritten: Int,
-                                filesUntouched: Int, filesAdded: Int,
-                                filesDvUpdated: Int = 0,
-                                dvRowsAdded: Long = 0L)
-
-  /** [[SnapshotTable.deleteWhere]] accounting: `filesDropped` were
-    * removed from the manifest without being read (metadata-only),
-    * `filesRewritten` were filtered and rewritten, `filesUntouched`
-    * carry by reference. A no-op delete keeps the old `version`. */
-  final case class DeleteResult(version: Long, filesDropped: Int,
-                                filesRewritten: Int, filesUntouched: Int,
-                                filesAdded: Int, filesDvUpdated: Int = 0,
-                                dvRowsAdded: Long = 0L)
 
   /** Depth-first recursive delete — the one implementation shared by
     * every cleanup path (skipped-commit tidy-up, catalog DROP TABLE,

@@ -9,7 +9,7 @@ import scala.jdk.CollectionConverters._
   * median / dispersion record, and that a query which throws is reported
   * as failed, never timed. */
 class BenchProtocolSpec extends AnyFunSuite {
-  private def ok(t: Double, gc: Long = 0L): Bench.Run = Right((t, gc))
+  private def ok(t: Double, gc: Long = 0L, memo: Long = 0L): Bench.Run = Right((t, gc, memo))
   private val json = new ObjectMapper()
 
   test("every query runs once per pass, at K distinct positions") {
@@ -38,6 +38,15 @@ class BenchProtocolSpec extends AnyFunSuite {
     assert(stalled.outlier && stalled.min == 0.3 && stalled.median == 0.4)
     // dispersion exactly 2 is not an outlier
     assert(!Bench.aggregate(Seq(ok(1.0), ok(2.0), ok(1.5))).toOption.get.outlier)
+    // a run that built a memo (q_er_pipeline's first pass paid the
+    // fuzzy_pairs build) counts for the min and the median, not for the
+    // dispersion
+    val built = Bench.aggregate(Seq(ok(6.17, memo = 4900), ok(0.27), ok(0.23))).toOption.get
+    assert(built.min == 0.23 && built.median == 0.27 && !built.outlier)
+    assert(math.abs(built.dispersion - 0.27 / 0.23) < 1e-12)
+    // every run built one: the dispersion spans them all
+    assert(Bench.aggregate(Seq(ok(3.0, memo = 1), ok(1.0, memo = 1), ok(1.5, memo = 1)))
+      .toOption.get.dispersion == 3.0)
   }
 
   test("a run that throws is failed: left out of the totals, counted in n_failed") {
@@ -45,7 +54,7 @@ class BenchProtocolSpec extends AnyFunSuite {
     assert(boom == Left("java.lang.IllegalStateException: bad \"plan\"\nline 2"))
     assert(Bench.time(()).isRight)
     val passes = Seq(
-      Map("q_a" -> ok(1.0), "q_b" -> ok(5.0), "q_c" -> ok(2.0)),
+      Map("q_a" -> ok(1.0), "q_b" -> ok(5.0), "q_c" -> ok(2.0, memo = 40)),
       Map("q_a" -> ok(1.2), "q_b" -> boom, "q_c" -> ok(3.0)),
       Map("q_a" -> ok(1.1), "q_b" -> ok(5.5), "q_c" -> ok(2.5)))
     val s = Bench.summarize(passes)
@@ -66,6 +75,9 @@ class BenchProtocolSpec extends AnyFunSuite {
     assert(det.get("queries").fieldNames.asScala.toSet == Set("q_a", "q_c"))
     assert(det.get("passes").size == Bench.Passes)
     assert(!det.get("passes").get(1).has("q_b") && det.get("passes").get(0).has("q_b"))
+    assert(det.get("memo_runs").size == Bench.Passes)
+    assert(det.get("memo_runs").get(0).get("q_c").asLong == 40)
+    assert(det.get("memo_runs").get(0).size == 1 && det.get("memo_runs").get(1).isEmpty)
   }
 
   test("the stdout line keeps its keys and fits the 2000-character tail") {

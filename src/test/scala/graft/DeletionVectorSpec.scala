@@ -405,6 +405,52 @@ class DeletionVectorSpec extends SparkTestBase {
     assert(t.dvRelOf(v).isEmpty && t.read(spark).count() === 99)
   }
 
+  test("merge-on-read DML releases its checkpoints") {
+    import org.apache.spark.sql.execution.QueryExecution
+    import org.apache.spark.sql.util.QueryExecutionListener
+    // Spark tracks persistent RDDs weakly, so an unreleased checkpoint
+    // would vanish from the ids at the next GC. Holding every executed
+    // plan keeps such a checkpoint reachable, and counted.
+    val held = new java.util.concurrent.ConcurrentLinkedQueue[QueryExecution]()
+    val holder = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit = held.add(qe)
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = held.add(qe)
+    }
+    spark.listenerManager.register(holder)
+    try {
+      val (t, _) = freshTable()
+      t.commit(kv(0 until 100).repartition(1))
+      def ids = spark.sparkContext.getPersistentRDDs.keySet.toSet
+      def leaves(verb: String)(dml: => Long): Unit = {
+        val before = ids
+        assert(dml > 0, s"$verb must vector out a row")
+        assert(ids -- before === Set.empty[Int], s"$verb left checkpoints behind")
+      }
+      leaves("updateWhere")(t.updateWhere(spark, col("id") === 3L,
+        Map("s" -> lit("u")), dvMaxRowsPerFile = 1000).dvRowsAdded)
+      leaves("deleteWhere")(t.deleteWhere(spark, col("id") === 4L,
+        dvMaxRowsPerFile = 1000).dvRowsAdded)
+      leaves("merge")(t.merge(spark, Seq((6L, "m6")).toDF("id", "s"), Seq("id"),
+        dvMaxRowsPerFile = 1000).dvRowsAdded)
+      assert(held.size > 0)
+    } finally spark.listenerManager.unregister(holder)
+  }
+
+  test("the DML catalog entries run a pinned number of Spark jobs, cold at sf0.01") {
+    // Cold at sf0.01 the three entries run 12, 32 and 47 jobs, the same
+    // before and after merge, deleteWhere and updateWhere came to share
+    // one mutation core. A change to that core that adds a job fails
+    // here; one that removes jobs lowers the pin.
+    val sf = s"${sys.props("user.home")}/testdata/sf0.01"
+    val jobs = Seq("q_snapshot_update", "q_snapshot_dv", "q_snapshot_mor").map { q =>
+      Blocks.reset(spark)
+      q -> jobsOf(graft.analytics.RefQueries.queries(q)(spark, sf)
+        .write.format("noop").mode("overwrite").save())
+    }.toMap
+    assert(jobs === Map("q_snapshot_update" -> 12, "q_snapshot_dv" -> 32,
+      "q_snapshot_mor" -> 47))
+  }
+
   test("a delete across many files collects only O(files) descriptors to the driver") {
     val (t, _) = freshTable()
     t.commit(kv(0 until 40000).repartition(8))

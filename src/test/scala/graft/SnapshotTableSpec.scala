@@ -1725,6 +1725,56 @@ class SnapshotTableSpec extends SparkTestBase {
       "the concurrent delete's commit must survive untouched")
   }
 
+  test("optimistic concurrency: updateWhere and merge rebase over a disjoint append and refuse an overlapping one") {
+    import java.util.concurrent.TimeUnit
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.duration._
+    import scala.concurrent.ExecutionContext.Implicits.global
+    val gate = udf { (_: Long) =>
+      OccGates.started.countDown()
+      OccGates.go.await(60, TimeUnit.SECONDS)
+      true
+    }
+    // the update parks in its copy-on-write rewrite, the merge in the
+    // checkpoint of its delta: both run after the base version is read
+    val update = (t: SnapshotTable) =>
+      t.updateWhere(spark, col("id") === 5L && gate(col("id")), Map("val" -> lit("u"))).version
+    val merge = (t: SnapshotTable) =>
+      t.merge(spark, Seq((5L, "u")).toDF("id", "val").filter(gate(col("id"))),
+        Seq("id"), dvMaxRowsPerFile = 1000).version
+    Seq("updateWhere" -> update, "merge" -> merge).foreach { case (verb, dml) =>
+      // 1. DISJOINT append: the DML rebases and both commits land
+      val (t, dir) = freshTable()
+      t.commit(kv(0 until 100).repartition(1))
+      OccGates.reset()
+      val run = Future(dml(t))
+      assert(OccGates.started.await(60, TimeUnit.SECONDS), verb)
+      SnapshotTable(dir).commit(kv(1000 until 1100).repartition(1))
+      OccGates.go.countDown()
+      assert(Await.result(run, 180.seconds) === 2L,
+        s"$verb must rebase onto the appended head and land")
+      assert(t.read(spark).count() === 200L, verb)
+      assert(t.read(spark).filter(col("id") === 5L).as[(Long, String)].collect()
+        .toSeq === Seq(5L -> "u"), verb)
+
+      // 2. OVERLAPPING append (it can hold a matching row or key): the
+      //    DML refuses and publishes nothing
+      val (t2, dir2) = freshTable()
+      t2.commit(kv(0 until 100).repartition(1))
+      OccGates.reset()
+      val run2 = Future(dml(t2))
+      assert(OccGates.started.await(60, TimeUnit.SECONDS), verb)
+      SnapshotTable(dir2).commit(kv(0 until 50, "b").repartition(1))
+      OccGates.go.countDown()
+      val ex = intercept[IllegalStateException] { Await.result(run2, 180.seconds) }
+      assert(ex.getMessage.contains("may match"),
+        s"$verb: overlap must refuse with the conflict contract, got ${ex.getMessage}")
+      assert(t2.currentVersion() === 1L, s"the refused $verb must not publish")
+      assert(t2.read(spark).filter(col("id") === 5L).select("val").as[String]
+        .collect().sorted.toSeq === Seq("a5", "b5"), verb)
+    }
+  }
+
   test("delta manifests: commits write O(changed) lines; read planning folds anchor + bounded tail") {
     val (t, dir) = freshTable()
     // 45 single-file appends: v0 full, v1..v44 deltas, anchors at 20/40
