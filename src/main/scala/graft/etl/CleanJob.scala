@@ -35,22 +35,26 @@ object CleanJob {
       .reduce(_.unionByName(_, allowMissingColumns = true))
 
   /** Full stage: for each (competitor, header) present in rawDir, write
-    * cleaned NDJSON to cleanDir. Returns the pairs actually cleaned. */
+    * cleaned NDJSON to cleanDir. Returns the pairs actually cleaned.
+    * The pairs' writes are independent and run concurrently
+    * (`Pipeline.fanOut`); all of them finish before the first failure,
+    * in pair order, is rethrown. */
   def run(spark: SparkSession, rawDir: String, cleanDir: String,
           competitors: Seq[String] = Seq("mobileviking", "scarlet"),
           headers: Seq[String] = Seq("products", "packs", "logs")): Seq[(String, String)] = {
     val fs = java.nio.file.Paths.get(rawDir)
-    for {
+    val pairs = for {
       competitor <- competitors
       header <- headers
       path = fs.resolve(s"${competitor}_$header.json")
       if java.nio.file.Files.exists(path)   // F3 skip-if-missing
-    } yield {
+    } yield (competitor, header, path)
+    Pipeline.fanOut(pairs.map { case (competitor, header, path) => () =>
       val raw = Tables.wrappedJson(spark, header, path.toString)
       val cleaned = if (header == "products") cleanProducts(raw) else raw
       cleaned.write.mode("overwrite")
         .json(s"$cleanDir/${competitor}_$header.ndjson")
-      (competitor, header)
-    }
+    }).foreach(_.get)
+    pairs.map { case (competitor, header, _) => (competitor, header) }
   }
 }

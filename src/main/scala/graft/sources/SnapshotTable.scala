@@ -2666,8 +2666,11 @@ final class SnapshotTable(root: String, val store: LogStore) {
     val nOut = if (targetFiles > 0) targetFiles
       else math.max(1, math.min(selected.size,
         math.ceil(selected.map(sizeOf).sum.toDouble / smallFileBytes).toInt))
+    // coalesce, not repartition: each output file packs whole input
+    // partitions (Delta OPTIMIZE's per-bin shape), so the rewrite is
+    // one job with no shuffle, and `nOut` is an upper bound
     val (out, newFiles, zmNew, _) =
-      writeBatch(toPhysical(live, mapping).repartition(nOut),
+      writeBatch(toPhysical(live, mapping).coalesce(nOut),
         partCluster = false)
     val dvReclaimed = selected.flatMap(dvs.get).map(_.count).sum
     val bodyLines = schema.map(sc =>

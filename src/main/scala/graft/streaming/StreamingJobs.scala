@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, OutputMode, Trigger}
 import org.apache.spark.sql.Row
-import graft.etl.{CleanJob, WarehouseLoad}
+import graft.etl.{CleanJob, Pipeline, WarehouseLoad}
 import graft.schema.Schemas
 
 /** Structured Streaming forms of the engine's pipelines (SURVEY.md §1.1:
@@ -671,23 +671,28 @@ object StreamingJobs {
     * and plans no Spark job at all.
     *
     * Staging materializes one change-detection probe per batch (see
-    * `WarehouseLoad.stageProducts`) and the four commits read it; this
-    * method owns that checkpoint and releases it after the last commit,
-    * in a `finally` so a failed commit releases it too. A long session
-    * or stream therefore holds no checkpoint per loaded batch. */
-  def upsertOnce(batch: DataFrame, markerKey: String, warehouseDir: String): Unit = {
-    val spark = batch.sparkSession
+    * `WarehouseLoad.stageProducts`) and the four commits read it,
+    * concurrently (`Pipeline.fanOut`: the tables are disjoint). This
+    * method owns that checkpoint and releases it once all four have
+    * finished, also when one of them threw; the first failure, in
+    * table order, is rethrown after the release. A long session or
+    * stream therefore holds no checkpoint per loaded batch. */
+  def upsertOnce(batch: DataFrame, markerKey: String, warehouseDir: String): Unit =
+    upsertOnce(batch, markerKey, warehouseDir, loadState(batch.sparkSession, warehouseDir))
+
+  /** [[upsertOnce]] staged against `state`, which is read only if some
+    * table still lacks the tag. */
+  def upsertOnce(batch: DataFrame, markerKey: String, warehouseDir: String,
+                 state: => WarehouseLoad.State): Unit = {
     val tables = Seq("competitors", "products", "features", "product_prices")
-      .map(n => n -> graft.sources.SnapshotTable(s"$warehouseDir/$n")).toMap
-    if (!tables.values.forall(_.tagCommitted(markerKey))) {
-      val state = loadState(spark, warehouseDir)
+      .map(n => graft.sources.SnapshotTable(s"$warehouseDir/$n"))
+    if (!tables.forall(_.tagCommitted(markerKey))) {
       val delta = WarehouseLoad.stageProducts(state, batch)
-      try {
-        tables("competitors").commitOnce(markerKey, delta.competitors)
-        tables("products").commitOnce(markerKey, delta.products)
-        tables("features").commitOnce(markerKey, delta.features)
-        tables("product_prices").commitOnce(markerKey, delta.prices)
-      } finally delta.release()
+      try Pipeline.fanOut(tables.zip(Seq(delta.competitors, delta.products,
+          delta.features, delta.prices)).map { case (t, df) =>
+            () => t.commitOnce(markerKey, df)
+          }).foreach(_.get)
+      finally delta.release()
     }
   }
 

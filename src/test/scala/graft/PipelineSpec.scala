@@ -125,9 +125,10 @@ class PipelineSpec extends SparkTestBase {
     val b2 = cleanedBatch(raw, 25.0, "2023-10-06")
     // A price change onto an existing warehouse ran 22 jobs while each
     // of the four commits re-ran the staging joins and windows; with one
-    // materialized probe it runs 12.
+    // materialized probe it runs 12. The count is exact: jobs started
+    // outside the caller's job group would lower it.
     val load = jobsOf(StreamingJobs.upsertOnce(b2, "k2", wh))
-    assert(load <= 12, s"price-change load ran $load jobs")
+    assert(load === 12, s"price-change load ran $load jobs")
     assert(StreamingJobs.loadState(spark, wh).prices.count() === 2)
     // a fully replayed batch is four tag lookups and no Spark job
     assert(jobsOf(StreamingJobs.upsertOnce(b2, "k2", wh)) === 0)
@@ -158,13 +159,93 @@ class PipelineSpec extends SparkTestBase {
       assert(StreamingJobs.loadState(spark, wh).prices.count() === 3)
       assert(persistent === 0, "three loads left staging checkpoints behind")
 
-      // the last of the four commits refuses its batch
-      graft.sources.SnapshotTable(s"$wh/product_prices")
-        .addCheckConstraint(spark, "price_cap", "price < 20")
-      val e = intercept[Exception](
-        StreamingJobs.upsertOnce(cleanedBatch(raw, 25.0, "2023-10-08"), "2023-10-08", wh))
+      // the prices commit refuses its batch; the four commits run
+      // concurrently, so the other three land before the error surfaces
+      val prices = graft.sources.SnapshotTable(s"$wh/product_prices")
+      prices.addCheckConstraint(spark, "price_cap", "price < 20")
+      val b4 = cleanedBatch(raw, 25.0, "2023-10-08")
+      val e = intercept[Exception](StreamingJobs.upsertOnce(b4, "2023-10-08", wh))
       assert(e.getMessage.contains("price_cap"), e.getMessage)
       assert(persistent === 0, "a failed commit left the staging checkpoint behind")
+      val landed = Seq("competitors", "products", "features").map(n =>
+        n -> graft.sources.SnapshotTable(s"$wh/$n").tagCommitted("2023-10-08"))
+      assert(landed.forall(_._2), s"tables beside the refused commit: $landed")
+      assert(!prices.tagCommitted("2023-10-08"))
+
+      // the retry commits only the missing table, exactly once
+      prices.dropCheckConstraint("price_cap")
+      StreamingJobs.upsertOnce(b4, "2023-10-08", wh)
+      val vAfter = prices.currentVersion()
+      StreamingJobs.upsertOnce(b4, "2023-10-08", wh)
+      assert(prices.currentVersion() === vAfter)
+      val st = StreamingJobs.loadState(spark, wh)
+      assert(st.prices.count() === 4 && st.features.count() === 1 && st.products.count() === 1)
+      assert(persistent === 0, "the retry left the staging checkpoint behind")
     } finally spark.listenerManager.unregister(holder)
+  }
+
+  /** One competitor's raw products and packs drops for `day` under `raw`,
+    * `price` on its one product. */
+  private def rawDrops(raw: String, competitor: String, price: Double,
+                       day: String = "2023-10-05"): Unit = {
+    Files.writeString(java.nio.file.Paths.get(raw, s"${competitor}_products.json"),
+      s"""{"products": [
+        |  {"product_name": "mobile_a", "competitor_name": "$competitor",
+        |   "product_category": "mobile_prepaid", "product_url": "https://mv/a",
+        |   "price": $price, "scraped_at": "$day", "data": 15.0, "minutes": -1.0,
+        |   "sms": -1, "upload_speed": "20mbps", "download_speed": "1gbps"}
+        |]}""".stripMargin)
+    Files.writeString(java.nio.file.Paths.get(raw, s"${competitor}_packs.json"),
+      s"""{"packs": [
+        |  {"competitor_name": "$competitor", "pack_name": "combo_$price",
+        |   "pack_url": "https://mv/combo", "pack_description": null,
+        |   "price": 55.0, "scraped_at": "$day"}
+        |]}""".stripMargin): Unit
+  }
+
+  test("a fanned-out run starts every Spark job under the caller's job group and leaves no thread") {
+    val raw = Files.createTempDirectory("graft_fan_raw").toFile.getAbsolutePath
+    val clean = Files.createTempDirectory("graft_fan_clean").toFile.getAbsolutePath
+    val wh = Files.createTempDirectory("graft_fan_wh").toFile.getAbsolutePath
+    val sc = spark.sparkContext
+    val groups = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        groups.add(Option(e.properties).map(_.getProperty("spark.jobGroup.id")).orNull): Unit
+    }
+    org.apache.spark.graft.BusDrain(sc)
+    sc.addSparkListener(listener)
+    // Two runs under two groups: threads kept from the first run would
+    // start the second run's jobs under the first run's group.
+    try Seq(("fan_out_a", 15.0, "2023-10-05"), ("fan_out_b", 25.0, "2023-10-06"))
+      .foreach { case (group, price, day) =>
+        Seq("mobileviking", "scarlet").foreach(rawDrops(raw, _, price, day))
+        sc.setJobGroup(group, "fan-out")
+        val results = try Pipeline.run(spark, raw, clean, wh) finally sc.clearJobGroup()
+        assert(results.forall(_.ok), results)
+        org.apache.spark.graft.BusDrain(sc)
+        val seen = Iterator.continually(groups.poll()).takeWhile(_ != null).toSeq
+        assert(seen.size > 10 && seen.forall(_ == group),
+          s"jobs of the run under $group carried ${seen.groupBy(identity).view.mapValues(_.size).toMap}")
+      } finally sc.removeSparkListener(listener)
+    val st = graft.streaming.StreamingJobs.loadState(spark, wh)
+    assert(st.prices.count() === 4 && st.packs.count() === 4)
+    val left = Thread.getAllStackTraces.keySet.toArray(Array.empty[Thread])
+      .filter(_.getName.startsWith("graft-fan-out-"))
+    assert(left.isEmpty, left.map(_.getName).mkString(", "))
+  }
+
+  test("one failing header fails its competitor's clean stage; the other headers' writes still finish") {
+    val raw = Files.createTempDirectory("graft_hdr_raw").toFile.getAbsolutePath
+    val clean = Files.createTempDirectory("graft_hdr_clean").toFile.getAbsolutePath
+    val wh = Files.createTempDirectory("graft_hdr_wh").toFile.getAbsolutePath
+    rawDrops(raw, "mobileviking", 15.0)
+    rawDrops(raw, "scarlet", 15.0)
+    Files.writeString(java.nio.file.Paths.get(raw, "scarlet_products.json"), "{not json")
+    val byKey = Pipeline.run(spark, raw, clean, wh).map(r => (r.competitor, r.stage) -> r).toMap
+    assert(byKey(("mobileviking", "clean")).ok)
+    assert(!byKey(("scarlet", "clean")).ok, byKey(("scarlet", "clean")))
+    assert(new java.io.File(clean, "scarlet_packs.ndjson/_SUCCESS").exists(),
+      "the packs write beside the failing products write did not finish")
   }
 }

@@ -2302,7 +2302,10 @@ class SnapshotTableSpec extends SparkTestBase {
     // threshold between the small (10-row) and large (800-row) sizes
     val threshold = (sizes(1) + sizes(2)) / 2
     val before = t.read(spark).orderBy("id").collect().toSeq
-    val r = t.optimize(spark, smallFileBytes = threshold)
+    var r: SnapshotTable.OptimizeResult = null
+    // the rewrite packs whole input partitions: one job, no shuffle
+    val jobs = jobsOf { r = t.optimize(spark, smallFileBytes = threshold) }
+    assert(jobs === 1, s"a two-small-file optimize ran $jobs Spark jobs")
     assert(r.filesRewritten === 2,
       s"exactly the 2 small files must rewrite, got $r")
     assert(r.filesUntouched === 8 && r.dvRowsReclaimed === 0L)
