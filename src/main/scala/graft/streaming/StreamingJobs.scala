@@ -682,8 +682,9 @@ object StreamingJobs {
 
   /** [[upsertOnce]] staged against `state`, which is read only if some
     * table still lacks the tag. */
-  def upsertOnce(batch: DataFrame, markerKey: String, warehouseDir: String,
-                 state: => WarehouseLoad.State): Unit = {
+  private[graft] def upsertOnce(batch: DataFrame, markerKey: String,
+                                warehouseDir: String,
+                                state: => WarehouseLoad.State): Unit = {
     val tables = Seq("competitors", "products", "features", "product_prices")
       .map(n => graft.sources.SnapshotTable(s"$warehouseDir/$n"))
     if (!tables.forall(_.tagCommitted(markerKey))) {
