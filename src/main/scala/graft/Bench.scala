@@ -1,5 +1,7 @@
 package graft
 
+import org.apache.spark.sql.{DataFrame, SparkSession}
+
 /** Benchmark main (driver contract): times every catalog query at
   * SPARK_GRAFT_SF_DIR and prints one JSON line on stdout.
   *
@@ -21,6 +23,10 @@ package graft
   * marked in the detail file and left out of the dispersion: its extra time
   * is a one-time build, not a stall.
   *
+  * Every timed run runs under a [[QueryProbe]] and splits into building the
+  * DataFrame and running its count ([[Layers]]); the detail file's `layers`
+  * map holds the min run's split and probe counts for every timed query.
+  *
   * A run that throws marks its query failed: the error goes to the detail
   * file's `failed` map, and the query is left out of every total.
   */
@@ -29,9 +35,21 @@ object Bench {
   val MaxDispersion = 2.0
   val Protocol = "min_of_3_rotated_passes+sweep"
 
-  /** One timed run: seconds, GC milliseconds and the milliseconds of memo
-    * builds it paid, or the error it threw. */
-  type Run = Either[String, (Double, Long, Long)]
+  /** Where one run's time went. `constructMs` builds the DataFrame (eager
+    * checkpoints, memo builds); `execMs` runs its count, and `planMs` is
+    * the count's Catalyst analysis, optimization and planning, a part of
+    * `execMs`; `probe` holds the whole run's jobs, stages, tasks, task
+    * time, shuffle and spill bytes. */
+  final case class Layers(constructMs: Long, planMs: Long, execMs: Long,
+                          probe: QueryProbe.Profile)
+
+  /** One timed run: seconds, GC milliseconds, the milliseconds of memo
+    * builds it paid, and its layers; `constructMs + execMs` is the run
+    * time in whole milliseconds. */
+  final case class Timing(s: Double, gcMs: Long, memoMs: Long, layers: Layers)
+
+  /** One timed run, or the error it threw. */
+  type Run = Either[String, Timing]
 
   /** The queries of pass `p` in visiting order: sorted, rotated by p·n/Passes. */
   def passOrder(names: Seq[String], p: Int): Seq[String] = {
@@ -49,21 +67,34 @@ object Bench {
 
   private def memoBuildMs: Long = MemoStats.snapshot.values.sum
 
-  /** Times one run of `body`. A run that throws yields its error, never a time. */
-  def time(body: => Any): Run = {
-    val g0 = gcMs
-    val m0 = memoBuildMs
-    val t0 = System.nanoTime()
+  /** Times one run of a catalog query under a [[QueryProbe]]: `query`
+    * builds the DataFrame, then `groupBy().count()` over it, the plan
+    * `Dataset.count` builds, runs. The probe's bus drain falls outside
+    * the timed window. A run that throws yields its error, never a time. */
+  def time(spark: SparkSession)(query: => DataFrame): Run =
     try {
-      body
-      Right(((System.nanoTime() - t0) / 1e9, gcMs - g0, memoBuildMs - m0))
+      val g0 = gcMs
+      val m0 = memoBuildMs
+      val ((t0, t1, t2, gc, memo, counted), probe) = QueryProbe(spark) {
+        val t0 = System.nanoTime()
+        val df = query
+        val t1 = System.nanoTime()
+        val counted = df.groupBy().count()
+        counted.collect()
+        (t0, t1, System.nanoTime(), gcMs - g0, memoBuildMs - m0, counted)
+      }
+      val constructMs = Math.round((t1 - t0) / 1e6)
+      val planMs = counted.queryExecution.tracker.phases.values
+        .map(p => p.endTimeMs - p.startTimeMs).sum
+      Right(Timing((t2 - t0) / 1e9, gc, memo,
+        Layers(constructMs, planMs, Math.round((t2 - t0) / 1e6) - constructMs, probe)))
     } catch { case e: Throwable => Left(s"${e.getClass.getName}: ${e.getMessage}") }
-  }
 
-  /** `gcMs` is the GC time of the run that gave the min. `dispersion` is
-    * max/min over the runs that built no memo (over all runs when every
-    * run built one). */
-  final case class Stats(min: Double, median: Double, dispersion: Double, gcMs: Long) {
+  /** `gcMs` and `layers` are those of the run that gave the min.
+    * `dispersion` is max/min over the runs that built no memo (over all
+    * runs when every run built one). */
+  final case class Stats(min: Double, median: Double, dispersion: Double, gcMs: Long,
+                         layers: Layers) {
     def outlier: Boolean = dispersion > MaxDispersion
   }
 
@@ -71,12 +102,12 @@ object Bench {
   def aggregate(runs: Seq[Run]): Either[String, Stats] = {
     val (errors, ok) = runs.partitionMap(identity)
     errors.headOption.toLeft {
-      val ts = ok.map(_._1).sorted
-      val (min, gc, _) = ok.minBy(_._1)
-      val noMemo = ok.filter(_._3 == 0).map(_._1)
+      val ts = ok.map(_.s).sorted
+      val best = ok.minBy(_.s)
+      val noMemo = ok.filter(_.memoMs == 0).map(_.s)
       val steady = if (noMemo.nonEmpty) noMemo else ts
       // the middle run: Passes is odd
-      Stats(min, ts(ts.size / 2), steady.max / steady.min, gc)
+      Stats(best.s, ts(ts.size / 2), steady.max / steady.min, best.gcMs, best.layers)
     }
   }
 
@@ -102,7 +133,8 @@ object Bench {
     xs.map { case (k, v) => jstr(k) + ":" + v }.mkString("{", ",", "}")
 
   /** The stdout line. Readers take it from a bounded 2000-character tail of
-    * stdout, so `queries` lists only the slowest entries that fit in 1500; `value` covers every timed query and the detail file has them
+    * stdout, so `queries` lists only the slowest entries that fit in
+    * 1500; `value` covers every timed query and the detail file has them
     * all. `pre_retry_total` and `n_retried` stay for readers of the older
     * retry protocol. */
   def line(s: Summary, memoSec: Double, sf: String): String = {
@@ -129,10 +161,22 @@ object Bench {
       "sf" -> jstr(sf)))
   }
 
+  private def layersJson(l: Layers): String = jmap(Seq(
+    "construct_ms" -> l.constructMs.toString,
+    "plan_ms" -> l.planMs.toString,
+    "exec_ms" -> l.execMs.toString,
+    "jobs" -> l.probe.jobs.toString,
+    "stages" -> l.probe.stages.toString,
+    "tasks" -> l.probe.tasks.toString,
+    "task_s" -> fmt(l.probe.taskS),
+    "shuffle_read_bytes" -> l.probe.shuffleReadBytes.toString,
+    "shuffle_write_bytes" -> l.probe.shuffleWriteBytes.toString,
+    "spill_bytes" -> l.probe.spillBytes.toString))
+
   /** The detail file: every query's min, median, dispersion and per-pass
-    * times, the outliers, the failed queries with their errors, GC of the
-    * min run, the memo builds, and per pass the runs that built a memo with
-    * the milliseconds they paid. */
+    * times, the outliers, the failed queries with their errors, GC and
+    * layers of the min run, the memo builds, and per pass the runs that
+    * built a memo with the milliseconds they paid. */
   def detail(s: Summary, passes: Seq[Map[String, Run]], memoMs: Map[String, Long],
              sf: String, cpus: String): String = {
     def per(f: Stats => String) = jmap(s.timed.map { case (k, v) => k -> f(v) })
@@ -148,11 +192,13 @@ object Bench {
       "dispersion" -> per(v => fmt(v.dispersion)),
       "outliers" -> jmap(s.timed.collect { case (k, v) if v.outlier => k -> fmt(v.dispersion) }),
       "passes" -> passes.map(p => jmap(p.toSeq.sortBy(_._1)
-        .collect { case (k, Right((t, _, _))) => k -> fmt(t) })).mkString("[", ",", "]"),
+        .collect { case (k, Right(t)) => k -> fmt(t.s) })).mkString("[", ",", "]"),
       "memo_runs" -> passes.map(p => jmap(p.toSeq.sortBy(_._1)
-        .collect { case (k, Right((_, _, m))) if m > 0 => k -> m.toString })).mkString("[", ",", "]"),
+        .collect { case (k, Right(t)) if t.memoMs > 0 => k -> t.memoMs.toString }))
+        .mkString("[", ",", "]"),
       "failed" -> jmap(s.failed.map { case (k, e) => k -> jstr(e) }),
       "gc_ms" -> per(_.gcMs.toString),
+      "layers" -> per(v => layersJson(v.layers)),
       "memo_build_ms" -> jmap(memoMs.toSeq.sortBy(_._1).map { case (k, v) => k -> v.toString })))
   }
 
@@ -173,9 +219,9 @@ object Bench {
       val small = sfDir.replaceAll("sf[0-9.]+$", "sf0.001")
       if (new java.io.File(small).isDirectory) small else sfDir
     }
-    // SPARK_GRAFT_BENCH_ONLY: regex subset for local triage runs
-    // (unset in driver runs → full catalog)
-    val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY").map(_.r)
+    // SPARK_GRAFT_ONLY: regex subset, as in Verify (unset → full
+    // catalog); one query is the single-query layer profile
+    val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.r)
     val catalog = SparkEntry.queries.filter { case (n, _) =>
       only.forall(_.findFirstIn(n).isDefined)
     }
@@ -191,7 +237,7 @@ object Bench {
     var done = 0
     val passes = (0 until Passes).map { p =>
       passOrder(catalog.keys.toSeq, p).map { name =>
-        val run = time(catalog(name)(spark, sfDir).count())
+        val run = time(spark)(catalog(name)(spark, sfDir))
         // blocking, so the reclaim of this run's checkpoints lands outside
         // the next timed window
         Blocks.sweep(spark, blocking = true)

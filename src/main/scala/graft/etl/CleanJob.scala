@@ -13,8 +13,10 @@ import graft.sources.Tables
   * (competitor × header), unwraps `{header: [...]}` (S1), applies
   * convert_speed to both speed columns of products (X1), writes NDJSON
   * (K2). Missing raw file skips the pair (F3). Here each pair is one
-  * narrow Spark job: scan → withColumn ×2 → write, no shuffle at all —
-  * at 100 TB this is a pure map stage bounded by IO.
+  * narrow Spark job: scan with the header's declared raw schema (no
+  * inference pass) → withColumn ×2 → write, no shuffle at all — at
+  * 100 TB this is a pure map stage bounded by IO. A malformed drop fails
+  * its pair; an empty one (`{"products": []}`) cleans to zero rows.
   */
 object CleanJob {
 
@@ -26,13 +28,17 @@ object CleanJob {
 
   /** Scarlet "options" raw table (SURVEY.md §1.2, FIXTURES.md A4): two
     * incompatible record shapes (`option_name/option_details/option_url`
-    * vs `options_name/options_details`, no url) are kept as ONE
-    * schema-on-read relation via union-by-name with null fill. Faithful
-    * dead-end: the reference scrapes and saves options but never cleans
-    * or loads them downstream — so this raw view is the whole surface. */
+    * vs `options_name/options_details`, no url) are kept as ONE relation
+    * over `Schemas.rawOption`, which declares both shapes' fields, so each
+    * record reads with the other shape's fields null. Faithful dead-end:
+    * the reference scrapes and saves options but never cleans or loads
+    * them downstream — so this raw view is the whole surface. */
   def optionsRaw(spark: SparkSession, paths: Seq[String]): DataFrame =
-    paths.map(p => Tables.wrappedJson(spark, "options", p))
-      .reduce(_.unionByName(_, allowMissingColumns = true))
+    paths.map(p => Tables.wrappedJson(spark, "options", Schemas.rawOption, p)).reduce(_.union(_))
+
+  /** The declared record schema of each raw header. */
+  private val rawSchemas = Map("products" -> Schemas.rawProduct,
+    "packs" -> Schemas.rawPack, "logs" -> Schemas.rawLog)
 
   /** Full stage: for each (competitor, header) present in rawDir, write
     * cleaned NDJSON to cleanDir. Returns the pairs actually cleaned.
@@ -50,7 +56,7 @@ object CleanJob {
       if java.nio.file.Files.exists(path)   // F3 skip-if-missing
     } yield (competitor, header, path)
     Pipeline.fanOut(pairs.map { case (competitor, header, path) => () =>
-      val raw = Tables.wrappedJson(spark, header, path.toString)
+      val raw = Tables.wrappedJson(spark, header, rawSchemas(header), path.toString)
       val cleaned = if (header == "products") cleanProducts(raw) else raw
       cleaned.write.mode("overwrite")
         .json(s"$cleanDir/${competitor}_$header.ndjson")

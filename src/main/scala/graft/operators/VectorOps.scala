@@ -1513,8 +1513,8 @@ object VectorOps {
       // referenced q_embed_cov — distributed, one scan); the power
       // iteration itself is O(dims²)=36 values. Running its 6 rounds
       // as Spark jobs (matvec join + 8-row localCheckpoint per round)
-      // was pure scheduling floor — ProfQ measured 47 jobs and 0.30
-      // task-seconds against 1.62 s wall. The iteration now runs on
+      // was pure scheduling floor — 47 jobs and 0.30 task-seconds
+      // against 1.62 s wall, measured per query group. The iteration now runs on
       // the COLLECTED aggregate in exact Long arithmetic (the kmeans-
       // centroid / BPE-argmax bounded-fitter-state precedent; Scala /
       // and SQL `div` both truncate toward zero, so the integer

@@ -49,6 +49,21 @@ object Schemas {
     StructField("error_details", StringType, nullable = true),
     StructField("status", StringType, nullable = true)))
 
+  /** Raw scarlet options record (FIXTURES.md A4): the union of the two
+    * scraped shapes, `option_name/option_details/option_url` and
+    * `options_name/options_details` (no url); a record of either shape
+    * reads with the other shape's fields null. */
+  val rawOption: StructType = StructType(Seq(
+    StructField("product_category", StringType, nullable = true),
+    StructField("option_name", StringType, nullable = true),
+    StructField("option_details", StringType, nullable = true),
+    StructField("option_url", StringType, nullable = true),
+    StructField("options_name", StringType, nullable = true),
+    StructField("options_details", StringType, nullable = true),
+    StructField("price", DoubleType, nullable = true),
+    StructField("scraped_at", StringType, nullable = true),
+    StructField("pack_name", StringType, nullable = true)))
+
   // ---- Warehouse tables (dags/load_to_bigquery_dag.py:25-79) ----
 
   val competitors: StructType = StructType(Seq(

@@ -111,10 +111,16 @@ object Tables {
   }
 
   /** S1 raw JSON scan (dags/transform.py:32-49): whole-file JSON with a
-    * single wrapper key, unwrapped by exploding the array. */
-  def wrappedJson(spark: SparkSession, header: String, path: String): DataFrame = {
+    * single wrapper key, `{header: [record, ...]}`, read with the declared
+    * record `schema` (no inference pass) and unwrapped by exploding the
+    * array; an empty array reads as zero rows. FAILFAST: a malformed file
+    * fails the read instead of reading as a null wrapper, zero rows. */
+  def wrappedJson(spark: SparkSession, header: String,
+                  schema: org.apache.spark.sql.types.StructType, path: String): DataFrame = {
     import org.apache.spark.sql.functions._
-    spark.read.option("multiLine", value = true).json(path)
+    import org.apache.spark.sql.types.{ArrayType, StructField, StructType}
+    spark.read.schema(StructType(Seq(StructField(header, ArrayType(schema)))))
+      .option("multiLine", value = true).option("mode", "FAILFAST").json(path)
       .select(explode(col(header)).as("r"))
       .select(col("r.*"))
   }

@@ -699,17 +699,13 @@ object StreamingJobs {
 
   /** Read current warehouse state, tolerating not-yet-created tables.
     * Each table is a snapshot table (committed manifest = source of
-    * truth); plain-parquet directories from the pre-snapshot layout
-    * are still readable as a migration path. */
+    * truth); a table with no committed manifest reads as empty. */
   def loadState(spark: SparkSession, dir: String): WarehouseLoad.State = {
     def tbl(name: String, schema: org.apache.spark.sql.types.StructType) = {
       val root = s"$dir/$name"
       val manifests = new java.io.File(s"$root/_manifests")
-      val legacy = new java.io.File(root)
       if (manifests.isDirectory && manifests.list().exists(_.endsWith(".json")))
         graft.sources.SnapshotTable(root).readAs(spark, schema)
-      else if (legacy.isDirectory && legacy.list().exists(_.endsWith(".parquet")))
-        spark.read.schema(schema).parquet(root) // pre-snapshot layout
       else spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)
     }
     WarehouseLoad.State(

@@ -1,15 +1,16 @@
 package graft
 
 import com.fasterxml.jackson.databind.ObjectMapper
-import org.scalatest.funsuite.AnyFunSuite
 
 import scala.jdk.CollectionConverters._
 
 /** Pins the bench protocol: rotated full passes, the per-query min /
   * median / dispersion record, and that a query which throws is reported
   * as failed, never timed. */
-class BenchProtocolSpec extends AnyFunSuite {
-  private def ok(t: Double, gc: Long = 0L, memo: Long = 0L): Bench.Run = Right((t, gc, memo))
+class BenchProtocolSpec extends SparkTestBase {
+  private val noLayers = Bench.Layers(0, 0, 0, QueryProbe.Profile(0, 0, 0, 0, 0, 0, 0, 0))
+  private def ok(t: Double, gc: Long = 0L, memo: Long = 0L): Bench.Run =
+    Right(Bench.Timing(t, gc, memo, noLayers))
   private val json = new ObjectMapper()
 
   test("every query runs once per pass, at K distinct positions") {
@@ -28,7 +29,7 @@ class BenchProtocolSpec extends AnyFunSuite {
 
   test("min, median, dispersion and the outlier flag on given timings") {
     assert(Bench.aggregate(Seq(ok(3.0, 7), ok(1.0, 5), ok(1.5, 9))) ==
-      Right(Bench.Stats(min = 1.0, median = 1.5, dispersion = 3.0, gcMs = 5)))
+      Right(Bench.Stats(min = 1.0, median = 1.5, dispersion = 3.0, gcMs = 5, noLayers)))
     val stable = Bench.aggregate(Seq(ok(2.2), ok(2.0), ok(2.1))).toOption.get
     assert(stable.min == 2.0 && stable.median == 2.1 && !stable.outlier)
     assert(math.abs(stable.dispersion - 1.1) < 1e-12)
@@ -50,9 +51,9 @@ class BenchProtocolSpec extends AnyFunSuite {
   }
 
   test("a run that throws is failed: left out of the totals, counted in n_failed") {
-    val boom = Bench.time(throw new IllegalStateException("bad \"plan\"\nline 2"))
+    val boom = Bench.time(spark)(throw new IllegalStateException("bad \"plan\"\nline 2"))
     assert(boom == Left("java.lang.IllegalStateException: bad \"plan\"\nline 2"))
-    assert(Bench.time(()).isRight)
+    assert(Bench.time(spark)(spark.range(1).toDF()).isRight)
     val passes = Seq(
       Map("q_a" -> ok(1.0), "q_b" -> ok(5.0), "q_c" -> ok(2.0, memo = 40)),
       Map("q_a" -> ok(1.2), "q_b" -> boom, "q_c" -> ok(3.0)),
@@ -82,7 +83,7 @@ class BenchProtocolSpec extends AnyFunSuite {
 
   test("the stdout line keeps its keys and fits the 2000-character tail") {
     val timed = (0 until 417).map(i =>
-      f"q_some_long_catalog_query_name_$i%03d" -> Bench.Stats(i * 0.01 + 0.1, 0.2, 1.0, 0))
+      f"q_some_long_catalog_query_name_$i%03d" -> Bench.Stats(i * 0.01 + 0.1, 0.2, 1.0, 0, noLayers))
     val text = Bench.line(Bench.Summary(timed, Seq("q_x" -> "boom")), 12.0, "/data/sf0.1")
     assert(text.length <= 2000, text.length)
     val out = json.readTree(text)
@@ -96,5 +97,29 @@ class BenchProtocolSpec extends AnyFunSuite {
     assert(kept > 0 && kept + out.get("queries_omitted").asInt == 417)
     // the kept entries are the slowest ones
     assert(out.get("queries").has("q_some_long_catalog_query_name_416"))
+  }
+
+  test("a timed run splits into construct and exec, and the detail file keeps the min run's layers") {
+    // construction runs one job of its own (the collect), the count
+    // shuffles once more
+    val run = Bench.time(spark) {
+      val keys = spark.range(0, 20000, 1, 4).selectExpr("id % 7 as k").distinct().collect()
+      spark.range(0, 200000, 1, 4).selectExpr(s"id % ${keys.length} as k").groupBy("k").count()
+    }
+    val t = run.toOption.get
+    val l = t.layers
+    assert(l.constructMs + l.execMs == Math.round(t.s * 1000))
+    assert(l.planMs >= 0 && l.planMs <= l.execMs)
+    assert(l.probe.jobs >= 2 && l.probe.tasks >= l.probe.stages && l.probe.stages > 0)
+    assert(l.probe.shuffleWriteBytes > 0 && l.probe.shuffleReadBytes > 0)
+    val cpus = spark.sparkContext.defaultParallelism
+    assert(l.probe.taskS <= 1.05 * t.s * cpus)
+
+    val passes = Seq(Map("q_a" -> ok(t.s + 2)), Map("q_a" -> run), Map("q_a" -> ok(t.s + 1)))
+    val det = json.readTree(Bench.detail(Bench.summarize(passes), passes, Map.empty, "/data/sf0.1", "4"))
+    val q = det.get("layers").get("q_a")
+    assert(q.fieldNames.asScala.toSet == Set("construct_ms", "plan_ms", "exec_ms", "jobs", "stages",
+      "tasks", "task_s", "shuffle_read_bytes", "shuffle_write_bytes", "spill_bytes"))
+    assert(q.get("jobs").asInt == l.probe.jobs && q.get("exec_ms").asLong == l.execMs)
   }
 }

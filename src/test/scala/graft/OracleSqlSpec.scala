@@ -114,4 +114,12 @@ class OracleSqlSpec extends AnyFunSuite {
         assert(sql.contains("MATERIALIZED"), s"$name has WITH but no MATERIALIZED")
     }
   }
+
+  test("full catalog: every query has an oracle and every oracle a query") {
+    val queries = SparkEntry.queries.keySet
+    val oracles = SparkEntry.oracleSql.keySet
+    assert(queries.nonEmpty)
+    assert(oracles == queries,
+      s"no oracle: ${(queries -- oracles).toSeq.sorted}; no query: ${(oracles -- queries).toSeq.sorted}")
+  }
 }

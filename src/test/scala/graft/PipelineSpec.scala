@@ -248,4 +248,26 @@ class PipelineSpec extends SparkTestBase {
     assert(new java.io.File(clean, "scarlet_packs.ndjson/_SUCCESS").exists(),
       "the packs write beside the failing products write did not finish")
   }
+
+  test("an empty products drop cleans to zero rows; its load commits no product change") {
+    val raw = Files.createTempDirectory("graft_empty_raw").toFile.getAbsolutePath
+    val clean = Files.createTempDirectory("graft_empty_clean").toFile.getAbsolutePath
+    val wh = Files.createTempDirectory("graft_empty_wh").toFile.getAbsolutePath
+    rawDrops(raw, "mobileviking", 15.0)
+    assert(Pipeline.run(spark, raw, clean, wh, Seq("mobileviking")).forall(_.ok))
+    // the next day's scrape found no products: the wrapper holds an empty array
+    rawDrops(raw, "mobileviking", 16.0, day = "2023-10-06")
+    Files.writeString(java.nio.file.Paths.get(raw, "mobileviking_products.json"),
+      """{"products": []}""")
+    val day2 = Pipeline.run(spark, raw, clean, wh, Seq("mobileviking"))
+    assert(day2.forall(_.ok), day2)
+    val cleaned = graft.sources.Tables.ndjson(spark, graft.schema.Schemas.cleanProduct,
+      s"$clean/mobileviking_products.ndjson")
+    assert(cleaned.count() === 0)
+    val st = graft.streaming.StreamingJobs.loadState(spark, wh)
+    assert((st.competitors.count(), st.products.count(), st.features.count(), st.prices.count())
+      === ((1L, 1L, 1L, 1L)))
+    // the packs of the same day still load
+    assert(st.packs.count() === 2)
+  }
 }

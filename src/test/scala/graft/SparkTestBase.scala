@@ -10,27 +10,8 @@ trait SparkTestBase extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = SparkTestBase.session
   override def afterAll(): Unit = () // keep session for later suites
 
-  /** Spark jobs `body` submits, counted by a listener scoped to a job
-    * group of its own (threads the body starts inherit the group). */
-  protected def jobsOf(body: => Unit): Int = {
-    val sc = spark.sparkContext
-    val group = s"jobs_of_${java.util.UUID.randomUUID()}"
-    val jobs = new java.util.concurrent.atomic.AtomicInteger()
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group))
-          jobs.incrementAndGet()
-    }
-    sc.addSparkListener(listener)
-    sc.setJobGroup(group, "job count")
-    try body
-    finally {
-      sc.clearJobGroup()
-      org.apache.spark.graft.BusDrain(sc)
-      sc.removeSparkListener(listener)
-    }
-    jobs.get
-  }
+  /** Spark jobs `body` submits, as [[QueryProbe]] counts them. */
+  protected def jobsOf(body: => Unit): Int = QueryProbe.profile(spark)(body).jobs
 }
 
 object SparkTestBase {
