@@ -21,10 +21,9 @@ import org.apache.spark.sql.SparkSession
   *   dot-product acceleration rule.
   */
 object GraftSession {
-  def builder(cores: String = "*",
-              shufflePartitions: Option[Int] = None): SparkSession.Builder = {
-    val parts = shufflePartitions.getOrElse(
-      if (cores == "*") Runtime.getRuntime.availableProcessors() else cores.toInt)
+  def builder(cores: String = "*"): SparkSession.Builder = {
+    val parts =
+      if (cores == "*") Runtime.getRuntime.availableProcessors() else cores.toInt
     SparkSession.builder()
       .master(s"local[$cores]")
       .config("spark.sql.shuffle.partitions", parts.toString)

@@ -18,8 +18,7 @@ import java.nio.file.{Files, Paths, StandardOpenOption}
   *  - each completed dump appends one flushed line to
   *    `verify_progress.log` (name + wall ms), so a truncated run is
   *    diagnosable from the artifact directory alone;
-  *  - dumps run in small CONCURRENT batches (default 4 — override
-  *    with SPARK_GRAFT_VERIFY_THREADS, 1 = sequential): most of the
+  *  - dumps run in small CONCURRENT batches of 4: most of the
   *    391 queries are sub-second at sf0.01, so wall time is dominated
   *    by per-query Catalyst planning, which is single-threaded per
   *    query but parallelizes perfectly across queries. Memo builds
@@ -80,8 +79,7 @@ object Verify {
       Files.writeString(progress, line + "\n",
         StandardOpenOption.CREATE, StandardOpenOption.APPEND)
     }
-    val threads = sys.env.getOrElse("SPARK_GRAFT_VERIFY_THREADS", "4").toInt
-      .max(1)
+    val threads = 4
     val pool = java.util.concurrent.Executors.newFixedThreadPool(threads)
     implicit val ec: scala.concurrent.ExecutionContext =
       scala.concurrent.ExecutionContext.fromExecutorService(pool)

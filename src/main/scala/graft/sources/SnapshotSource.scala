@@ -71,7 +71,7 @@ class SnapshotSource extends TableProvider with DataSourceRegister {
       // makes version v the FIRST emitted micro-batch (Delta-CDF's
       // inclusive convention); default = follow forward from the head.
       val v = t.currentVersion()
-      val sch = t.schemaDdlOf(v).map(StructType.fromDDL).getOrElse(
+      val sch = t.schemaOf(v).map(StructType.fromDDL).getOrElse(
         throw new IllegalArgumentException(
           s"readChangeFeed at $root needs a committed table schema"))
       val startFrom = Option(options.get("startingVersion")).map(_.toLong)
@@ -118,7 +118,7 @@ class SnapshotSource extends TableProvider with DataSourceRegister {
             s"through the path option at $root — use " +
             "SnapshotTable.readChanges, which aliases physical names")
         Resolved(s"changes_${a}_$b", t.addedFilesBetween(a, b),
-          t.schemaDdlOf(b).map(StructType.fromDDL), t.dataDirPath,
+          t.schemaOf(b).map(StructType.fromDDL), t.dataDirPath,
           t.fileStatsOf(b), None)
       case _ =>
         val pinned = Option(options.get("version")).map(_.toLong)

@@ -94,8 +94,8 @@ final class SnapshotTable(root: String, val store: LogStore) {
   // plus at most that many delta tails — never the whole lineage.
   // Anchors are pure acceleration: a torn or missing anchor file
   // degrades to walking further back, and correctness never depends
-  // on one (at cluster scale the anchor loader is where a columnar
-  // checkpoint file would slot in — same protocol, different codec).
+  // on one. Anchors are parquet: the columnar checkpoint file of the
+  // Delta-Lake log shape.
 
   /** Reconstructed per-version table STATE: everything a snapshot
     * carries that outlives the commit that wrote it. Version-scoped
@@ -206,9 +206,9 @@ final class SnapshotTable(root: String, val store: LogStore) {
 
   /** Render `st` in the FULL-manifest grammar ([[parseFull]]'s input),
     * prefixed with the given version-scoped metadata lines. State
-    * deliberately excludes `#cdc=`/`#tag=` events — rendering is what
-    * restore and anchors use, and a replayed event there would make
-    * the change feed re-fire it. */
+    * deliberately excludes `#cdc=`/`#tag=` events — restore renders
+    * through here, and a replayed event there would make the change
+    * feed re-fire it. */
   private def renderState(meta: Seq[String], st: TableState): Seq[String] =
     st.schemaDdl.map(s => s"#schema=$s").toSeq ++ meta ++
       st.colmap.toSeq ++ st.checks.toSeq ++ st.part.toSeq ++
@@ -286,58 +286,29 @@ final class SnapshotTable(root: String, val store: LogStore) {
 
   /** An anchor's validated state, or None when absent, truncated, or
     * unparsable (→ the caller walks the deltas instead — anchors are
-    * acceleration, never a correctness dependency). Two codecs sniffed
-    * by magic bytes: PARQUET (the default since round 14 — columnar,
-    * dictionary+snappy compressed, read with an explicit projection
-    * schema; the parquet footer checksum IS the truncation guard) and
-    * the legacy TEXT codec, whose leading `#anchorlines=` count guards
-    * truncation on filesystems without atomic link semantics. */
+    * acceleration, never a correctness dependency). Anchors are PARQUET
+    * (columnar, dictionary+snappy compressed, read with an explicit
+    * projection schema); the parquet footer checksum IS the truncation
+    * guard, and any other bytes fail the read and fall back to the walk. */
   private def loadAnchor(v: Long): Option[TableState] =
     if (!store.exists(anchorPath(v))) None
     else scala.util.Try {
       manifestParses += 1
-      val p = anchorPath(v)
-      val head = {
-        // readNBytes, not read: a single read() may legally return
-        // short, which would misclassify a valid parquet anchor as text
-        val in = store.open(p)
-        try in.readNBytes(4) finally in.close()
-      }
-      if (head.sameElements("PAR1".getBytes("US-ASCII")))
-        readAnchorParquet(p)
-      else {
-        val lines = store.readLines(p)
-        require(lines.nonEmpty && lines.head.startsWith("#anchorlines=") &&
-          lines.head.stripPrefix("#anchorlines=").toInt == lines.size - 1,
-          s"anchor a$v truncated")
-        parseFull(lines.tail)
-      }
+      readAnchorParquet(anchorPath(v))
     }.toOption
 
-  /** Write the anchor side-file for `v` (idempotent, best-effort: a
-    * concurrent or earlier writer's anchor wins, a failure costs only
-    * walk length). Called by every publisher on the anchor cadence and
-    * by vacuum before it expires a retention window's delta bases.
-    * Parquet codec first (at 10^6 files the listing compresses ~10×
-    * and loads with column projection instead of line parsing); any
-    * parquet failure silently degrades to the TEXT codec — the anchor
-    * grammar is a codec detail, never a protocol change. */
+  /** Write the parquet anchor side-file for `v` (idempotent,
+    * best-effort: a concurrent or earlier writer's anchor wins, and a
+    * failed write leaves no anchor, which costs only walk length).
+    * Called by every publisher on the anchor cadence and by vacuum
+    * before it expires a retention window's delta bases (vacuum
+    * verifies the anchor loads and refuses otherwise). */
   private def writeAnchor(v: Long): Unit =
     if (!store.exists(anchorPath(v))) scala.util.Try {
       val st = state(v)
       // the stage callback writes to a store-provided scratch path;
-      // the PUBLISH rides the store's put-if-absent (a concurrent or
-      // earlier writer's anchor wins — best-effort by design)
-      store.putFileIfAbsent(anchorPath(v), { tmp =>
-        try writeAnchorParquet(tmp, st)
-        catch {
-          case _: Throwable =>
-            Files.deleteIfExists(tmp)
-            val body = renderState(Seq.empty, st)
-            Files.write(tmp, (s"#anchorlines=${body.size}" +: body)
-              .mkString("\n").getBytes("UTF-8"))
-        }
-      })
+      // the PUBLISH rides the store's put-if-absent
+      store.putFileIfAbsent(anchorPath(v), writeAnchorParquet(_, st))
       ()
     }
 
@@ -454,84 +425,73 @@ final class SnapshotTable(root: String, val store: LogStore) {
     } finally reader.close()
   }
 
+  /** Snapshot `v`'s state while its manifest is RETAINED: None for
+    * v < 0 and for an expired (vacuumed) version, even when its anchor
+    * still serves as a fold base. Every per-version state accessor
+    * reads through here, so an expired version reads as empty. */
+  private def retained(v: Long): Option[TableState] =
+    if (v < 0 || !store.exists(manifestPath(v))) None else Some(state(v))
+
   /** Relative data-file listing of snapshot `v` (reconstructed; the
     * version's manifest must still exist — an expired version refuses
     * even when its anchor survives as a fold base). */
   private def listing(v: Long): Seq[String] =
     if (v < 0) Seq.empty
     else {
-      require(store.exists(manifestPath(v)),
+      val st = retained(v)
+      require(st.isDefined,
         s"snapshot v$v at $root is expired (vacuumed) or was never committed")
-      state(v).files
+      st.get.files
     }
 
-  /** The idempotency tag of snapshot `v`, if it was tagged. Expired
-    * (vacuumed) manifests yield None — which means tag memory only
-    * spans the retention window: keep retention longer than any replay
-    * horizon (the same txn-retention contract as Delta's vacuum). */
-  private def tagOf(v: Long): Option[String] =
-    if (!store.exists(manifestPath(v))) None
-    else store.readLines(manifestPath(v))
-      .find(_.startsWith("#tag=")).map(_.stripPrefix("#tag="))
+  /** Version-scoped commit metadata of snapshot `v` — the manifest
+    * lines that are not state (see [[TableState]]), read in ONE parse;
+    * an expired version reads as empty. */
+  private[graft] def metaOf(v: Long): SnapshotTable.CommitMeta =
+    if (v < 0 || !store.exists(manifestPath(v))) SnapshotTable.NoMeta
+    else {
+      val lines = store.readLines(manifestPath(v))
+      def first(prefix: String): Option[String] =
+        lines.find(_.startsWith(prefix)).map(_.stripPrefix(prefix))
+      SnapshotTable.CommitMeta(first("#tag="), first("#op="),
+        first("#ts=").map(_.toLong),
+        lines.filter(_.startsWith("#cdc=")).map { l =>
+          val body = l.stripPrefix("#cdc=")
+          val i = body.lastIndexOf(':')
+          require(i > 0, s"malformed #cdc line in v$v at $root: ${l.take(80)}")
+          (java.net.URLDecoder.decode(body.substring(0, i), "UTF-8"),
+            body.substring(i + 1))
+        })
+    }
 
-  /** The commit KIND recorded with snapshot `v` (`#op=` — append |
-    * replace | compact | merge | delete | update; absent on manifests
-    * that predate the marker). CDC reads use it to decide whether a
-    * file-set rewrite carries logical changes (merge/delete/update →
-    * delete+insert rows), none (compact), or breaks the lineage
-    * (replace). */
-  private[graft] def opOf(v: Long): Option[String] =
-    if (v < 0 || !store.exists(manifestPath(v))) None
-    else store.readLines(manifestPath(v))
-      .find(_.startsWith("#op=")).map(_.stripPrefix("#op="))
+  /** The schema DDL recorded with snapshot `v` (every commit carries
+    * one). */
+  private[sources] def schemaOf(v: Long): Option[String] =
+    retained(v).flatMap(_.schemaDdl)
 
-  /** The schema DDL recorded with snapshot `v` (commits since the
-    * schema line shipped carry one in every delta; absent on older
-    * manifests). */
-  private def schemaOf(v: Long): Option[String] =
-    if (v < 0 || !store.exists(manifestPath(v))) None
-    else state(v).schemaDdl
+  /** [[schemaOf]], parsed. */
+  private def structOf(v: Long): Option[org.apache.spark.sql.types.StructType] =
+    schemaOf(v).map(org.apache.spark.sql.types.StructType.fromDDL)
 
-  /** The `#zm=` zone-map + `#bfl=` bloom lines of snapshot `v`'s
-    * STATE (a file's stats ride along for its whole lifetime — carried
-    * by the fold now, not by re-emission). */
-  private def zmLines(v: Long): Seq[String] =
-    if (v < 0 || !store.exists(manifestPath(v))) Seq.empty
-    else state(v).stat.map(_._2)
-
-  /** `#dv=` deletion-vector lines of snapshot `v`'s state. */
-  private def dvLines(v: Long): Seq[String] =
-    if (v < 0 || !store.exists(manifestPath(v))) Seq.empty
-    else state(v).dv.toSeq.sortBy(_._1).map(_._2)
+  /** The refusal of a snapshot without a `#schema=` line — every commit
+    * path writes one, so nothing here infers a schema from file
+    * footers; `what` names the verb. */
+  private def noSchema(what: String, v: Long): Nothing =
+    throw new IllegalStateException(
+      s"$what at $root: snapshot v$v has no recorded schema")
 
   /** Deletion-vector DESCRIPTORS of snapshot `v`, keyed by RELATIVE
     * path — count + payload token, O(1) each; position decode is
     * deferred to the distributed read side. Unlike zone maps a DV is a
     * CORRECTNESS artifact — a line that exists but fails to decode is
     * an error (silently skipping it would resurrect deleted rows),
-    * hence the require instead of a flatMap drop. */
+    * hence the throw instead of a flatMap drop. */
   private[graft] def dvRelOf(v: Long): Map[String, DeletionVectors.Dv] =
-    dvLines(v).map { l =>
+    retained(v).fold(Map.empty[String, DeletionVectors.Dv])(_.dv.values.map { l =>
       DeletionVectors.decodeLine(l).getOrElse(throw new IllegalStateException(
         s"snapshot v$v at $root carries an undecodable deletion-vector line: " +
           l.take(80)))
-    }.toMap
-
-  /** `#cdc=<enc rel>:<ctype>` change-sidecar lines of snapshot `v` —
-    * the rows a DV commit logically deleted, pre-materialized at
-    * commit time so the change feed replays them as an ordinary file
-    * read (Delta's `_change_data` design). Version-scoped by nature:
-    * NEVER carried forward by later commits. */
-  private[graft] def cdcSidecarsOf(v: Long): Seq[(String, String)] =
-    if (v < 0 || !store.exists(manifestPath(v))) Seq.empty
-    else store.readLines(manifestPath(v))
-      .filter(_.startsWith("#cdc=")).map { l =>
-        val body = l.stripPrefix("#cdc=")
-        val i = body.lastIndexOf(':')
-        require(i > 0, s"malformed #cdc line in v$v at $root: ${l.take(80)}")
-        (java.net.URLDecoder.decode(body.substring(0, i), "UTF-8"),
-          body.substring(i + 1))
-      }
+    }.toMap)
 
   /** Decoded per-file zone maps of snapshot `v`, keyed by ABSOLUTE
     * data-file path (the key the scan builder sees). Missing/legacy
@@ -552,9 +512,9 @@ final class SnapshotTable(root: String, val store: LogStore) {
   /** Full per-file manifest statistics of snapshot `v` (row count +
     * column stats + per-column blooms), keyed by ABSOLUTE path. */
   private[graft] def fileStatsOf(v: Long): Map[String, ZoneMaps.FileStats] =
-    if (v < 0 || !store.exists(manifestPath(v))) Map.empty
-    else {
-      val lines = zmLines(v)
+    retained(v).fold(Map.empty[String, ZoneMaps.FileStats]) { st =>
+      // a file's `#zm=`/`#bfl=` lines ride the fold with it
+      val lines = st.stat.map(_._2)
       val zm = lines.iterator
         .filter(_.startsWith(ZoneMaps.Prefix))
         .flatMap(ZoneMaps.decodeFull)
@@ -581,27 +541,22 @@ final class SnapshotTable(root: String, val store: LogStore) {
     * reads as unbucketed — bucketing is a layout OPTIMIZATION the scan
     * may report, never a correctness dependency. */
   def bucketingOf(v: Long): Option[(String, Int)] =
-    if (v < 0 || !store.exists(manifestPath(v))) None
-    else {
-      val spec = state(v).bucketing.map(_.stripPrefix("#bucketing="))
+    retained(v).flatMap { st =>
+      val spec = st.bucketing.map(_.stripPrefix("#bucketing="))
         .flatMap { s =>
           val i = s.lastIndexOf(':')
           if (i < 0) None else scala.util.Try((s.substring(0, i), s.substring(i + 1).toInt)).toOption
         }
       spec.filter { _ =>
         val fb = fbRel(v)
-        listing(v).forall(fb.contains)
+        st.files.forall(fb.contains)
       }
     }
 
-  /** `#fb=` file→bucket lines of snapshot `v`'s state (carried by the
-    * fold with their files, the `#zm=` convention). */
-  private def fbLines(v: Long): Seq[String] =
-    if (v < 0 || !store.exists(manifestPath(v))) Seq.empty
-    else state(v).fb.map(_._2)
-
+  /** File → bucket ids of snapshot `v`'s state, from its `#fb=` lines
+    * (carried by the fold with their files, the `#zm=` convention). */
   private def fbRel(v: Long): Map[String, Int] =
-    fbLines(v).flatMap { l =>
+    retained(v).toSeq.flatMap(_.fb).flatMap { case (_, l) =>
       val body = l.stripPrefix("#fb=")
       val i = body.lastIndexOf(':')
       if (i < 0) None
@@ -614,23 +569,14 @@ final class SnapshotTable(root: String, val store: LogStore) {
     fbRel(v).map { case (rel, b) =>
       Paths.get(root).resolve(rel).toString -> b }
 
-  /** Commit wall-clock of snapshot `v` in epoch millis — recorded
-    * INSIDE the manifest, so unlike a file mtime it is part of the
-    * atomic commit and survives copies/restores. Absent on manifests
-    * from before the line shipped. */
-  private def commitTsOf(v: Long): Option[Long] =
-    if (v < 0 || !store.exists(manifestPath(v))) None
-    else store.readLines(manifestPath(v))
-      .find(_.startsWith("#ts=")).map(_.stripPrefix("#ts=").toLong)
-
   /** TIMESTAMP-AS-OF resolution: the highest retained version whose
-    * recorded commit time is ≤ `tsMillis`. Versions without a
-    * timestamp line (pre-feature or vacuumed) are skipped; refuses
-    * when nothing qualifies (the table did not exist yet as of that
-    * time, or history has been vacuumed past it). */
+    * recorded commit time (`#ts=`, part of the atomic commit, so it
+    * survives copies and restores) is ≤ `tsMillis`. Vacuumed versions
+    * are skipped; refuses when nothing qualifies (the table did not
+    * exist yet as of that time, or history has been vacuumed past it). */
   def versionAsOf(tsMillis: Long): Long = {
     val head = currentVersion()
-    val hit = (head to 0L by -1).find(v => commitTsOf(v).exists(_ <= tsMillis))
+    val hit = (head to 0L by -1).find(v => metaOf(v).ts.exists(_ <= tsMillis))
     require(hit.isDefined,
       s"no retained snapshot at $root committed at or before epoch-ms $tsMillis")
     hit.get
@@ -644,8 +590,6 @@ final class SnapshotTable(root: String, val store: LogStore) {
   /** Absolute data-file paths of snapshot `v`. */
   private[sources] def resolvedFiles(v: Long): Seq[String] =
     listing(v).map(rel => Paths.get(root).resolve(rel).toString)
-
-  private[sources] def schemaDdlOf(v: Long): Option[String] = schemaOf(v)
 
   /** Absolute paths of the files ADDED between `from` (exclusive) and
     * `to` (inclusive), refusing ranges that cross a replace/compaction
@@ -661,20 +605,15 @@ final class SnapshotTable(root: String, val store: LogStore) {
     // ROWS — "added files" would silently misreport it as zero change,
     // so the append-only diff refuses exactly like a rewrite (use the
     // change feed, or compact to materialize the DVs first)
-    require(dvStateOf(from) == dvStateOf(to),
+    // (descriptor equality is exact: a vector survives a commit
+    // unchanged only as its line carried forward verbatim, and any
+    // position change re-encodes the line)
+    require(dvRelOf(from) == dvRelOf(to),
       s"versions $from..$to cross a row-delete (deletion-vector) commit " +
         s"at $root; the append-only file diff cannot express row removals " +
         "— use readChangesCdc, or compact to materialize the vectors")
     after.filterNot(before).map(rel => Paths.get(root).resolve(rel).toString)
   }
-
-  /** Comparable DV state of snapshot `v` (rel → descriptor) —
-    * equality across two versions means no row was DV-deleted or
-    * DV-restored between them. Descriptor equality is exact here: the
-    * only way a vector survives a commit unchanged is its line carried
-    * forward verbatim, and any position change re-encodes the line. */
-  private def dvStateOf(v: Long): Map[String, DeletionVectors.Dv] =
-    dvRelOf(v)
 
   // incremental tag index: manifests are immutable once committed, so
   // each version is read at most once per table handle — commitOnce
@@ -694,7 +633,7 @@ final class SnapshotTable(root: String, val store: LogStore) {
   private def tagCommittedUpTo(tag: String, head: Long): Boolean = synchronized {
     while (tagsScannedTo < head) {
       tagsScannedTo += 1
-      tagOf(tagsScannedTo).foreach(knownTags.add)
+      metaOf(tagsScannedTo).tag.foreach(knownTags.add)
     }
     knownTags.contains(tag)
   }
@@ -826,7 +765,6 @@ final class SnapshotTable(root: String, val store: LogStore) {
       mapping: Seq[(Int, String, String)] = Seq.empty,
       blooms: Map[String, Map[String, (Char, org.apache.spark.util.sketch.BloomFilter)]] = Map.empty): DataFrame = {
     import org.apache.spark.sql.functions._
-    def abs(rel: String): String = absPath(rel)
     val physSch = SnapshotTable.physicalSchemaUnder(schema, mapping)
     val empty = spark.createDataFrame(
       spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], physSch)
@@ -837,7 +775,7 @@ final class SnapshotTable(root: String, val store: LogStore) {
     // caller supplies them (ZoneMapFileIndex) — the DV'd half of a
     // merge-on-read composition keeps file-level skipping this way
     def readV1(files: Seq[String]): DataFrame =
-      ZoneMapFileIndex.read(spark, physSch, files.map(abs), zm, dataDirPath,
+      ZoneMapFileIndex.read(spark, physSch, files.map(absPath), zm, dataDirPath,
         blooms)
     val (dvd, clean) = rels.partition(dvs.contains)
     val cleanDf = if (clean.isEmpty) empty else readV1(clean)
@@ -865,11 +803,9 @@ final class SnapshotTable(root: String, val store: LogStore) {
     * first (silently dropping the new column on a bad draw). With the
     * manifest schema, new columns null-fill in pre-evolution files,
     * and time travel to an old version reads the OLD shape — each
-    * snapshot keeps the schema it was committed with. Pre-schema-line
-    * manifests (older tables) fall back to footer inference; a
-    * snapshot with an empty listing yields a typed empty frame; only
-    * a table with NO commits at all degrades to the zero-column
-    * `emptyDataFrame`. */
+    * snapshot keeps the schema it was committed with. A snapshot with
+    * an empty listing yields a typed empty frame; only a table with NO
+    * commits at all degrades to the zero-column `emptyDataFrame`. */
   def readAt(spark: SparkSession, v: Long): DataFrame = {
     val files = resolvedFiles(v) // validates the manifest exists
     val schema = readSchemaOf(v) // defaults-enriched: readers fill pre-evolution files
@@ -880,8 +816,7 @@ final class SnapshotTable(root: String, val store: LogStore) {
       if (mapping.nonEmpty) {
         // COLUMN-MAPPED read: the files store PHYSICAL names the
         // logical-schema DSv2 scan cannot serve directly
-        val logical = schema.getOrElse(throw new IllegalStateException(
-          s"column-mapped snapshot v$v at $root has no recorded schema"))
+        val logical = schema.getOrElse(noSchema("read", v))
         if (dvs.isEmpty)
           // vector-free: the full DSv2 scan under the PHYSICAL schema,
           // aliased back to the logical shape. Pushed filters rewrite
@@ -914,9 +849,7 @@ final class SnapshotTable(root: String, val store: LogStore) {
         // the injected DvReadRule applies to SQL catalog relations.
         val dvd = listing(v).filter(dvs.contains)
         val clean = listing(v).filterNot(dvs.contains)
-        val sch = schema.getOrElse(
-          spark.read.option("basePath", dataDirPath)
-            .parquet(files: _*).schema)
+        val sch = schema.getOrElse(noSchema("read", v))
         // manifest stats ride into the v1 half so the DV'd files keep
         // zone-map file skipping (the clean half prunes in its DSv2
         // ZoneMapScan as before)
@@ -930,18 +863,15 @@ final class SnapshotTable(root: String, val store: LogStore) {
     }
   }
 
-  /** LIVE rows of `rels` under `sch` with their file identity and row
-    * position attached (`__dv_file`, `__dv_pos`) and any existing
-    * deletion vectors subtracted — the scan every merge-on-read DML
-    * phase starts from: an already-deleted row must neither re-match
-    * a predicate nor re-enter a vector (its delete already replayed
-    * through the change feed). */
-  /** LIVE rows of `rels` under the LOGICAL schema `sch` with file
-    * identity and row position attached and existing vectors
-    * subtracted. Under a column `mapping`, the files are read with
-    * their frozen PHYSICAL names and the data columns alias back to
-    * the logical shape — predicates, key joins and assignments all
-    * operate logically, without any expression translation. */
+  /** LIVE rows of `rels` under the LOGICAL schema `sch` with their file
+    * identity and row position attached (`__dv_file`, `__dv_pos`) and
+    * any existing deletion vectors subtracted — the scan every
+    * merge-on-read DML phase starts from: an already-deleted row must
+    * neither re-match a predicate nor re-enter a vector (its delete
+    * already replayed through the change feed). Under a column
+    * `mapping`, the files are read with their frozen PHYSICAL names and
+    * the data columns alias back to the logical shape — predicates, key
+    * joins and assignments all operate logically. */
   private def liveRowsWithPos(spark: SparkSession,
       sch: org.apache.spark.sql.types.StructType,
       rels: Seq[String], dvs: Map[String, DeletionVectors.Dv],
@@ -1107,7 +1037,7 @@ final class SnapshotTable(root: String, val store: LogStore) {
     // evolution mixes old- and new-shape files, and a bare footer read
     // resolves from whichever file Spark samples — silently dropping
     // the evolved column on a bad draw
-    val schema = schemaOf(to).map(org.apache.spark.sql.types.StructType.fromDDL)
+    val schema = structOf(to)
     val mapping = colMapOf(to)
     (added.nonEmpty, schema) match {
       case (true, Some(logical)) if mapping.nonEmpty =>
@@ -1203,7 +1133,7 @@ final class SnapshotTable(root: String, val store: LogStore) {
         else if (cur.isEmpty) true
         else {
           val po = prev.map(m => m._1 -> m._2).toMap
-          !opOf(v).contains("compact") &&
+          !metaOf(v).op.contains("compact") &&
             cur.exists { case (id, p, _) => po.get(id).exists(_ != p) }
         }
       }
@@ -1256,7 +1186,8 @@ final class SnapshotTable(root: String, val store: LogStore) {
       val after = listing(v)
       val added = after.filterNot(before.toSet)
       val removed = before.filterNot(after.toSet)
-      val op = opOf(v).getOrElse(if (removed.isEmpty) "append" else "replace")
+      val meta = metaOf(v)
+      val op = meta.op.getOrElse(if (removed.isEmpty) "append" else "replace")
       // COLUMN-MAPPING LINEAGE: each chunk replays under its own ERA
       // MAPPING (see [[EraMappings]]) — `to`'s logical names joined to
       // the era's frozen physical names BY FIELD ID. Alters, mapping
@@ -1276,7 +1207,7 @@ final class SnapshotTable(root: String, val store: LogStore) {
       // common to both listings WITHOUT a covering sidecar (a
       // DV-diverging restore, or a foreign writer) is refused: the
       // feed cannot reconstruct those rows from the manifest alone.
-      val sidecars = cdcSidecarsOf(v)
+      val sidecars = meta.cdc
         .groupBy(_._2).map { case (ctype, xs) =>
           CdcChunk(xs.map(_._1), Map.empty, ctype, v, mapIns) }.toSeq
       locally {
@@ -1313,7 +1244,7 @@ final class SnapshotTable(root: String, val store: LogStore) {
               "re-bootstrap the consumer")
           val expected = grown.map(_._2).sum
           val hconf = new org.apache.hadoop.conf.Configuration()
-          val sidecarDeleteRows = cdcSidecarsOf(v).filter(_._2 == "delete")
+          val sidecarDeleteRows = meta.cdc.filter(_._2 == "delete")
             .map { case (rel, _) =>
               val rows = scala.util.Try(
                 ZoneMaps.collect(hconf, absPath(rel)).rows).getOrElse(-1L)
@@ -1370,9 +1301,7 @@ final class SnapshotTable(root: String, val store: LogStore) {
     * surface in the evolved shape (old files null-fill). */
   def readChangesCdc(spark: SparkSession, from: Long, to: Long): DataFrame = {
     import org.apache.spark.sql.functions._
-    val schema = schemaOf(to)
-      .map(org.apache.spark.sql.types.StructType.fromDDL)
-      .getOrElse(org.apache.spark.sql.types.StructType(Nil))
+    val schema = structOf(to).getOrElse(org.apache.spark.sql.types.StructType(Nil))
     val chunks = cdcChunksBetween(from, to)
     val empty = {
       val withMeta = schema
@@ -1436,9 +1365,7 @@ final class SnapshotTable(root: String, val store: LogStore) {
     require(changes.nonEmpty, "alterSchema needs at least one change")
     val v = currentVersion()
     require(v >= 0, s"alterSchema at $root: table has no committed snapshot")
-    val base = schemaOf(v).map(org.apache.spark.sql.types.StructType.fromDDL)
-      .getOrElse(throw new IllegalStateException(
-        s"alterSchema at $root: snapshot v$v has no recorded schema"))
+    val base = structOf(v).getOrElse(noSchema("alterSchema", v))
     var schema = base
     // None = untouched (table unmapped and no change needed one);
     // Some = the raw mapping this commit restates
@@ -1515,8 +1442,6 @@ final class SnapshotTable(root: String, val store: LogStore) {
       case SnapshotTable.WidenCol(n, _) => n.equalsIgnoreCase(k)
       case _ => false
     })
-    val bucketCarry =
-      if (keyTouched) Seq.empty else state(v).bucketing.toSeq
     // the PARTITION SPEC follows its source columns through the ALTER:
     // a rename rewrites the transform's source name (files' recorded
     // tuples keep working — they are keyed by the frozen PHYSICAL
@@ -1543,42 +1468,53 @@ final class SnapshotTable(root: String, val store: LogStore) {
     // their exprs are free-form SQL; the reserved invariants are ours.)
     val defaultsRestate: Option[String] = {
       val d0 = columnDefaultsOf(v)
-      if (d0.isEmpty) None
-      else {
-        val d1 = changes.foldLeft(d0) { (d, ch) => ch match {
-          case SnapshotTable.RenameCol(o, n) =>
-            d.map { case (c, x) => (if (c.equalsIgnoreCase(o)) n else c) -> x }
-          case SnapshotTable.DropCol(n) =>
-            d.filterNot(_._1.equalsIgnoreCase(n))
-          case _ => d
-        }}
-        if (d1 == d0) None else Some(defaultsLine(d1))
-      }
+      val d1 = changes.foldLeft(d0) { (d, ch) => ch match {
+        case SnapshotTable.RenameCol(o, n) =>
+          d.map { case (c, x) => (if (c.equalsIgnoreCase(o)) n else c) -> x }
+        case SnapshotTable.DropCol(n) =>
+          d.filterNot(_._1.equalsIgnoreCase(n))
+        case _ => d
+      }}
+      if (d1 == d0) None else Some(defaultsLine(d1))
     }
     val checksRestate: Option[String] = {
       val c0 = checkConstraintsOf(v)
-      if (c0.isEmpty) None
-      else {
-        val c1 = changes.foldLeft(c0) { (cs, ch) => ch match {
-          case SnapshotTable.RenameCol(o, n)
-              if cs.contains(notNullName(o)) =>
-            cs - notNullName(o) + (notNullName(n) -> s"$n IS NOT NULL")
-          case SnapshotTable.DropCol(n) => cs - notNullName(n)
-          case _ => cs
-        }}
-        if (c1 == c0) None else Some(checksLine(c1))
-      }
+      val c1 = changes.foldLeft(c0) { (cs, ch) => ch match {
+        case SnapshotTable.RenameCol(o, n)
+            if cs.contains(notNullName(o)) =>
+          cs - notNullName(o) + (notNullName(n) -> s"$n IS NOT NULL")
+        case SnapshotTable.DropCol(n) => cs - notNullName(n)
+        case _ => cs
+      }}
+      if (c1 == c0) None else Some(checksLine(c1))
     }
-    val lines = Seq(s"#base=$v", s"#schema=${SnapshotTable.bareDdl(schema)}") ++
-      raw.map(colmapLine).toSeq ++ bucketCarry ++ partRestate.toSeq ++
-      defaultsRestate.toSeq ++ checksRestate.toSeq ++
-      Seq(s"#ts=${System.currentTimeMillis()}", "#op=alter")
-    if (!publish(v + 1, lines))
-      throw new IllegalStateException(
+    publishAlter(v, Some(SnapshotTable.bareDdl(schema)),
+      colmap = raw.map(colmapLine), keepBucketing = !keyTouched,
+      part = partRestate, defaults = defaultsRestate, checks = checksRestate)
+      .getOrElse(throw new IllegalStateException(
         s"alterSchema at $root lost the publish race: a commit landed " +
-          "concurrently — re-run against the new head")
-    maybeAnchor(v + 1)
-    v + 1
+          "concurrently — re-run against the new head"))
+  }
+
+  /** Publish a METADATA-ONLY ALTER over head `v` as one delta manifest —
+    * the one publisher of every `#op=alter` commit. The file set is
+    * untouched, so the bucketing header carries unless `keepBucketing`
+    * is off (a change to the bucket key demotes the layout); each
+    * restated declarative line replaces its fold state, an absent one
+    * inherits. Lines render in grammar order: base, schema, colmap,
+    * bucketing, part, defaults, checks, ts, op. Returns the committed
+    * version, or None when a concurrent commit took `v + 1` — each verb
+    * keeps its own race policy. */
+  private def publishAlter(v: Long, schemaDdl: Option[String],
+      colmap: Option[String] = None, keepBucketing: Boolean = true,
+      part: Option[String] = None, defaults: Option[String] = None,
+      checks: Option[String] = None): Option[Long] = {
+    val lines = Seq(s"#base=$v") ++ schemaDdl.map(sc => s"#schema=$sc") ++
+      colmap ++ state(v).bucketing.filter(_ => keepBucketing) ++ part ++
+      defaults ++ checks ++
+      Seq(s"#ts=${System.currentTimeMillis()}", "#op=alter")
+    if (!publish(v + 1, lines)) None
+    else { maybeAnchor(v + 1); Some(v + 1) }
   }
 
   // ---- HIDDEN PARTITIONING: declarative transform spec --------------
@@ -1595,8 +1531,7 @@ final class SnapshotTable(root: String, val store: LogStore) {
 
   /** Raw `#part=` body of snapshot `v` ("" = explicit empty spec). */
   private def partRawOf(v: Long): Option[String] =
-    if (v < 0 || !store.exists(manifestPath(v))) None
-    else state(v).part.map(_.stripPrefix("#part="))
+    retained(v).flatMap(_.part).map(_.stripPrefix("#part="))
 
   /** Parsed partition spec of snapshot `v` (LOGICAL source names). */
   def partitionSpecOf(v: Long): Seq[PartitionTransforms.PT] =
@@ -1615,24 +1550,14 @@ final class SnapshotTable(root: String, val store: LogStore) {
     val v = currentVersion()
     require(v >= 0, s"setPartitionSpec at $root: table has no committed " +
       "snapshot (CREATE the table first — catalog CREATE commits v0)")
-    val schema = schemaOf(v).map(org.apache.spark.sql.types.StructType.fromDDL)
-      .getOrElse(throw new IllegalStateException(
-        s"setPartitionSpec at $root: snapshot v$v has no recorded schema"))
+    val schema = structOf(v).getOrElse(noSchema("setPartitionSpec", v))
     val ts = PartitionTransforms.parse(spec)
     PartitionTransforms.validate(ts, schema)
-    // metadata-only delta: schema restated (delta invariant), the
-    // bucketing header CARRIED explicitly (absence would demote it —
-    // a spec change never touches the bucket layout)
-    val lines = Seq(s"#base=$v", s"#schema=${SnapshotTable.bareDdl(schema)}") ++
-      state(v).bucketing.toSeq ++
-      Seq(s"#part=${PartitionTransforms.render(ts)}",
-        s"#ts=${System.currentTimeMillis()}", "#op=alter")
-    if (!publish(v + 1, lines))
-      throw new IllegalStateException(
+    publishAlter(v, Some(SnapshotTable.bareDdl(schema)),
+      part = Some(s"#part=${PartitionTransforms.render(ts)}"))
+      .getOrElse(throw new IllegalStateException(
         s"setPartitionSpec at $root lost the publish race: a commit " +
-          "landed concurrently — re-run against the new head")
-    maybeAnchor(v + 1)
-    v + 1
+          "landed concurrently — re-run against the new head"))
   }
 
   // ---- COLUMN DEFAULTS + NOT NULL invariants ------------------------
@@ -1657,8 +1582,7 @@ final class SnapshotTable(root: String, val store: LogStore) {
   // constant-fold IsNotNull over data it never checked).
 
   private def defaultsRawOf(v: Long): Option[String] =
-    if (v < 0 || !store.exists(manifestPath(v))) None
-    else state(v).defaults.map(_.stripPrefix("#defaults="))
+    retained(v).flatMap(_.defaults).map(_.stripPrefix("#defaults="))
 
   /** Column defaults of snapshot `v`: col → (currentSql, existsSql). */
   def columnDefaultsOf(v: Long): Map[String, (String, String)] =
@@ -1681,9 +1605,7 @@ final class SnapshotTable(root: String, val store: LogStore) {
                        defaultSql: String): Long = {
     val v = currentVersion()
     require(v >= 0, s"setColumnDefault at $root: no committed snapshot")
-    val schema = schemaOf(v).map(org.apache.spark.sql.types.StructType.fromDDL)
-      .getOrElse(throw new IllegalStateException(
-        s"setColumnDefault at $root: snapshot v$v has no recorded schema"))
+    val schema = structOf(v).getOrElse(noSchema("setColumnDefault", v))
     val i = schema.fieldNames.indexWhere(_ == col)
     require(i >= 0, s"setColumnDefault: no column $col in " +
       schema.fieldNames.mkString("[", ",", "]"))
@@ -1718,28 +1640,23 @@ final class SnapshotTable(root: String, val store: LogStore) {
     * clobbered) — what keeps an `ALTER ... ADD COLUMN ... DEFAULT`
     * from stranding its column default behind a transient race. A
     * `requireCol` that a concurrent ALTER dropped refuses instead. */
+  @annotation.tailrec
   private def publishDefaults(
       mutate: Map[String, (String, String)] => Map[String, (String, String)],
-      requireCol: Option[String]): Long = {
-    var attempts = 0
-    while (true) {
-      val v = currentVersion()
-      requireCol.foreach(c => require(
-        schemaOf(v).map(org.apache.spark.sql.types.StructType.fromDDL)
-          .exists(_.fieldNames.contains(c)),
-        s"default change at $root: column $c no longer exists " +
-          "(a concurrent ALTER dropped it)"))
-      val lines = Seq(s"#base=$v") ++
-        schemaOf(v).map(sc => s"#schema=$sc").toSeq ++
-        state(v).bucketing.toSeq ++
-        Seq(defaultsLine(mutate(columnDefaultsOf(v))),
-          s"#ts=${System.currentTimeMillis()}", "#op=alter")
-      if (publish(v + 1, lines)) { maybeAnchor(v + 1); return v + 1 }
-      attempts += 1
-      require(attempts <= 5,
-        s"default change at $root lost 5 publish races — re-run")
+      requireCol: Option[String], retries: Int = 0): Long = {
+    val v = currentVersion()
+    requireCol.foreach(c => require(
+      structOf(v).exists(_.fieldNames.contains(c)),
+      s"default change at $root: column $c no longer exists " +
+        "(a concurrent ALTER dropped it)"))
+    publishAlter(v, schemaOf(v),
+        defaults = Some(defaultsLine(mutate(columnDefaultsOf(v))))) match {
+      case Some(committed) => committed
+      case None =>
+        require(retries < 5,
+          s"default change at $root lost 5 publish races — re-run")
+        publishDefaults(mutate, requireCol, retries + 1)
     }
-    -1L // unreachable
   }
 
   /** Reserved CHECK-constraint name enforcing `col IS NOT NULL`. */
@@ -1753,8 +1670,7 @@ final class SnapshotTable(root: String, val store: LogStore) {
   def setNotNull(spark: SparkSession, col: String): Long = {
     val v = currentVersion()
     require(v >= 0, s"setNotNull at $root: no committed snapshot")
-    val schema = schemaOf(v).map(org.apache.spark.sql.types.StructType.fromDDL)
-    require(schema.exists(_.fieldNames.contains(col)),
+    require(structOf(v).exists(_.fieldNames.contains(col)),
       s"setNotNull: no column $col at $root")
     addCheckConstraint(spark, notNullName(col), s"$col IS NOT NULL")
   }
@@ -1778,7 +1694,7 @@ final class SnapshotTable(root: String, val store: LogStore) {
     * omitted columns. */
   private[sources] def readSchemaOf(v: Long)
       : Option[org.apache.spark.sql.types.StructType] =
-    schemaOf(v).map(org.apache.spark.sql.types.StructType.fromDDL).map { sc =>
+    structOf(v).map { sc =>
       val ds = columnDefaultsOf(v)
       if (ds.isEmpty) sc
       else {
@@ -1821,8 +1737,7 @@ final class SnapshotTable(root: String, val store: LogStore) {
 
   /** Named CHECK constraints of snapshot `v`: name → boolean SQL. */
   def checkConstraintsOf(v: Long): Map[String, String] =
-    if (v < 0 || !store.exists(manifestPath(v))) Map.empty
-    else state(v).checks.toSeq.flatMap { l =>
+    retained(v).flatMap(_.checks).toSeq.flatMap { l =>
       l.stripPrefix("#checks=").split(';').toSeq.filter(_.nonEmpty).map { e =>
         val i = e.indexOf(':')
         decU(e.substring(0, i)) -> decU(e.substring(i + 1))
@@ -1859,18 +1774,11 @@ final class SnapshotTable(root: String, val store: LogStore) {
     require(violations == 0L,
       s"cannot add CHECK constraint $name to $root: existing rows " +
         s"violate ($exprSql)")
-    val schemaLine = schemaOf(v).map(sc => s"#schema=$sc").toSeq
-    // a pure data-quality commit must not demote a bucketed layout:
-    // the file set is untouched, so the header carries verbatim
-    val lines = Seq(s"#base=$v") ++ schemaLine ++ state(v).bucketing.toSeq ++
-      Seq(checksLine(existing + (name -> exprSql)),
-        s"#ts=${System.currentTimeMillis()}", "#op=alter")
-    if (!publish(v + 1, lines))
-      throw new IllegalStateException(
+    publishAlter(v, schemaOf(v),
+      checks = Some(checksLine(existing + (name -> exprSql))))
+      .getOrElse(throw new IllegalStateException(
         s"addCheckConstraint at $root lost the publish race — re-run " +
-          "against the new head")
-    maybeAnchor(v + 1)
-    v + 1
+          "against the new head"))
   }
 
   /** Drop a named CHECK constraint — metadata-only; unknown names
@@ -1881,16 +1789,10 @@ final class SnapshotTable(root: String, val store: LogStore) {
     require(v >= 0, s"dropCheckConstraint at $root: no committed snapshot")
     val existing = checkConstraintsOf(v)
     require(existing.contains(name), s"no CHECK constraint $name on $root")
-    val schemaLine = schemaOf(v).map(sc => s"#schema=$sc").toSeq
-    val lines = Seq(s"#base=$v") ++ schemaLine ++ state(v).bucketing.toSeq ++
-      Seq(checksLine(existing - name),
-        s"#ts=${System.currentTimeMillis()}", "#op=alter")
-    if (!publish(v + 1, lines))
-      throw new IllegalStateException(
+    publishAlter(v, schemaOf(v), checks = Some(checksLine(existing - name)))
+      .getOrElse(throw new IllegalStateException(
         s"dropCheckConstraint at $root lost the publish race — re-run " +
-          "against the new head")
-    maybeAnchor(v + 1)
-    v + 1
+          "against the new head"))
   }
 
   /** Validate a freshly-written batch against snapshot `v`'s CHECK
@@ -1950,8 +1852,7 @@ final class SnapshotTable(root: String, val store: LogStore) {
     * dropped-then-re-added name can never be assigned a physical name
     * that resolves the dropped column's old bytes. */
   private def colMapRawOf(v: Long): Seq[(Int, String, String)] =
-    if (v < 0 || !store.exists(manifestPath(v))) Seq.empty
-    else state(v).colmap.toSeq.flatMap { l =>
+    retained(v).flatMap(_.colmap).toSeq.flatMap { l =>
       l.stripPrefix("#colmap=").split(';').toSeq.filter(_.nonEmpty).map { e =>
         val Array(id, p, lg) = e.split(':').padTo(3, "")
         (id.toInt, decU(p), decU(lg))
@@ -2058,18 +1959,16 @@ final class SnapshotTable(root: String, val store: LogStore) {
       : Seq[(Long, Option[Long], String, Long, Long, Long, Option[String])] = {
     val head = currentVersion()
     (0L to head).flatMap { v =>
-      if (!store.exists(manifestPath(v))) None
-      else {
-        val cur = listing(v)
-        val prev =
-          if (v > 0 && store.exists(manifestPath(v - 1))) listing(v - 1)
-          else Seq.empty
-        Some((v, commitTsOf(v),
-          opOf(v).getOrElse(if (prev.toSet.subsetOf(cur.toSet)) "append" else "replace"),
+      retained(v).map { st =>
+        val cur = st.files
+        val prev = retained(v - 1).fold(Seq.empty[String])(_.files)
+        val meta = metaOf(v)
+        (v, meta.ts,
+          meta.op.getOrElse(if (prev.toSet.subsetOf(cur.toSet)) "append" else "replace"),
           cur.size.toLong,
           cur.count(!prev.contains(_)).toLong,
           prev.count(!cur.toSet.contains(_)).toLong,
-          tagOf(v)))
+          meta.tag)
       }
     }
   }
@@ -2078,9 +1977,8 @@ final class SnapshotTable(root: String, val store: LogStore) {
     * listing) or replace (new files only). Returns the committed
     * version. Data lands invisible first; visibility is the atomic
     * manifest rename, retried under optimistic concurrency. */
-  def commit(df: DataFrame, replace: Boolean = false,
-             maxRetries: Int = 20): Long =
-    doCommit(df, replace, maxRetries, tag = None).get
+  def commit(df: DataFrame, replace: Boolean = false): Long =
+    doCommit(df, replace, tag = None).get
 
   /** Commit `df` BUCKETED on `key` into `buckets` hash buckets — the
     * pay-the-shuffle-once layout for co-located equi-joins: the commit
@@ -2096,8 +1994,7 @@ final class SnapshotTable(root: String, val store: LogStore) {
     * compaction) safely demotes the table to unbucketed reads. */
   def commitBucketed(df: DataFrame, key: String, buckets: Int,
                      replace: Boolean = false): Long =
-    doCommit(df, replace, maxRetries = 20, tag = None,
-      bucketing = Some((key, buckets))).get
+    doCommit(df, replace, tag = None, bucketing = Some((key, buckets))).get
 
   /** Commit with PER-FILE BLOOM FILTERS over `bloomKeys` — the
     * point-lookup complement to zone maps: uniform high-cardinality
@@ -2114,7 +2011,7 @@ final class SnapshotTable(root: String, val store: LogStore) {
   def commitWithBlooms(df: DataFrame, bloomKeys: Seq[String],
                        replace: Boolean = false,
                        expectedItemsPerFile: Int = 10000): Long =
-    doCommit(df, replace, maxRetries = 20, tag = None,
+    doCommit(df, replace, tag = None,
       bloomKeys = bloomKeys, bloomItems = expectedItemsPerFile).get
 
   /** [[commitOnce]] × [[commitBucketed]]: the exactly-once STREAMING
@@ -2126,7 +2023,7 @@ final class SnapshotTable(root: String, val store: LogStore) {
   def commitBucketedOnce(tag: String, df: DataFrame, key: String,
                          buckets: Int): Option[Long] =
     if (tagCommitted(tag)) None
-    else doCommit(df, replace = false, maxRetries = 20, tag = Some(tag),
+    else doCommit(df, replace = false, tag = Some(tag),
       bucketing = Some((key, buckets)))
 
   /** Idempotent tagged commit — the exactly-once sink primitive: a
@@ -2142,7 +2039,7 @@ final class SnapshotTable(root: String, val store: LogStore) {
   def commitOnce(tag: String, df: DataFrame,
                  replace: Boolean = false): Option[Long] =
     if (tagCommitted(tag)) None
-    else doCommit(df, replace, maxRetries = 20, tag = Some(tag))
+    else doCommit(df, replace, tag = Some(tag))
 
   /** Write `df` as a fresh INVISIBLE batch dir (no manifest references
     * it yet) and return (batch dir, relative file paths, `#zm=` stat
@@ -2280,8 +2177,7 @@ final class SnapshotTable(root: String, val store: LogStore) {
     (out, newFiles, zmNew ++ bfNew, fbNew)
   }
 
-  private def doCommit(df: DataFrame, replace: Boolean,
-                       maxRetries: Int, tag: Option[String],
+  private def doCommit(df: DataFrame, replace: Boolean, tag: Option[String],
                        bucketing: Option[(String, Int)] = None,
                        bloomKeys: Seq[String] = Nil,
                        bloomItems: Int = 10000,
@@ -2298,9 +2194,7 @@ final class SnapshotTable(root: String, val store: LogStore) {
     val head0 = currentVersion()
     val schemaAtWrite = if (replace) None else schemaOf(head0)
     val mapAtWrite = if (replace) Seq.empty else colMapRawOf(head0)
-    val checksAtWrite =
-      if (head0 < 0 || !store.exists(manifestPath(head0))) None
-      else state(head0).checks
+    val checksAtWrite = retained(head0).flatMap(_.checks)
     // the partition spec SURVIVES a replace (it is a declarative
     // table property like the schema — Delta keeps partitioning
     // across INSERT OVERWRITE): full manifests restate the raw line;
@@ -2315,8 +2209,7 @@ final class SnapshotTable(root: String, val store: LogStore) {
     val recordedSchema = {
       val prev =
         if (replace) None
-        else schemaOf(head0).map(org.apache.spark.sql.types.StructType.fromDDL)
-          .filter(_.nonEmpty)
+        else structOf(head0).filter(_.nonEmpty)
       // the manifest DDL is BARE names+types: a frame read off a
       // defaults-enriched table carries the reserved CURRENT_DEFAULT /
       // EXISTS_DEFAULT metadata keys, and toDDL would serialize them
@@ -2435,7 +2328,7 @@ final class SnapshotTable(root: String, val store: LogStore) {
       var carryStats: Seq[String] = Seq.empty
       expectedBase.foreach { b =>
         if (head != b) {
-          val nonAppend = (b + 1 to head).filterNot(w => opOf(w).contains("append"))
+          val nonAppend = (b + 1 to head).filterNot(w => metaOf(w).op.contains("append"))
           // the replace publishes the REWRITE's schema and (by design)
           // no column mapping — carrying files written under a
           // different schema or under frozen physical names would
@@ -2468,9 +2361,7 @@ final class SnapshotTable(root: String, val store: LogStore) {
         // case: concurrent same-shape appends), so only a genuine
         // divergence refuses.
         val headSchema = if (replace) None else schemaOf(head)
-        val headChecks =
-          if (head < 0 || !store.exists(manifestPath(head))) None
-          else state(head).checks
+        val headChecks = retained(head).flatMap(_.checks)
         if (!replace && (colMapRawOf(head) != mapAtWrite ||
             headChecks != checksAtWrite ||
             (headSchema != schemaAtWrite &&
@@ -2549,8 +2440,8 @@ final class SnapshotTable(root: String, val store: LogStore) {
           if (!isFull) maybeAnchor(committed)
         } else {
           attempt += 1
-          require(attempt <= maxRetries,
-            s"snapshot commit lost $maxRetries races at $root")
+          require(attempt <= SnapshotTable.CommitRetries,
+            s"snapshot commit lost ${SnapshotTable.CommitRetries} races at $root")
         }
       }
     }
@@ -2605,9 +2496,9 @@ final class SnapshotTable(root: String, val store: LogStore) {
       else Some(colmapLine(mapping.map { case (id, _, lg) =>
         if (lg.isEmpty) (id, "", "") else (id, lg, lg) }))
     doCommit(arranged, replace = true, op = Some("compact"),
-      maxRetries = 20, tag = None, expectedBase = Some(base),
+      tag = None, expectedBase = Some(base),
       colmapOverride = normalized,
-      checksOverride = if (base < 0) None else state(base).checks,
+      checksOverride = retained(base).flatMap(_.checks),
       partCluster = false)
       .getOrElse(throw new IllegalStateException(
         s"compact at $root lost the publish race — re-run"))
@@ -2659,8 +2550,7 @@ final class SnapshotTable(root: String, val store: LogStore) {
     val untouched = rels.filterNot(selected.toSet)
     if (selected.isEmpty || (selected.size == 1 && dvs.isEmpty))
       return SnapshotTable.OptimizeResult(v, 0, rels.size, 0, 0L)
-    val sch = schema.getOrElse(spark.read.option("basePath", dataDirPath)
-      .parquet(selected.map(absPath): _*).schema)
+    val sch = schema.getOrElse(noSchema("optimize", v))
     val live = readFilesDvAware(spark, sch, selected, dvs, zoneMapsOf(v),
       mapping)
     val nOut = if (targetFiles > 0) targetFiles
@@ -2673,9 +2563,8 @@ final class SnapshotTable(root: String, val store: LogStore) {
       writeBatch(toPhysical(live, mapping).coalesce(nOut),
         partCluster = false)
     val dvReclaimed = selected.flatMap(dvs.get).map(_.count).sum
-    val bodyLines = schema.map(sc =>
-        s"#schema=${SnapshotTable.bareDdl(sc)}").toSeq ++
-      Seq(s"#ts=${System.currentTimeMillis()}", "#op=compact") ++
+    val bodyLines = Seq(s"#schema=${SnapshotTable.bareDdl(sch)}",
+        s"#ts=${System.currentTimeMillis()}", "#op=compact") ++
       zmNew ++
       selected.map(rel => s"#rm=$rel") ++
       newFiles.map(rel => s"#add=$rel")
@@ -2791,8 +2680,7 @@ final class SnapshotTable(root: String, val store: LogStore) {
                           zm: Map[String, Map[String, ZoneMaps.ColStat]],
                           pk: String): Set[String] = {
     import org.apache.spark.sql.functions._
-    def abs(rel: String): String = absPath(rel)
-    val statsOfPk = rels.flatMap(rel => zm.get(abs(rel)).flatMap(_.get(pk)).map(rel -> _))
+    val statsOfPk = rels.flatMap(rel => zm.get(absPath(rel)).flatMap(_.get(pk)).map(rel -> _))
     val kind = statsOfPk.headOption.map(_._2.kind)
     // files whose pk stat disagrees with the majority kind (schema
     // drift) prune with nothing and rewrite conservatively
@@ -2844,9 +2732,7 @@ final class SnapshotTable(root: String, val store: LogStore) {
   def readMatchable(spark: SparkSession, delta: DataFrame, key: String,
                     v: Long): DataFrame = {
     val rels = listing(v)
-    val schema = schemaOf(v)
-      .map(org.apache.spark.sql.types.StructType.fromDDL)
-      .getOrElse(delta.schema)
+    val schema = structOf(v).getOrElse(delta.schema)
     val mapping = readMappingOf(v)
     val touched = touchDetect(spark, delta, rels,
       logicalZoneMaps(zoneMapsOf(v), mapping), key)
@@ -2911,8 +2797,7 @@ final class SnapshotTable(root: String, val store: LogStore) {
         "landed after the delta was classified — re-run the merge"))
     val rels = listing(v)
     val zm = logicalZoneMaps(zoneMapsOf(v), rawMapping.filter(_._3.nonEmpty))
-    val baseSchema = schemaOf(v)
-      .map(org.apache.spark.sql.types.StructType.fromDDL)
+    val baseSchema = structOf(v)
       .getOrElse(deleteCol.foldLeft(delta)(_ drop _).schema)
     val baseCols = baseSchema.fieldNames.toSeq
     val deltaCols = delta.columns.toSeq.filterNot(deleteCol.contains)
@@ -2975,7 +2860,6 @@ final class SnapshotTable(root: String, val store: LogStore) {
     // the target probe runs only when duplicates exist at all, and
     // only against the files those keys can touch (zone maps).
     val pk = keys.head
-    def abs(rel: String): String = absPath(rel)
     val dupKeysDf = deltaCk.groupBy(keys.map(col): _*)
       .agg(count(lit(1)).as("__graft_cnt"))
       .where(col("__graft_cnt") > 1)
@@ -3039,14 +2923,14 @@ final class SnapshotTable(root: String, val store: LogStore) {
         else Some(survivors.fold(upserts)(_.unionByName(upserts)))
       val written = writeRows(rows, targetFiles, m, vo, mapping)(
         enforceChecks(spark, _, mapping, v))
-      publishDml(v, Some(schema), "merge", "merge", mapLineOut, untouched,
+      publishDml(v, schema, "merge", "merge", mapLineOut, untouched,
         Nil, m, vo, written,
         // a concurrent append is benign iff key-touch detection proves
         // none of its files can hold a delta key (stat-less files are
         // touch-detected conservatively and conflict)
         (added, head) =>
           added.isEmpty || {
-            val addedAbs = added.map(abs).toSet
+            val addedAbs = added.map(absPath).toSet
             touchDetect(spark, deltaCk, added,
               logicalZoneMaps(zoneMapsOf(head).view.filterKeys(addedAbs).toMap,
                 mapping), pk).isEmpty
@@ -3098,17 +2982,17 @@ final class SnapshotTable(root: String, val store: LogStore) {
     val mapping = readMappingOf(v)
     val zm = logicalZoneMaps(zoneMapsOf(v), mapping)
     val dvs = dvRelOf(v)
-    val schema = readSchemaOf(v) // defaults-enriched: readers fill pre-evolution files
-    def abs(rel: String): String = absPath(rel)
+    // defaults-enriched: readers fill pre-evolution files
+    val sch = readSchemaOf(v).getOrElse(noSchema("deleteWhere", v))
 
-    val cond = resolvePredicate(spark, v, condition, schema)
+    val cond = resolvePredicate(spark, condition, sch)
 
     val (untouched, dropped, straddling) = {
       val u = Seq.newBuilder[String]
       val d = Seq.newBuilder[String]
       val r = Seq.newBuilder[String]
       rels.foreach { rel =>
-        val stats = zm.getOrElse(abs(rel), Map.empty[String, ZoneMaps.ColStat])
+        val stats = zm.getOrElse(absPath(rel), Map.empty[String, ZoneMaps.ColStat])
         if (stats.nonEmpty && ZoneMaps.provablyEmpty(cond, stats)) u += rel
         else if (stats.nonEmpty && ZoneMaps.provablyAllMatch(cond, stats)) d += rel
         else r += rel
@@ -3118,8 +3002,6 @@ final class SnapshotTable(root: String, val store: LogStore) {
     if (dropped.isEmpty && straddling.isEmpty)
       return SnapshotTable.DmlResult(v, 0, 0, untouched.size, 0)
 
-    lazy val sch = schema.getOrElse(
-      spark.read.parquet(straddling.map(abs): _*).schema)
     val pred = coalesce(condition, lit(false))
     def scanMatched(onRels: Seq[String]): DataFrame =
       liveRowsWithPos(spark, sch, onRels, dvs, mapping).filter(pred)
@@ -3135,13 +3017,13 @@ final class SnapshotTable(root: String, val store: LogStore) {
         else Some(readFilesDvAware(spark, sch, m.rewrites, dvs, mapping = mapping)
           .filter(!pred))
       val written = writeRows(kept, targetFiles, m, vo, mapping)(_ => ())
-      publishDml(v, schema, "delete", "deleteWhere", Nil, untouched.size,
+      publishDml(v, sch, "delete", "deleteWhere", Nil, untouched.size,
         dropped, m, vo, written, appendCannotMatch(cond, mapping))
     }
   }
 
-  /** Resolve a user predicate `Column` against snapshot `v`'s schema
-    * into a catalyst Expression the zone-map provers understand: the
+  /** Resolve a user predicate `Column` against a snapshot's schema
+    * `sch` into a catalyst Expression the zone-map provers understand: the
     * predicate is analyzed over an EMPTY typed frame (no data touched;
     * analyzed, not optimized, so an empty-relation rewrite can't
     * swallow the Filter node), then the coercion casts analysis wraps
@@ -3149,15 +3031,12 @@ final class SnapshotTable(root: String, val store: LogStore) {
     * for pushed scan filters, but this expression never passes through
     * the optimizer, and the stat provers match Attribute-vs-Literal
     * shapes only. */
-  private def resolvePredicate(spark: SparkSession, v: Long,
+  private def resolvePredicate(spark: SparkSession,
       condition: org.apache.spark.sql.Column,
-      schema: Option[org.apache.spark.sql.types.StructType])
+      sch: org.apache.spark.sql.types.StructType)
       : org.apache.spark.sql.catalyst.expressions.Expression = {
-    val probe = schema match {
-      case Some(sch) => spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], sch)
-      case None => readAt(spark, v)
-    }
+    val probe = spark.createDataFrame(
+      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], sch)
     val analyzed: org.apache.spark.sql.catalyst.expressions.Expression =
       probe.filter(condition).queryExecution.analyzed.collectFirst {
         case f: org.apache.spark.sql.catalyst.plans.logical.Filter => f.condition
@@ -3204,28 +3083,22 @@ final class SnapshotTable(root: String, val store: LogStore) {
     val mapping = readMappingOf(v)
     val zm = logicalZoneMaps(zoneMapsOf(v), mapping)
     val dvs = dvRelOf(v)
-    val schema = readSchemaOf(v) // defaults-enriched: readers fill pre-evolution files
-    def abs(rel: String): String = absPath(rel)
+    // defaults-enriched: readers fill pre-evolution files
+    val sch = readSchemaOf(v).getOrElse(noSchema("updateWhere", v))
 
     // validate SET targets up front — even a no-op update must refuse
     // a typo'd column, not silently "succeed"
-    schema.foreach { sch =>
-      val unknown = set.keySet -- sch.fieldNames.toSet
-      require(unknown.isEmpty,
-        s"updateWhere at $root: SET targets unknown column(s) ${unknown.mkString(", ")}")
-    }
-    val cond = resolvePredicate(spark, v, condition, schema)
+    val unknown = set.keySet -- sch.fieldNames.toSet
+    require(unknown.isEmpty,
+      s"updateWhere at $root: SET targets unknown column(s) ${unknown.mkString(", ")}")
+    val cond = resolvePredicate(spark, condition, sch)
     val (untouched, candidates) = rels.partition { rel =>
-      val stats = zm.getOrElse(abs(rel), Map.empty[String, ZoneMaps.ColStat])
+      val stats = zm.getOrElse(absPath(rel), Map.empty[String, ZoneMaps.ColStat])
       stats.nonEmpty && ZoneMaps.provablyEmpty(cond, stats)
     }
     if (candidates.isEmpty)
       return SnapshotTable.DmlResult(v, 0, 0, untouched.size, 0)
 
-    val sch = schema.getOrElse(spark.read.parquet(candidates.map(abs): _*).schema)
-    val unknown = set.keySet -- sch.fieldNames.toSet
-    require(unknown.isEmpty,
-      s"updateWhere at $root: SET targets unknown column(s) ${unknown.mkString(", ")}")
     val pred = coalesce(condition, lit(false))
     def scanMatched(onRels: Seq[String]): DataFrame =
       liveRowsWithPos(spark, sch, onRels, dvs, mapping).filter(pred)
@@ -3255,7 +3128,7 @@ final class SnapshotTable(root: String, val store: LogStore) {
       }.toIndexedSeq: _*))
       val written = writeRows((rewritten ++ applied).reduceOption(_ unionByName _),
         targetFiles, m, vo, mapping)(enforceChecks(spark, _, mapping, v))
-      publishDml(v, Some(sch), "update", "updateWhere", Nil, untouched.size,
+      publishDml(v, sch, "update", "updateWhere", Nil, untouched.size,
         Nil, m, vo, written, appendCannotMatch(cond, mapping))
     }
   }
@@ -3309,10 +3182,9 @@ final class SnapshotTable(root: String, val store: LogStore) {
     * once — at most the cap per file — and feed both the executor-side
     * vector encode and the change-sidecar write of [[dvMaterialize]];
     * UPDATE derives its new row versions from them too. The checkpoint
-    * is released when `use` returns or throws. `sch` is by name: a table
-    * without a recorded schema infers it only when it has a DV class. */
+    * is released when `use` returns or throws. */
   private def vectorOut[T](spark: SparkSession,
-      sch: => org.apache.spark.sql.types.StructType, m: Matches,
+      sch: org.apache.spark.sql.types.StructType, m: Matches,
       scanMatched: Seq[String] => DataFrame,
       dvs: Map[String, DeletionVectors.Dv], mapping: Seq[(Int, String, String)])
       (use: VectorOut => T): T =
@@ -3357,12 +3229,12 @@ final class SnapshotTable(root: String, val store: LogStore) {
     * disjoint, which rebases ([[publishRebaseable]]; `what` names the
     * verb in its errors); a refused publish reaps the batch and the
     * sidecars. `untouched` counts the candidates the verb ruled out. */
-  private def publishDml(v: Long, schema: Option[org.apache.spark.sql.types.StructType],
+  private def publishDml(v: Long, schema: org.apache.spark.sql.types.StructType,
       op: String, what: String, extraLines: Seq[String], untouched: Int,
       dropped: Seq[String], m: Matches, vo: VectorOut, w: Written,
       noMatch: (Seq[String], Long) => Boolean): SnapshotTable.DmlResult = {
-    val bodyLines = schema.map(s => s"#schema=${SnapshotTable.bareDdl(s)}").toSeq ++
-      Seq(s"#ts=${System.currentTimeMillis()}", s"#op=$op") ++
+    val bodyLines = Seq(s"#schema=${SnapshotTable.bareDdl(schema)}",
+        s"#ts=${System.currentTimeMillis()}", s"#op=$op") ++
       extraLines ++
       w.zmLines ++
       m.dvClass.map(rel => DeletionVectors.lineOf(rel, vo.dvs(rel))) ++
@@ -3445,16 +3317,16 @@ final class SnapshotTable(root: String, val store: LogStore) {
     // earlier vacuum with SHORTER retention may have deleted v(keepFrom)
     // itself (vacuum(1) then vacuum(3) before 3 new commits land) — a
     // missing manifest references nothing, it must not abort the sweep
-    val retained = (keepFrom to head).filter(v => store.exists(manifestPath(v)))
+    val retainedVs = (keepFrom to head).filter(v => store.exists(manifestPath(v)))
     val referenced: Set[String] =
-      retained.flatMap(listing).toSet ++ // relative "data/b…/f.parquet"
+      retainedVs.flatMap(listing).toSet ++ // relative "data/b…/f.parquet"
         // change sidecars of retained versions: a CDC consumer may
         // still replay any retained range, so its delete-row files
         // live exactly as long as the manifest that references them
-        retained.flatMap(v => cdcSidecarsOf(v).map(_._1)).toSet ++
+        retainedVs.flatMap(v => metaOf(v).cdc.map(_._1)).toSet ++
         // deletion-vector sidecar FILES referenced by retained `#dv=`
         // pointer lines: reaping one would break the retained read
-        retained.flatMap(v => dvRelOf(v).values.flatMap(_.sidecarRel)).toSet
+        retainedVs.flatMap(v => dvRelOf(v).values.flatMap(_.sidecarRel)).toSet
     var dataDeleted = 0
     store.listDirs(dataDir).foreach { bn =>
       val b = dataDir.resolve(bn)
@@ -3513,10 +3385,8 @@ final class SnapshotTable(root: String, val store: LogStore) {
     val perFile = rels.map(r => fs.get(Paths.get(root).resolve(r).toString))
     // `rows` is the LIVE count — physical footer rows minus deletion-
     // vector positions — so count(*) parity holds on DV'd tables
-    val dvTotal = {
-      val dv = dvRelOf(v)
-      rels.iterator.flatMap(dv.get).map(_.count).sum
-    }
+    val dv = dvRelOf(v)
+    val dvTotal = rels.iterator.flatMap(dv.get).map(_.count).sum
     val rows =
       if (perFile.forall(_.exists(_.rows >= 0)))
         Some(perFile.map(_.get.rows).sum - dvTotal)
@@ -3530,7 +3400,6 @@ final class SnapshotTable(root: String, val store: LogStore) {
     // deletes (rows stays exact either way: it nets the vectors).
     // Per-file zoneMapsOf stats are untouched — a physical superset
     // remains sound for pruning, just never for answering.
-    val dv = dvRelOf(v)
     val common =
       if (perFile.isEmpty) Set.empty[String]
       else rels.zip(perFile).map { case (rel, pf) =>
@@ -3582,7 +3451,9 @@ final class SnapshotTable(root: String, val store: LogStore) {
     while (!publish(target, s"#base=${target - 1}" +: bodyLines)) {
       attempts += 1
       val newHead = currentVersion()
-      val nonAppend = (target to newHead).filterNot(w => opOf(w).contains("append"))
+      // (version, op) of every intervening commit that is not an append
+      val nonAppend = (target to newHead).map(w => w -> metaOf(w).op)
+        .filterNot(_._2.contains("append"))
       // CONCURRENT SELECTIVE COMPACTIONS rebase too, when provably
       // DISJOINT (round 15): every file THIS delta removes must still
       // be listed at the new head (the other compaction touched none
@@ -3595,7 +3466,7 @@ final class SnapshotTable(root: String, val store: LogStore) {
       // constraint/alter commit this rewrite was never validated
       // against — refuses deterministically exactly as before.
       val disjointCompacts = nonAppend.nonEmpty && removedRels.nonEmpty &&
-        nonAppend.forall(w => opOf(w).contains("compact")) &&
+        nonAppend.forall(_._2.contains("compact")) &&
         removedRels.subsetOf(state(newHead).files.toSet) &&
         colMapRawOf(newHead) == colMapRawOf(base)
       // a schema-evolving append is NOT rebasable either: the delta
@@ -3606,7 +3477,7 @@ final class SnapshotTable(root: String, val store: LogStore) {
         cleanup()
         throw new IllegalStateException(
           s"$what at $root lost the publish race: a " +
-            (if (nonAppend.nonEmpty) s"non-append commit (v${nonAppend.head})"
+            (if (nonAppend.nonEmpty) s"non-append commit (v${nonAppend.head._1})"
              else if (evolved) "schema-evolving append"
              else s"commit storm ($attempts rebases)") +
             " landed during the operation, so the classification is " +
@@ -3671,6 +3542,28 @@ object SnapshotTable {
     new SnapshotTable(root, store)
   }
 
+  /** Version-scoped commit metadata of one snapshot — the manifest
+    * lines that are not state, never carried forward by later commits
+    * ([[SnapshotTable.metaOf]]):
+    *
+    *  - `tag`: the idempotency tag of a tagged commit. Expired
+    *    (vacuumed) manifests read as untagged, so tag memory spans the
+    *    retention window only: keep retention longer than any replay
+    *    horizon (the txn-retention contract of Delta's vacuum);
+    *  - `op`: the commit kind — append | replace | compact | merge |
+    *    delete | update | alter | restore. The change feed reads it to
+    *    decide whether a file-set rewrite carries row changes
+    *    (merge/delete/update/restore), none (compact, alter), or breaks
+    *    the lineage (replace);
+    *  - `ts`: the commit wall-clock in epoch millis;
+    *  - `cdc`: the `#cdc=` change sidecars as (rel, change type) — the
+    *    rows a DV commit logically deleted, materialized at commit time
+    *    so the change feed replays them as an ordinary file read
+    *    (Delta's `_change_data` design). */
+  private[graft] final case class CommitMeta(tag: Option[String],
+      op: Option[String], ts: Option[Long], cdc: Seq[(String, String)])
+  private[sources] val NoMeta = CommitMeta(None, None, None, Nil)
+
   /** One element of an [[SnapshotTable.alterSchema]] change list —
     * applied in order, validated as a whole, published as ONE commit. */
   sealed trait SchemaChange
@@ -3693,7 +3586,7 @@ object SnapshotTable {
   private[sources] def refuseIfWidenedPastPinned(t: SnapshotTable,
       endV: Long, pinned: org.apache.spark.sql.types.StructType,
       pinnedIds: Map[String, Int], what: String): Unit =
-    t.schemaDdlOf(endV)
+    t.schemaOf(endV)
       .map(org.apache.spark.sql.types.StructType.fromDDL).foreach { endSch =>
         val endByName = endSch.fields.map(f => f.name -> f.dataType).toMap
         val endMap = t.colMapOf(endV)
@@ -3776,6 +3669,9 @@ object SnapshotTable {
     * cadence (default 10 commits there; 20 here keeps anchor I/O
     * amortized below 5% of commit cost at any table size). */
   val AnchorInterval: Long = 20L
+
+  /** Lost version races a commit retries before it refuses. */
+  private val CommitRetries = 20
 
   /** [[SnapshotTable.optimize]]'s bin-pack threshold: files smaller
     * than this rewrite, larger clean files carry by reference. 128 MB

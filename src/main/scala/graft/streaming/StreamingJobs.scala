@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, OutputMode, Trigger}
 import org.apache.spark.sql.Row
-import graft.etl.{CleanJob, Pipeline, WarehouseLoad}
+import graft.etl.{CleanJob, Pipeline, Warehouse, WarehouseLoad}
 import graft.schema.Schemas
 
 /** Structured Streaming forms of the engine's pipelines (SURVEY.md §1.1:
@@ -701,7 +701,8 @@ object StreamingJobs {
     * Each table is a snapshot table (committed manifest = source of
     * truth); a table with no committed manifest reads as empty. */
   def loadState(spark: SparkSession, dir: String): WarehouseLoad.State = {
-    def tbl(name: String, schema: org.apache.spark.sql.types.StructType) = {
+    def tbl(name: String) = {
+      val schema = Warehouse.tableSchemas(name)
       val root = s"$dir/$name"
       val manifests = new java.io.File(s"$root/_manifests")
       if (manifests.isDirectory && manifests.list().exists(_.endsWith(".json")))
@@ -709,10 +710,10 @@ object StreamingJobs {
       else spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)
     }
     WarehouseLoad.State(
-      competitors = tbl("competitors", Schemas.competitors),
-      products = tbl("products", Schemas.products),
-      features = tbl("features", Schemas.features),
-      prices = tbl("product_prices", Schemas.productPrices),
-      packs = tbl("packs", Schemas.packs))
+      competitors = tbl("competitors"),
+      products = tbl("products"),
+      features = tbl("features"),
+      prices = tbl("product_prices"),
+      packs = tbl("packs"))
   }
 }

@@ -19,7 +19,7 @@ object ExplainQ {
     require(args.length >= 4, "usage: ExplainQ <sfDir> <outDir> <suffix> <spec...>")
     val sfDir = args(0); val outDir = args(1); val suffix = args(2)
     val s = graft.GraftSession.local(
-      sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
+      sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
     s.sparkContext.setLogLevel("ERROR")
     val raw: Map[String, () => DataFrame] = Map(
       "user_cf_pairs_slice" -> (() => graft.analytics.RelQueries.userCfPairsPlan(s, sfDir)),

@@ -664,7 +664,7 @@ class DeletionVectorSpec extends SparkTestBase {
     val (t, dir) = freshTable()
     t.commit(kv(0 until 100).repartition(1))
     val r = t.deleteWhere(spark, col("id") === 9L, dvMaxRowsPerFile = 1000)
-    val sidecarRel = t.cdcSidecarsOf(r.version).map(_._1)
+    val sidecarRel = t.metaOf(r.version).cdc.map(_._1)
     assert(sidecarRel.size === 1)
     def sidecarExists = Files.exists(Paths.get(dir).resolve(sidecarRel.head))
     assert(sidecarExists)

@@ -2309,7 +2309,7 @@ class SnapshotTableSpec extends SparkTestBase {
     assert(r.filesRewritten === 2,
       s"exactly the 2 small files must rewrite, got $r")
     assert(r.filesUntouched === 8 && r.dvRowsReclaimed === 0L)
-    assert(t.opOf(r.version) === Some("compact"))
+    assert(t.metaOf(r.version).op === Some("compact"))
     // content identical, manifest is an O(touched) delta
     assert(t.read(spark).orderBy("id").collect().toSeq === before)
     val lines = manifestLines(dir, r.version)
@@ -2400,6 +2400,13 @@ class SnapshotTableSpec extends SparkTestBase {
     Files.write(anchor, bytes.take(bytes.length / 2))
     val torn = SnapshotTable(dir)
     assert(torn.listingOf(20L) === viaAnchor)
+    // a TEXT anchor (`#anchorlines=` grammar, which no writer emits) is
+    // not read: this one lists only the first file, yet the fold walks
+    // the deltas and gives the full listing
+    Files.delete(anchor)
+    Files.write(anchor, Seq("#anchorlines=1", viaAnchor.head)
+      .mkString("\n").getBytes("UTF-8"))
+    assert(SnapshotTable(dir).listingOf(20L) === viaAnchor)
     // reads still exact through the anchor path
     Files.delete(anchor); Files.write(anchor, bytes)
     assert(SnapshotTable(dir).read(spark).count() === 210L)
@@ -2559,6 +2566,56 @@ class SnapshotTableSpec extends SparkTestBase {
     assert(t4.bucketingOf(t4.currentVersion()) === None,
       "renaming the bucket key demotes the layout")
     val _ = dir
+  }
+
+  test("ALTER verbs keep the bucketed layout and every declarative property they do not change") {
+    import org.apache.spark.sql.types.{IntegerType, LongType, StructField, StructType}
+    val (t, _) = freshTable()
+    t.commitBucketed(kv(0 until 32), "id", 4)
+    t.setPartitionSpec("truncate(8,id)")
+    t.setColumnDefault(spark, "val", "'none'")
+    t.addCheckConstraint(spark, "nonneg", "id >= 0")
+    case class Props(part: String, defaults: Map[String, (String, String)],
+                     checks: Map[String, String])
+    def props(): Props = {
+      val v = t.currentVersion()
+      Props(t.partitionSpec(), t.columnDefaultsOf(v), t.checkConstraintsOf(v))
+    }
+    // one ALTER: it commits the next version, the bucketed layout is
+    // still reported, and every property outside what `own` blanks
+    // reads back unchanged
+    def step(what: String)(alter: => Long)(own: Props => Props): Props = {
+      val before = props()
+      val v = alter
+      assert(v === t.currentVersion(), what)
+      assert(t.bucketingOf(v) === Some(("id", 4)), s"$what demoted the bucketed layout")
+      val after = props()
+      assert(own(after) === own(before), s"$what changed a property it does not own")
+      after
+    }
+    val p0 = props()
+    assert(p0.part === "truncate(8,id)" && p0.defaults.keySet === Set("val") &&
+      p0.checks.keySet === Set("nonneg"))
+    assert(step("setPartitionSpec")(t.setPartitionSpec("truncate(16,id)"))(
+      _.copy(part = "")).part === "truncate(16,id)")
+    assert(step("setColumnDefault")(t.setColumnDefault(spark, "val", "'other'"))(
+      _.copy(defaults = Map.empty)).defaults("val")._1 === "'other'")
+    assert(step("dropColumnDefault")(t.dropColumnDefault("val"))(
+      _.copy(defaults = Map.empty)).defaults.isEmpty)
+    assert(step("addCheckConstraint")(t.addCheckConstraint(spark, "small", "id < 1000"))(
+      _.copy(checks = Map.empty)).checks.keySet === Set("nonneg", "small"))
+    assert(step("dropCheckConstraint")(t.dropCheckConstraint("small"))(
+      _.copy(checks = Map.empty)).checks.keySet === Set("nonneg"))
+    step("setNotNull")(t.setNotNull(spark, "val"))(_.copy(checks = Map.empty))
+    assert(t.isNotNull(t.currentVersion(), "val") &&
+      t.checkConstraintsOf(t.currentVersion()).contains("nonneg"))
+    step("addColumns")(t.addColumns(StructType(Seq(StructField("n", IntegerType)))))(identity)
+    step("widenColumn")(t.widenColumn("n", LongType))(identity)
+    assert(t.read(spark).schema("n").dataType === LongType)
+    assert(t.read(spark).count() === 32L)
+    // renaming the bucket key demotes the layout
+    t.renameColumn("id", "key")
+    assert(t.bucketingOf(t.currentVersion()) === None)
   }
 
   test("OCC: an append written before a concurrent ADD CONSTRAINT refuses instead of publishing unvalidated") {

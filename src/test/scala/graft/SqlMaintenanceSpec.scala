@@ -41,7 +41,7 @@ class SqlMaintenanceSpec extends SparkTestBase {
     assert(out._1 === v1 + 1, "restore must land as a NEW version")
     assert(t.read(spark).count() === 50)
     assert(t.readAt(spark, v1).count() === 70, "history preserved")
-    assert(t.opOf(v1 + 1) === Some("restore"))
+    assert(t.metaOf(v1 + 1).op === Some("restore"))
     // change feed across the restore: v1's files deleted (their 20
     // rows), nothing inserted (v0's files never left)
     val cdc = t.readChangesCdc(spark, v1, v1 + 1)
@@ -86,7 +86,7 @@ class SqlMaintenanceSpec extends SparkTestBase {
     val (v, nf) = spark.sql("OPTIMIZE optcat.db.t INTO 2 FILES")
       .select("version", "n_files").as[(Long, Long)].head()
     assert(nf <= 2L && t.fileCount(v) <= 2)
-    assert(t.opOf(v) === Some("compact"))
+    assert(t.metaOf(v).op === Some("compact"))
     assert(t.read(spark).orderBy("id").as[(Long, String)].collect().toSeq
       === (0 until 60).map(i => (i.toLong, s"a$i")))
   }
@@ -106,7 +106,7 @@ class SqlMaintenanceSpec extends SparkTestBase {
     t.commit(grid.repartitionByRange(8, col("a")))
     val (v, nf) = spark.sql("OPTIMIZE zcat.db.g INTO 8 FILES ZORDER BY (a, b)")
       .select("version", "n_files").as[(Long, Long)].head()
-    assert(nf === 8L && t.opOf(v) === Some("compact"))
+    assert(nf === 8L && t.metaOf(v).op === Some("compact"))
     assert(t.read(spark).count() === 4096)
     // zone maps after z-order: files cover sub-ranges of BOTH columns
     // (row-major layout would give every file the full 0..63 b-range)
