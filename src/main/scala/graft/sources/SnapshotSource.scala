@@ -20,6 +20,13 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   *     .option("version", 3)                                     // time travel
   *     .option("changesFrom", 1).option("changesTo", 3)          // CDC delta
   *
+  * Two internal options serve [[SnapshotTable]]'s composed reads:
+  * `excludeDv` drops a version's vectored files (the clean half of the
+  * merge-on-read composition), and `physicalNames` resolves a
+  * column-mapped file set under its frozen physical schema (the caller
+  * aliases back). `physicalNames` combines with `excludeDv` and with
+  * `changesFrom`/`changesTo`.
+  *
   * Division of labor: THIS provider owns the transactional semantics —
   * manifest resolution (which immutable files ARE snapshot v), the
   * manifest-pinned schema (evolution without the footer lottery), and
@@ -108,88 +115,80 @@ class SnapshotSource extends TableProvider with DataSourceRegister {
     val to = Option(options.get("changesTo")).map(_.toLong)
     require(from.isDefined == to.isDefined,
       "changesFrom and changesTo must be set together")
-    (from, to) match {
-      case (Some(a), Some(b)) =>
-        // mapped tables store physical names this logical-schema scan
-        // would silently null out — fail CLOSED (SnapshotTable
-        // .readChanges serves mapped ranges through the alias path)
-        require(t.colMapOf(b).isEmpty,
-          s"changesFrom/changesTo on a column-mapped table is not served " +
-            s"through the path option at $root — use " +
-            "SnapshotTable.readChanges, which aliases physical names")
-        Resolved(s"changes_${a}_$b", t.addedFilesBetween(a, b),
-          t.schemaOf(b).map(StructType.fromDDL), t.dataDirPath,
-          t.fileStatsOf(b), None)
-      case _ =>
-        val pinned = Option(options.get("version")).map(_.toLong)
-        val v = pinned.getOrElse(t.currentVersion())
-        // deletion vectors: `excludeDv` restricts the resolution to the
-        // files WITHOUT a vector (the fast half of the merge-on-read
-        // composition readAt / DvReadRule build); without it a DV'd
-        // snapshot resolves whole and the table carries (root, v) so
-        // the injected rule can rebuild the composed read
-        val dvRels = t.dvRelOf(v).keySet
-        val exclude = options.getBoolean("excludeDv", false)
+    // the two file sets served here: the files a change range ADDED
+    // (resolved at its end `v`), or snapshot v's listing — minus its
+    // vectored files under `excludeDv` (the clean half of the
+    // merge-on-read composition readAt / DvReadRule build)
+    val range = from.zip(to)
+    val pinned = Option(options.get("version")).map(_.toLong)
+    val v = to.orElse(pinned).getOrElse(t.currentVersion())
+    val dvRels = t.dvRelOf(v).keySet
+    val exclude = options.getBoolean("excludeDv", false)
+    val files = range match {
+      case Some((a, b)) => t.addedFilesBetween(a, b)
+      case None =>
         val all = t.resolvedFiles(v)
-        val files =
-          if (!exclude || dvRels.isEmpty) all
-          else {
-            val rootPath = java.nio.file.Paths.get(root)
-            all.filterNot(f => dvRels.contains(
-              rootPath.relativize(java.nio.file.Paths.get(f)).toString))
-          }
-        // `physicalNames` (internal, set by SnapshotTable.readAt for
-        // column-mapped vector-free snapshots): resolve under the
-        // frozen PHYSICAL schema the files actually store — the full
-        // DSv2 scan stack (pushdown, manifest skipping, planning stats,
-        // KeyGroupedPartitioning for bucketed layouts) applies natively
-        // because the `#zm=`/`#bfl=`/`#fb=` stats are all keyed by
-        // physical name; the caller aliases the result back to the
-        // logical shape
-        // identity mappings (post-normalize) read as unmapped — the
-        // plain DSv2 fast path, no recompose (ids live on for the feed)
-        val mapping = t.readMappingOf(v)
-        val physical = options.getBoolean("physicalNames", false)
-        if (physical) {
-          require(mapping.nonEmpty,
-            s"physicalNames load of $root v$v: snapshot is not column-mapped")
-          require(dvRels.isEmpty,
-            s"physicalNames load of $root v$v: snapshot carries deletion " +
-              "vectors — only the composed readAt path serves those")
-          val logical = t.readSchemaOf(v).getOrElse(
-            throw new IllegalStateException(
-              s"column-mapped snapshot v$v at $root has no recorded schema"))
-          val physSch = SnapshotTable.physicalSchemaUnder(logical, mapping)
-          val byLogical = mapping.map(m => m._3 -> m._2).toMap
-          val bucketing = t.bucketingOf(v)
-            .map { case (k, n) => (byLogical.getOrElse(k, k), n) }
-            .filter { case (pk, _) => physSch.fields.find(_.name == pk)
-              .exists(f => GraftBucketFunction.supported(f.dataType)) }
-            .map { case (pk, n) =>
-              (pk, n, t.fileBucketsOf(v).map { case (abs, b) =>
-                new org.apache.hadoop.fs.Path(abs).toUri.getPath -> b })
-            }
-          return Resolved(s"v${v}_phys", files, Some(physSch), t.dataDirPath,
-            t.fileStatsOf(v), None, bucketing = bucketing)
+        if (!exclude || dvRels.isEmpty) all
+        else {
+          val rootPath = java.nio.file.Paths.get(root)
+          all.filterNot(f => dvRels.contains(
+            rootPath.relativize(java.nio.file.Paths.get(f)).toString))
         }
-        // only a HEAD load is streamable: a pinned version is frozen
-        // history, there is nothing to tail. dvInfo marks relations the
-        // injected rewrite must recompose — vectored snapshots AND
-        // column-mapped ones (the delegate scan resolves columns by
-        // logical name, which mapped files don't store). A mapped
-        // head's STREAM reads appended files under the frozen physical
-        // schema (positionally identical to the logical shape).
-        val streamSchema =
-          if (mapping.isEmpty) None
-          else t.readSchemaOf(v)
-            .map(SnapshotTable.physicalSchemaUnder(_, mapping))
-        Resolved(s"v$v", files,
-          t.readSchemaOf(v), t.dataDirPath,
-          t.fileStatsOf(v), if (pinned.isEmpty) Some(root) else None,
-          dvInfo = if ((!exclude && dvRels.nonEmpty) || mapping.nonEmpty)
-            Some((root, v)) else None,
-          streamSchema = streamSchema)
     }
+    val label = range.fold(s"v$v") { case (a, b) => s"changes_${a}_$b" }
+    // a range reads under its end's BARE manifest DDL (pre-evolution
+    // files null-fill, as readChangesCdc documents)
+    val schema =
+      if (range.isDefined) t.schemaOf(v).map(StructType.fromDDL)
+      else t.readSchemaOf(v)
+    // identity mappings (post-normalize) read as unmapped
+    val mapping = t.readMappingOf(v)
+    if (options.getBoolean("physicalNames", false)) {
+      // `physicalNames` (internal, set by SnapshotTable.cleanScan):
+      // resolve under the frozen PHYSICAL schema the files store — the
+      // `#zm=`/`#bfl=`/`#fb=` stats are keyed by physical name, so the
+      // whole DSv2 scan stack applies; the caller aliases back. A
+      // range's added files carry no vector (addedFilesBetween)
+      require(mapping.nonEmpty,
+        s"physicalNames load of $root v$v: snapshot is not column-mapped")
+      require(range.isDefined || exclude || dvRels.isEmpty,
+        s"physicalNames load of $root v$v: snapshot carries deletion " +
+          "vectors — load its clean files with excludeDv")
+      val physSch = SnapshotTable.physicalSchemaUnder(schema.getOrElse(
+        throw new IllegalStateException(
+          s"column-mapped snapshot v$v at $root has no recorded schema")),
+        mapping)
+      val byLogical = mapping.map(m => m._3 -> m._2).toMap
+      val bucketing = t.bucketingOf(v)
+        .map { case (k, n) => (byLogical.getOrElse(k, k), n) }
+        .filter { case (pk, _) => physSch.fields.find(_.name == pk)
+          .exists(f => GraftBucketFunction.supported(f.dataType)) }
+        .map { case (pk, n) =>
+          (pk, n, t.fileBucketsOf(v).map { case (abs, b) =>
+            new org.apache.hadoop.fs.Path(abs).toUri.getPath -> b })
+        }
+      return Resolved(s"${label}_phys", files, Some(physSch), t.dataDirPath,
+        t.fileStatsOf(v), None, bucketing = bucketing)
+    }
+    // a logical-schema scan of mapped files would silently null out
+    // renamed columns, and a range has no composed rewrite to fall
+    // back on — fail CLOSED
+    require(range.isEmpty || mapping.isEmpty,
+      s"changesFrom/changesTo on column-mapped $root needs physicalNames " +
+        "— use SnapshotTable.readChanges, which aliases physical names")
+    // only a HEAD load is streamable (a pinned version or a range is
+    // frozen history). dvInfo marks relations the injected rewrite
+    // must recompose — vectored snapshots AND column-mapped ones (the
+    // delegate scan resolves logical names, which mapped files don't
+    // store). A mapped head's STREAM reads appended files under the
+    // frozen physical schema (positionally identical to the logical).
+    val version = range.isEmpty
+    Resolved(label, files, schema, t.dataDirPath, t.fileStatsOf(v),
+      if (version && pinned.isEmpty) Some(root) else None,
+      dvInfo = if (version && ((!exclude && dvRels.nonEmpty) || mapping.nonEmpty))
+        Some((root, v)) else None,
+      streamSchema = schema.filter(_ => mapping.nonEmpty)
+        .map(SnapshotTable.physicalSchemaUnder(_, mapping)))
   }
 
   /** Factory for the delegate parquet table over an arbitrary subset
@@ -210,8 +209,10 @@ class SnapshotSource extends TableProvider with DataSourceRegister {
   private def schemaTableFactory(options: CaseInsensitiveStringMap,
                                  label: String, dataDir: String)
       : (Seq[String], StructType) => ParquetTable = {
+    // original-case keys: the scan builder merges these with the
+    // relation's options, and a lower-cased copy would duplicate them
     val merged = new CaseInsensitiveStringMap(
-      (options.asScala ++ Map("basePath" -> dataDir)).asJava)
+      (options.asCaseSensitiveMap.asScala ++ Map("basePath" -> dataDir)).asJava)
     (files, schema) => ParquetTable(s"graft_snapshot_$label",
       SparkSession.active, merged, files, Option(schema),
       classOf[ParquetFileFormat])

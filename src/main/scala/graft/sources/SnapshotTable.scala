@@ -746,51 +746,45 @@ final class SnapshotTable(root: String, val store: LogStore) {
     }
 
   /** Read `rels` under the LOGICAL `schema` with deletion vectors
-    * APPLIED — the one read primitive every internal consumer
-    * (readAt's DV'd subset, merge's matchable probe, update/delete
-    * rewrites, CDC replays) shares, so DV semantics cannot drift
-    * between paths. Files without a DV read exactly as before; files
-    * with one read through the v1 parquet path (which serves the
-    * `_metadata.file_path` / `row_index` columns) and LEFT ANTI join
-    * the deleted-position set (broadcast while small — see
-    * [[dvPairsDf]]). Under a column `mapping` the files read with
-    * their frozen PHYSICAL names and the result aliases back to the
-    * logical shape — pushed filters still reach the ZoneMapFileIndex
-    * because the optimizer rewrites them through the alias Project
-    * into the physical attributes the `#zm=` stats are keyed by. */
+    * APPLIED, all through the v1 parquet path — the read the DML
+    * rewrites, merge's matchable probe and the CDC replays share.
+    * Files with a vector take [[liveRowsWithPos]]'s positioned scan.
+    * Under a column `mapping` both halves read the frozen PHYSICAL
+    * names and alias back; pushed filters still reach the
+    * ZoneMapFileIndex through the alias Project. */
   private[sources] def readFilesDvAware(
       spark: SparkSession, schema: org.apache.spark.sql.types.StructType,
       rels: Seq[String], dvs: Map[String, DeletionVectors.Dv],
       zm: Map[String, Map[String, ZoneMaps.ColStat]] = Map.empty,
       mapping: Seq[(Int, String, String)] = Seq.empty,
       blooms: Map[String, Map[String, (Char, org.apache.spark.util.sketch.BloomFilter)]] = Map.empty): DataFrame = {
-    import org.apache.spark.sql.functions._
     val physSch = SnapshotTable.physicalSchemaUnder(schema, mapping)
-    val empty = spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], physSch)
-    def finish(df: DataFrame): DataFrame =
-      if (mapping.isEmpty) df else aliasToLogical(df, mapping, schema)
-    if (rels.isEmpty) return finish(empty)
-    // v1 reads answer pushed filters from the manifest stats when the
-    // caller supplies them (ZoneMapFileIndex) — the DV'd half of a
-    // merge-on-read composition keeps file-level skipping this way
-    def readV1(files: Seq[String]): DataFrame =
-      ZoneMapFileIndex.read(spark, physSch, files.map(absPath), zm, dataDirPath,
-        blooms)
     val (dvd, clean) = rels.partition(dvs.contains)
-    val cleanDf = if (clean.isEmpty) empty else readV1(clean)
-    finish(
-      if (dvd.isEmpty) cleanDf
-      else {
-        val scoped = dvs.view.filterKeys(dvd.toSet).toMap
-        val filtered = readV1(dvd)
-          .withColumn("__dv_file", fileKeyCol)
-          .withColumn("__dv_pos", col("_metadata.row_index"))
-          .join(dvPairsDf(spark, scoped),
-            Seq("__dv_file", "__dv_pos"), "left_anti")
-          .drop("__dv_file", "__dv_pos")
-        cleanDf.unionByName(filtered)
-      })
+    val cleanDf = aliasToLogical(
+      if (clean.isEmpty) spark.createDataFrame(
+        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], physSch)
+      else ZoneMapFileIndex.read(spark, physSch, clean.map(absPath), zm,
+        dataDirPath, blooms),
+      mapping, schema)
+    if (dvd.isEmpty) cleanDf
+    else cleanDf.unionByName(liveRowsWithPos(spark, schema, dvd, dvs, mapping,
+      zm, blooms).drop("__dv_file", "__dv_pos"))
+  }
+
+  /** The clean scan: the `graft-snapshot` DSv2 load of `opts` (a
+    * version, or a `changesFrom`/`changesTo` range). Under a column
+    * `mapping` it resolves the frozen PHYSICAL names and aliases back
+    * to `logical`; pushed filters rewrite through the alias Project
+    * onto the physical attributes the `#zm=` stats are keyed by, and
+    * the alias-aware ProjectExec carries a bucketed layout's
+    * KeyGroupedPartitioning onto the logical ones. */
+  private def cleanScan(spark: SparkSession, opts: Map[String, String],
+      mapping: Seq[(Int, String, String)],
+      logical: => org.apache.spark.sql.types.StructType): DataFrame = {
+    val load = spark.read.format("graft-snapshot")
+    if (mapping.isEmpty) load.options(opts).load(root)
+    else aliasToLogical(load.options(opts + ("physicalNames" -> "true")).load(root),
+      mapping, logical)
   }
 
   /** Time travel: read snapshot `v` as of its commit.
@@ -805,97 +799,67 @@ final class SnapshotTable(root: String, val store: LogStore) {
     * and time travel to an old version reads the OLD shape — each
     * snapshot keeps the schema it was committed with. A snapshot with
     * an empty listing yields a typed empty frame; only a table with NO
-    * commits at all degrades to the zero-column `emptyDataFrame`. */
+    * commits at all degrades to the zero-column `emptyDataFrame`.
+    *
+    * MERGE-ON-READ, whatever the column mapping: files without a
+    * vector take the [[cleanScan]], vectored ones the positioned
+    * [[liveRowsWithPos]] with the manifest stats, so both halves skip
+    * files. DvReadRule applies this composition to SQL relations. */
   def readAt(spark: SparkSession, v: Long): DataFrame = {
-    val files = resolvedFiles(v) // validates the manifest exists
+    val files = listing(v) // validates the manifest exists
     val schema = readSchemaOf(v) // defaults-enriched: readers fill pre-evolution files
     if (files.isEmpty && schema.isEmpty) spark.emptyDataFrame // table never committed
     else {
-      val dvs = dvRelOf(v).view.filterKeys(listing(v).toSet).toMap
+      val dvs = dvRelOf(v).view.filterKeys(files.toSet).toMap
       val mapping = readMappingOf(v)
-      if (mapping.nonEmpty) {
-        // COLUMN-MAPPED read: the files store PHYSICAL names the
-        // logical-schema DSv2 scan cannot serve directly
-        val logical = schema.getOrElse(noSchema("read", v))
-        if (dvs.isEmpty)
-          // vector-free: the full DSv2 scan under the PHYSICAL schema,
-          // aliased back to the logical shape. Pushed filters rewrite
-          // through the alias Project into the physical attributes the
-          // `#zm=` stats are keyed by, so manifest file-skipping,
-          // planning statistics AND a bucketed layout's
-          // KeyGroupedPartitioning (storage-partitioned joins — the
-          // alias-aware ProjectExec carries the partitioning onto the
-          // logical attributes) all report through the scan node.
-          aliasToLogical(
-            spark.read.format("graft-snapshot").option("version", v)
-              .option("physicalNames", "true").load(root),
-            mapping, logical)
-        else
-          // vectored subset: the v1 path (the only one serving
-          // _metadata.row_index for the position anti-join), manifest
-          // file-skip intact via ZoneMapFileIndex
-          readFilesDvAware(spark, logical, listing(v), dvs, zoneMapsOf(v),
-            mapping, bloomsOf(v))
-      }
-      else if (dvs.isEmpty)
-        // DSv2 read (SnapshotSource): same files + manifest schema, but
-        // as a connector-API Table, so pushed filters and pruned columns
-        // report through the scan node
-        spark.read.format("graft-snapshot").option("version", v).load(root)
-      else {
-        // MERGE-ON-READ: clean files keep the full DSv2 zone-map scan
-        // (excludeDv restricts the provider's resolution to them); DV'd
-        // files read via readFilesDvAware's anti-join. Same composition
-        // the injected DvReadRule applies to SQL catalog relations.
-        val dvd = listing(v).filter(dvs.contains)
-        val clean = listing(v).filterNot(dvs.contains)
-        val sch = schema.getOrElse(noSchema("read", v))
-        // manifest stats ride into the v1 half so the DV'd files keep
-        // zone-map file skipping (the clean half prunes in its DSv2
-        // ZoneMapScan as before)
-        val dvPart = readFilesDvAware(spark, sch, dvd, dvs, zoneMapsOf(v),
-          blooms = bloomsOf(v))
-        if (clean.isEmpty) dvPart
-        else spark.read.format("graft-snapshot").option("version", v)
-          .option("excludeDv", "true").load(root)
-          .unionByName(dvPart)
-      }
+      def logical = schema.getOrElse(noSchema("read", v))
+      val (vectored, clean) = files.partition(dvs.contains)
+      def cleanPart = cleanScan(spark,
+        Map("version" -> v.toString, "excludeDv" -> "true"), mapping, logical)
+      def dvPart = liveRowsWithPos(spark, logical, vectored, dvs, mapping,
+        zoneMapsOf(v), bloomsOf(v)).drop("__dv_file", "__dv_pos")
+      if (vectored.isEmpty) cleanPart
+      else if (clean.isEmpty) dvPart
+      else cleanPart.unionByName(dvPart)
     }
   }
 
   /** LIVE rows of `rels` under the LOGICAL schema `sch` with their file
     * identity and row position attached (`__dv_file`, `__dv_pos`) and
-    * any existing deletion vectors subtracted — the scan every
-    * merge-on-read DML phase starts from: an already-deleted row must
-    * neither re-match a predicate nor re-enter a vector (its delete
-    * already replayed through the change feed). Under a column
+    * any existing deletion vectors subtracted — the one positioned
+    * scan: every merge-on-read DML phase starts from it (an
+    * already-deleted row must neither re-match a predicate nor
+    * re-enter a vector: its delete already replayed through the change
+    * feed), and the vectored half of every read is it minus the two
+    * position columns. It reads through the v1 parquet path, the only
+    * one serving `_metadata.row_index`; `zm`/`blooms` (the manifest
+    * stats) let its ZoneMapFileIndex skip files, and without them it
+    * is the plain path-list read. The deleted positions LEFT ANTI join
+    * in, broadcast while small (see [[dvPairsDf]]). Under a column
     * `mapping`, the files are read with their frozen PHYSICAL names and
     * the data columns alias back to the logical shape — predicates, key
     * joins and assignments all operate logically. */
   private def liveRowsWithPos(spark: SparkSession,
       sch: org.apache.spark.sql.types.StructType,
       rels: Seq[String], dvs: Map[String, DeletionVectors.Dv],
-      mapping: Seq[(Int, String, String)] = Seq.empty): DataFrame = {
+      mapping: Seq[(Int, String, String)] = Seq.empty,
+      zm: Map[String, Map[String, ZoneMaps.ColStat]] = Map.empty,
+      blooms: Map[String, Map[String, (Char, org.apache.spark.util.sketch.BloomFilter)]] = Map.empty): DataFrame = {
     import org.apache.spark.sql.functions._
     // every consumer matches per-file work back to manifest rels by
     // the raw URI key — an encodable name would silently MISS its own
     // match counts (classifying real matches as zero-match carry-
     // forward), so the guard fails closed here, not just at DV time
     requireDvKeySafe(rels)
-    val physSch = SnapshotTable.physicalSchemaUnder(sch, mapping)
-    val byLogical = mapping.map(m => m._3 -> m._2).toMap
-    val base = spark.read.schema(physSch).option("basePath", dataDirPath)
-      .parquet(rels.map(absPath): _*)
-      .withColumn("__dv_file", fileKeyCol)
-      .withColumn("__dv_pos", col("_metadata.row_index"))
-    val aliased =
-      if (mapping.isEmpty) base
-      else base.select((sch.fields.map(f => col("`" +
-          byLogical.getOrElse(f.name, f.name) + "`").as(f.name)).toSeq ++
-        Seq(col("__dv_file"), col("__dv_pos"))).toIndexedSeq: _*)
+    val positioned = aliasToLogical(
+      ZoneMapFileIndex.read(spark, SnapshotTable.physicalSchemaUnder(sch, mapping),
+        rels.map(absPath), zm, dataDirPath, blooms)
+        .withColumn("__dv_file", fileKeyCol)
+        .withColumn("__dv_pos", col("_metadata.row_index")),
+      mapping, sch, Seq("__dv_file", "__dv_pos"))
     val scoped = dvs.view.filterKeys(rels.toSet).toMap
-    if (scoped.isEmpty) aliased
-    else aliased.join(dvPairsDf(spark, scoped),
+    if (scoped.isEmpty) positioned
+    else positioned.join(dvPairsDf(spark, scoped),
       Seq("__dv_file", "__dv_pos"), "left_anti")
   }
 
@@ -1004,15 +968,11 @@ final class SnapshotTable(root: String, val store: LogStore) {
     if (resolvedFiles(v).isEmpty)
       spark.createDataFrame(
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-    else if (dvRelOf(v).nonEmpty || readMappingOf(v).nonEmpty)
-      // DV'd head: the merge-on-read composition, pruned to the
-      // declared columns (the anti-join adds only metadata columns,
-      // which prune away with the final drop)
+    else
+      // the snapshot read, pruned and cast to the declared columns
+      // (the anti-join adds only metadata columns, which prune away)
       readAt(spark, v).select(schema.fields.map(f =>
         org.apache.spark.sql.functions.col(f.name).cast(f.dataType).as(f.name)).toIndexedSeq: _*)
-    else
-      spark.read.format("graft-snapshot").schema(schema)
-        .option("version", v).load(root)
   }
 
   /** INCREMENTAL consumption (CDC-style): the rows ADDED between
@@ -1036,23 +996,14 @@ final class SnapshotTable(root: String, val store: LogStore) {
     // readAt does: a bootstrap (from = -1) or a range spanning a schema
     // evolution mixes old- and new-shape files, and a bare footer read
     // resolves from whichever file Spark samples — silently dropping
-    // the evolved column on a bad draw
+    // the evolved column on a bad draw. Mapped files store the frozen
+    // physical names at every version, so `to`'s mapping resolves them
     val schema = structOf(to)
-    val mapping = colMapOf(to)
-    (added.nonEmpty, schema) match {
-      case (true, Some(logical)) if mapping.nonEmpty =>
-        // column-mapped delta: physical-schema v1 read + logical alias
-        // (files store frozen physical names at every version)
-        val rootPath = Paths.get(root)
-        val rels = added.map(a => rootPath.relativize(Paths.get(a)).toString)
-        readFilesDvAware(spark, logical, rels, Map.empty, mapping = mapping)
-      case (true, _) =>
-        spark.read.format("graft-snapshot")
-          .option("changesFrom", from).option("changesTo", to).load(root)
-      case (false, Some(sch)) =>
-        spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], sch)
-      case (false, None) => spark.emptyDataFrame
-    }
+    if (added.nonEmpty)
+      cleanScan(spark, Map("changesFrom" -> from.toString, "changesTo" -> to.toString),
+        readMappingOf(to), schema.getOrElse(noSchema("readChanges", to)))
+    else schema.fold(spark.emptyDataFrame)(sch =>
+      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], sch))
   }
 
   /** The CDC file chunks between `from` (exclusive) and `to`
@@ -1912,16 +1863,20 @@ final class SnapshotTable(root: String, val store: LogStore) {
     }
   }
 
-  /** Alias a physical-named frame back to the logical shape. */
+  /** Alias a physical-named frame back to the logical shape, keeping
+    * the `passThrough` columns after it; passthrough when unmapped. */
   private def aliasToLogical(df: DataFrame,
       mapping: Seq[(Int, String, String)],
-      logical: org.apache.spark.sql.types.StructType): DataFrame = {
-    val byLogical = mapping.map(m => m._3 -> m._2).toMap
-    df.select(logical.fields.map { f =>
-      org.apache.spark.sql.functions
-        .col("`" + byLogical.getOrElse(f.name, f.name) + "`").as(f.name)
-    }.toIndexedSeq: _*)
-  }
+      logical: org.apache.spark.sql.types.StructType,
+      passThrough: Seq[String] = Nil): DataFrame =
+    if (mapping.isEmpty) df
+    else {
+      val byLogical = mapping.map(m => m._3 -> m._2).toMap
+      df.select((logical.fields.map { f =>
+        org.apache.spark.sql.functions
+          .col("`" + byLogical.getOrElse(f.name, f.name) + "`").as(f.name)
+      } ++ passThrough.map(org.apache.spark.sql.functions.col)).toIndexedSeq: _*)
+    }
 
   /** METADATA-ONLY `RENAME COLUMN` — zero data I/O on any table size:
     * the commit restates the logical schema with the new name and a
@@ -2224,15 +2179,19 @@ final class SnapshotTable(root: String, val store: LogStore) {
           org.apache.spark.sql.types.StructType(bare.fields.map { f =>
             byName.get(f.name) match {
               case None => f.copy(nullable = true)
-              case Some(pf) if pf.dataType != f.dataType &&
-                  SnapshotTable.legalWiden(f.dataType, pf.dataType) =>
-                // a narrow batch appended onto a WIDENED column keeps
+              case Some(pf) =>
+                // a column the head has stays nullable if either side
+                // says so: a NOT NULL batch restating a nullable column
+                // would make the reads of the files that lack it fail.
+                // A narrow batch appended onto a WIDENED column keeps
                 // the manifest wide: the narrow file reads widened
                 // natively, while restating the narrow type would break
                 // reads of the files already written wide (narrowing
                 // parquet reads are unsupported)
-                f.copy(dataType = pf.dataType)
-              case _ => f
+                f.copy(nullable = f.nullable || pf.nullable,
+                  dataType = if (pf.dataType != f.dataType &&
+                    SnapshotTable.legalWiden(f.dataType, pf.dataType)) pf.dataType
+                  else f.dataType)
             }
           })
       }
@@ -2732,7 +2691,7 @@ final class SnapshotTable(root: String, val store: LogStore) {
   def readMatchable(spark: SparkSession, delta: DataFrame, key: String,
                     v: Long): DataFrame = {
     val rels = listing(v)
-    val schema = structOf(v).getOrElse(delta.schema)
+    val schema = readSchemaOf(v).getOrElse(delta.schema)
     val mapping = readMappingOf(v)
     val touched = touchDetect(spark, delta, rels,
       logicalZoneMaps(zoneMapsOf(v), mapping), key)
@@ -2797,7 +2756,7 @@ final class SnapshotTable(root: String, val store: LogStore) {
         "landed after the delta was classified — re-run the merge"))
     val rels = listing(v)
     val zm = logicalZoneMaps(zoneMapsOf(v), rawMapping.filter(_._3.nonEmpty))
-    val baseSchema = structOf(v)
+    val baseSchema = readSchemaOf(v)
       .getOrElse(deleteCol.foldLeft(delta)(_ drop _).schema)
     val baseCols = baseSchema.fieldNames.toSeq
     val deltaCols = delta.columns.toSeq.filterNot(deleteCol.contains)

@@ -30,7 +30,7 @@ class DefaultsNotNullSpec extends SparkTestBase {
 
   test("readers fill a later-added column from its EXISTS default, per file") {
     val (t, _) = freshTable()
-    t.commit(Seq((1L, "a"), (2L, "b")).toDF("id", "name")) // pre-evolution file
+    t.commit(Seq((1L, "a"), (2L, "b")).toDF("id", "name").coalesce(1)) // pre-evolution file
     t.addColumns(org.apache.spark.sql.types.StructType(Seq(org.apache.spark.sql.types.StructField("score",
       org.apache.spark.sql.types.LongType))))
     t.setColumnDefault(spark, "score", "42")
@@ -44,6 +44,14 @@ class DefaultsNotNullSpec extends SparkTestBase {
       3L -> Some(7L), 4L -> None),
       "pre-evolution files read the default; explicit values (and " +
         "explicit nulls) in post-default files are untouched")
+    // a copy-on-write merge rewrites the pre-evolution file: the row it
+    // carries must be written with the default, not with NULL
+    t.merge(spark, Seq((2L, "b", 7L)).toDF("id", "name", "score"), Seq("id"))
+    val merged = t.read(spark).orderBy("id")
+      .select("id", "score").as[(Long, Option[Long])].collect().toSeq
+    assert(merged === Seq(1L -> Some(42L), 2L -> Some(7L),
+      3L -> Some(7L), 4L -> None),
+      "the carried row of a merged pre-evolution file keeps its default")
   }
 
   test("defaults round-trip the manifest; drop restores null-fill; time travel") {

@@ -318,6 +318,18 @@ class PlanSpec extends SparkTestBase {
     val pc = cdc.queryExecution.executedPlan.toString
     assert(pc.contains("BatchScan") && pc.contains("GreaterThan(n_chars,7100)"),
       s"CDC delta read must be a DSv2 scan with the filter pushed:\n${pc.take(900)}")
+    // a renamed column: the mapped range reads the same connector scan,
+    // its filter pushed under the column's frozen physical name
+    t.renameColumn("n_chars", "chars")
+    val v2 = t.commit((1200L until 1400L).map(i => (i, s"src${i % 3}", i * 7))
+      .toDF("doc_id", "source", "chars"))
+    val mapped = t.readChanges(spark, v1, v2).filter(col("chars") > 9700)
+      .select("doc_id")
+    assert(mapped.count() === 14)
+    val pm = mapped.queryExecution.executedPlan.toString
+    assert(pm.contains("BatchScan") && pm.contains("GreaterThan(n_chars,9700)"),
+      s"a mapped CDC delta read must be a DSv2 scan with the filter pushed " +
+        s"under the physical name:\n${pm.take(900)}")
   }
 
   test("q_fuzzy_match: blocking plans an equi join, never a nested loop") {

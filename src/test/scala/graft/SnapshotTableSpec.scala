@@ -248,6 +248,25 @@ class SnapshotTableSpec extends SparkTestBase {
     assert(boot.filter(col("label") === "l6").count() === 1)
   }
 
+  test("an append keeps a nullable column nullable whatever the batch says") {
+    import spark.implicits._
+    val (t, _) = freshTable()
+    t.commit(df(0 until 5))
+    t.addColumns(org.apache.spark.sql.types.StructType(Seq(
+      org.apache.spark.sql.types.StructField("n", org.apache.spark.sql.types.LongType))))
+    // lit(1L) is NOT NULL: restating that over the files written before
+    // `n` existed would make their reads fail
+    val batch = df(5 until 8).withColumn("n", lit(1L))
+    assert(!batch.schema("n").nullable)
+    t.commit(batch)
+    assert(t.read(spark).schema("n").nullable,
+      "the head's nullable column must stay nullable after the append")
+    t.optimize(spark)
+    val rows = t.read(spark).orderBy("id").select("id", "n")
+      .as[(Long, Option[Long])].collect().toSeq
+    assert(rows === (0L until 5L).map(_ -> None) ++ (5L until 8L).map(_ -> Some(1L)))
+  }
+
   test("column-narrowing evolution: head uses the narrowed schema, history keeps the wide one") {
     // the other direction of evolution-by-commit: a later commit with
     // FEWER columns narrows the manifest schema; the wide pre-evolution
